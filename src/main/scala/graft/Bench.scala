@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     // optional args: restrict to these query names (dev profiling runs);
@@ -7,30 +6,7 @@ object Bench {
     val only = args.toSet
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the events NTZ→LTZ normalization (Tables.events) is only
-      // value-preserving under a UTC session timezone
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // single-file fixture tables would otherwise scan as one task each;
-      // split them like a cluster would see many splits
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      // r15 (measured, OPTIMIZATION_r15.md): back to Spark's DEFAULT
-      // (true). The r8 'false' followed the docs' production advice,
-      // but at fixture scale it coalesced nearly every post-shuffle
-      // stage to ONE task (advisory 64 MB ≫ any intermediate), running
-      // window/join/agg pipelines serially on a 32-core session —
-      // measured 203 s → 146 s full-bench A/B on identical plans. At
-      // cluster scale the two settings coincide for every large stage
-      // (partitions ≫ advisory; coalescing only touches small
-      // intermediates, where preserving parallelism is the default's
-      // point). Parameterized for A/B (driver sets nothing → true).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(cpus)
     // Warmup at the TARGET SF: execute every query once, untimed. This
     // (a) compiles every query's codegen classes and JITs the hot loops,
     // (b) primes the parquet footer caches at the actual data scale, and
@@ -47,55 +23,15 @@ object Bench {
     picked.foreach { case (_, fn) =>
       try fn(spark, sfDir).count() catch { case _: Throwable => () }
     }
-    // Dev-only noise control: SPARK_GRAFT_REPS=N runs each query N times
-    // and records the MEDIAN (the round-4/5 verdicts both chased
-    // single-run spikes that never reproduced). The driver sets no env
-    // → reps=1 → timing behavior and output format are unchanged.
-    val reps = sys.env.get("SPARK_GRAFT_REPS").map(_.toInt).getOrElse(1).max(1)
-    // Dev-only accumulation profiling (r10 verdict item 2: the driver's
-    // reps=1 full-session total ran ~1.5× the builder's clean readings
-    // for three rounds; name the mechanism): SPARK_GRAFT_PROFILE=1
-    // emits one stderr line per timed query with the session-cumulative
-    // counters whose DELTAS localize what accumulates — total GC time,
-    // codegen compilations, storage memory in use (localCheckpoint /
-    // persist blocks), and heap occupancy. Stderr only: the driver's
-    // stdout tail contract is untouched.
-    val profile = sys.env.contains("SPARK_GRAFT_PROFILE")
-    def gcMs: Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
-    def storageMb: Long =
-      spark.sparkContext.getExecutorMemoryStatus.values
-        .map { case (mx, rem) => mx - rem }.sum >> 20
-    def heapMb: Long = java.lang.management.ManagementFactory
-      .getMemoryMXBean.getHeapMemoryUsage.getUsed >> 20
-    def cgCount: Long = org.apache.spark.metrics.source
-      .CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val results = picked.toSeq.sortBy(_._1).map { case (name, fn) =>
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        // a failed query must be VISIBLE in the machine-readable output,
-        // not a silent ~0s entry: record a -1.0 sentinel time
-        val ok = try { fn(spark, sfDir).count(); true } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-          false
-        }
-        if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+      val t0 = System.nanoTime()
+      // a failed query must be VISIBLE in the machine-readable output,
+      // not a silent ~0s entry: record a -1.0 sentinel time
+      val ok = try { fn(spark, sfDir).count(); true } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
+        false
       }
-      val (gc0, cg0) = if (profile) (gcMs, cgCount) else (0L, 0L)
-      val ts = Seq.fill(reps)(once())
-      if (profile)
-        System.err.println(s"""{"prof":"$name","t":${ts.min},""" +
-          s""""gc_ms":${gcMs - gc0},"cg":${cgCount - cg0},""" +
-          s""""store_mb":$storageMb,"heap_mb":$heapMb}""")
-      // true median: average the two middle elements for even reps
-      // (upper-middle alone would record the max of a 2-rep run)
-      val sorted = ts.sorted
-      val med = if (reps % 2 == 1) sorted(reps / 2)
-        else (sorted(reps / 2 - 1) + sorted(reps / 2)) / 2.0
-      name -> (if (ts.exists(_ < 0)) -1.0 else med)
+      name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
     }
     // 3-decimal times keep the named line compact (ns noise is
     // meaningless anyway); Locale.ROOT so a weird default locale can't

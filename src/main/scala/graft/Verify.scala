@@ -29,31 +29,15 @@ object Verify {
     // the driver always passes exactly (sfDir, outDir) → full run
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Invariance-sweep hook (builder-run only — the driver never sets
-    // it, so the gated run keeps exactly the declared config below):
+    // Invariance-sweep hook (unset in the gated run, which keeps exactly
+    // the GraftSession config; the docs/SWEEPS.md sweeps set it):
     // SPARK_GRAFT_CONF="k=v;k=v" adds session confs, e.g. codegen OFF
     // (factoryMode=NO_CODEGEN), AQE OFF, or the RocksDB state-store
     // provider, to prove the oracle hashes don't depend on them.
     val extraConf = sys.env.get("SPARK_GRAFT_CONF").toSeq
       .flatMap(_.split(';').toSeq).map(_.trim).filter(_.contains('='))
       .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }
-    val base = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // single-file fixture tables would otherwise scan as one task each;
-      // split them like a cluster would see many splits
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      // r15: Spark's default (true), matching Bench — the r8 'false'
-      // serialized post-shuffle stages at fixture scale (see the Bench
-      // config note + OPTIMIZATION_r15.md; 203 s → 146 s full-bench A/B)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-    // sweep confs LAST so they win over the declared ones on collision
-    val spark = extraConf.foldLeft(base)(
-      (b, kv) => b.config(kv._1, kv._2)).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(cpus, extraConf)
     new java.io.File(outDir).mkdirs()
     def runOne(sess: SparkSession, name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =

@@ -624,9 +624,9 @@ object Relational {
     // scaladoc promised (the cents domain is ~|rows| here: 583 k
     // distinct values at sf0.1, so a single ORDER BY c window would be a
     // serial sort+scan of the whole frequency table).
-    // r16 (measured, OPTIMIZATION_r16.md): the chunk id is now a PURE
-    // FUNCTION of the value — equal-width cents ranges between the
-    // table's min/max, chunk count derived from defaultParallelism —
+    // r16: the chunk id is now a PURE FUNCTION of the value — equal-
+    // width cents ranges between the table's min/max, chunk count
+    // derived from defaultParallelism —
     // instead of spark_partition_id() over a repartitionByRange. That
     // (a) deletes the range exchange outright (ensureRequirements
     // inserts the one hash(chunk) exchange the per-chunk window needs;

@@ -105,13 +105,10 @@ object TrainingDataPipeline {
     import spark.implicits._
     val trainIds = TextOps.withSampleSplit(Tables.documents(spark, sfDir))
       .filter($"split" === "train").select($"doc_id")
-    // r15 (OPTIMIZATION_r15.md): the repetition gate is d18's
-    // dup-3gram fraction over PER-DOC counts — n₃ = |grams|, nd₃ =
-    // |distinct grams| are array facts of the row, so the drop list is
-    // one narrow shuffle-free projection (shared [[TextOps.Gram3Sql]]
-    // definition, same exact-rational r4 — value-identical to
-    // filtering d18's aggregate output, measured hash-equal) instead
-    // of d18's two explode→agg→join passes over the corpus.
+    // repetition DROP LIST = docs whose d18 dup-3gram fraction exceeds
+    // maxDupFrac: d18 itself ([[TextOps.repetition]] — per-doc explode →
+    // hash-agg of the 3-grams and of the top 2-gram, joined on doc_id),
+    // filtered, so the gate and d18 can never disagree.
     val dropRepetitive = TextOps.repetition(spark, sfDir)
       .filter($"dup_3gram_frac" > maxDupFrac)
       .select($"doc_id")

@@ -131,6 +131,10 @@ trait StreamJoinOps extends StreamRuntime {
       leftVal: String, right: DataFrame, rightKey: String,
       rightVal: String): Dataset[FkJoined] = {
     import left.sparkSession.implicits._
+    // transformWithState needs the StateStoreCoordinator even on batch
+    // inputs, and only the StreamingQueryManager registers it: touch it
+    // so a session whose first state-store user is a batch join works
+    left.sparkSession.streams
     // null keys can't join (Kafka Streams drops null-FK records — no
     // subscription is possible) and would fail FkEvent's primitive-Long
     // encoder: filter them out on both sides

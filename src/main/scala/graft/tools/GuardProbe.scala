@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only MEASURED guard-envelope probe (r11 verdict item 7): drives
@@ -55,15 +55,10 @@ object GuardProbe {
     outcomeOf(body.collect())
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // driver heap comes from sbt's forked-run JVM options (build.sbt)
-      // — setting spark.driver.memory here would be a no-op in local
-      // mode, the JVM is already up
-      .getOrCreate()
+    // driver heap comes from sbt's forked-run JVM options (build.sbt)
+    // — spark.driver.memory would be a no-op in local mode, the JVM is
+    // already up
+    val spark = graft.GraftSession("32")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val only = args.toSeq

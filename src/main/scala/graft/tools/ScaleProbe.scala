@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Dev-only 10× dup-heavy scaling probe (the SURVEY §7 evidence table):
@@ -16,15 +15,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val base = "/root/testdata/sf0.1"
     val dir = "/dev/shm/graft_sf10x"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession("32")
 
     new java.io.File(dir).mkdirs()
     def missing(name: String) =

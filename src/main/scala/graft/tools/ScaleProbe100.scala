@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only 100× scaling probe (VERDICT r8 item 4) — the slope check at
@@ -69,20 +69,12 @@ object ScaleProbe100 {
   def main(args: Array[String]): Unit = {
     val base = "/root/testdata/sf0.1"
     val dir = "/dev/shm/graft_sf100x"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+    val spark = graft.GraftSession("32", Seq(
       // shuffle/spill blocks on tmpfs, NOT the default /tmp: the 100×
       // runs spill tens of GiB and the root disk is the host's scarce
       // resource (v08's r13 probe death was /tmp "No space left on
       // device"); /dev/shm is RAM-backed and reclaimed on JVM exit
-      .config("spark.local.dir", s"$dir/spill")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.local.dir" -> s"$dir/spill"))
 
     new java.io.File(dir).mkdirs()
     def missing(name: String) =

@@ -304,42 +304,35 @@ object VectorExpressions {
     }
   }
 
-  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "graft_dot"    -> (es => DotProduct(es(0), es(1))),
-    "graft_cosine" -> (es => CosineSimilarity(es(0), es(1))),
-    "graft_norm"   -> (es => L2Norm(es.head)),
-    "graft_sorted_isect" -> (es => SortedIntersectSize(es(0), es(1))),
-    "graft_lsh_bands" -> (es => LshBandCodes(es.head)),
+  /** Every `graft_*` SQL function — name, expression class (for the
+    * injected `ExpressionInfo`), builder — read by both registration
+    * paths: [[register]] and [[GraftExtensions]]. */
+  private[graft] val builders
+      : Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = Seq(
+    ("graft_dot", classOf[DotProduct], es => DotProduct(es(0), es(1))),
+    ("graft_cosine", classOf[CosineSimilarity],
+      es => CosineSimilarity(es(0), es(1))),
+    ("graft_norm", classOf[L2Norm], es => L2Norm(es.head)),
+    ("graft_sorted_isect", classOf[SortedIntersectSize],
+      es => SortedIntersectSize(es(0), es(1))),
+    ("graft_lsh_bands", classOf[LshBandCodes], es => LshBandCodes(es.head)),
   )
 
   /** Imperative registration for an existing session (tests, Verify). */
   def register(spark: SparkSession): Unit =
-    builders.foreach { case (name, b) =>
+    builders.foreach { case (name, _, b) =>
       spark.sessionState.functionRegistry
         .createOrReplaceTempFunction(name, b, "built-in")
     }
 }
 
-/** `SparkSession.builder().withExtensions(new GraftExtensions)` — the
+/** `withExtensions(new GraftExtensions)` on a session builder — the
   * library-style injection point, equivalent to
   * `spark.sql.extensions=org.apache.spark.sql.graft.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  import VectorExpressions._
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((new FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      es => DotProduct(es(0), es(1))))
-    ext.injectFunction((new FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      es => CosineSimilarity(es(0), es(1))))
-    ext.injectFunction((new FunctionIdentifier("graft_norm"),
-      new ExpressionInfo(classOf[L2Norm].getName, "graft_norm"),
-      es => L2Norm(es.head)))
-    ext.injectFunction((new FunctionIdentifier("graft_sorted_isect"),
-      new ExpressionInfo(classOf[SortedIntersectSize].getName, "graft_sorted_isect"),
-      es => SortedIntersectSize(es(0), es(1))))
-    ext.injectFunction((new FunctionIdentifier("graft_lsh_bands"),
-      new ExpressionInfo(classOf[LshBandCodes].getName, "graft_lsh_bands"),
-      es => LshBandCodes(es.head)))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    VectorExpressions.builders.foreach { case (name, cls, b) =>
+      ext.injectFunction((new FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), b))
+    }
 }

@@ -4,23 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static conf, read from the SparkContext at session creation —
-      // the spark-submit-style injection path under test in
-      // ExtensionsInjectionSpec (a second same-JVM session could never
-      // exercise it, since the context conf is fixed at startup)
-      .config("spark.sql.extensions",
-        "org.apache.spark.sql.graft.GraftExtensions")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // spark.sql.extensions is a static conf, read from the SparkContext at
+  // session creation — the spark-submit-style injection path under test
+  // in ExtensionsInjectionSpec (a second same-JVM session could never
+  // exercise it, since the context conf is fixed at startup)
+  lazy val spark: SparkSession = GraftSession("4", Seq(
+    "spark.sql.extensions" -> "org.apache.spark.sql.graft.GraftExtensions"))
   val sf = "/root/testdata/sf0.001"
 }
 
@@ -3003,12 +2992,14 @@ class ExtensionsInjectionSpec extends org.scalatest.funsuite.AnyFunSuite {
       """SELECT graft_cosine(array(1D, 0D), array(1D, 0D)) AS c,
         |graft_dot(array(2D, 3D), array(4D, 5D)) AS d,
         |graft_sorted_isect(array(1L, 2L, 3L), array(2L, 3L, 9L)) AS i,
-        |size(graft_lsh_bands(array_repeat(1D, 64))) AS nb
+        |size(graft_lsh_bands(array_repeat(1D, 64))) AS nb,
+        |graft_norm(array(3D, 4D)) AS n
         |""".stripMargin).collect()(0)
     assert(math.abs(row.getDouble(0) - 1.0) < 1e-9)
     assert(math.abs(row.getDouble(1) - 23.0) < 1e-9)
     assert(row.getInt(2) == 2)
     assert(row.getInt(3) == 8)
+    assert(math.abs(row.getDouble(4) - 5.0) < 1e-9)
   }
 }
 

@@ -60,7 +60,7 @@ def run_sweep(name, sf, env_extra, queries):
     # drop the managed hooks from the inherited env first: a stale
     # SPARK_GRAFT_CONF/TZ export from a prior manual sweep would
     # silently contaminate the baseline rows this tool exists to pin
-    for k in ("SPARK_GRAFT_CONF", "TZ", "SPARK_GRAFT_REPS",
+    for k in ("SPARK_GRAFT_CONF", "TZ",
               "SPARK_GRAFT_PAR", "SPARK_GRAFT_CPUS"):
         env.pop(k, None)
     env.update(env_extra)
