@@ -212,9 +212,6 @@ object Multimodal {
       .orderBy($"d1", $"d2")
   }
 
-  private val mediaStreamDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, String)]
-
   /** m08: STREAMING media ingest dedup at the FRAME level — the s24
     * incremental pattern on the m07 contract: the already-ingested
     * media corpus (even doc_ids) exists only as per-frame-fingerprint
@@ -232,8 +229,7 @@ object Multimodal {
   def streamMediaDedup(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import graft.streaming.{BandEvent, BandMatch, NearDupProcessor, StreamOps}
-    val dirStr = StreamOps.orderedBatchDir(mediaStreamDirs, sfDir,
-        "documents.parquet", "graft_media_stream") {
+    val dirStr = StreamOps.orderedBatchDir("m08", sfDir, "documents.parquet") {
       val fr = frameSample(spark, sfDir)
         .select($"frame_md5".as("bucket"), $"doc_id").distinct()
       def side(parity: Int, tag: String) = fr
@@ -241,12 +237,8 @@ object Multimodal {
         .select($"bucket", lit(tag).as("side"), $"doc_id")
       Seq(side(0, "O"), side(1, "N"))
     }
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+    val stream = StreamOps.changelogStream(spark, dirStr,
       "bucket STRING, side STRING, doc_id BIGINT")
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "changelog_*.parquet")
-      .parquet(dirStr)
       .as[BandEvent]
       .groupByKey(_.bucket)
       .transformWithState(new NearDupProcessor,
@@ -254,10 +246,8 @@ object Multimodal {
         org.apache.spark.sql.streaming.OutputMode.Update(),
         org.apache.spark.sql.Encoders.product[BandMatch])
       .toDF()
-    StreamOps.withRocksDb(spark) {
-      StreamOps.runToMemory(stream, "graft_m08", "update", Some(8),
-        noDataBatch = false)
-    }
+    StreamOps.runToMemory(stream, "graft_m08", "update", Some(8),
+      noDataBatch = false, conf = StreamOps.RocksDb)
       .groupBy($"new_doc")
       .agg(min($"dup_of").as("dup_of"),
         count(lit(1)).as("n_shared_frames"))

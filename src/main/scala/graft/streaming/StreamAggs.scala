@@ -95,9 +95,6 @@ trait StreamAggOps extends StreamRuntime {
       "graft_s01", "complete")
       .orderBy(col("w_start"), col("event_type"))
 
-  private val sinkDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, String)]
-
   /** s33: the SINK half of the `to(topic)` contract under the oracle
     * gate — the s01 tumbling aggregation written through a REAL
     * `writeStream.format("parquet")` file sink in append mode (final
@@ -115,7 +112,7 @@ trait StreamAggOps extends StreamRuntime {
     * scratch dir. */
   def streamSinkRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.functions.Det.dsum
-    val dirStr = cachedScratchDir(sinkDirs, sfDir, "events.parquet") {
+    val dirStr = cachedScratchDir("s33", sfDir, "events.parquet") {
         val out = newTempDir("graft_s33_sink")
         val ev = eventsStreamWithFlush(spark, sfDir)
           .withWatermark("ts", "10 minutes")
@@ -125,22 +122,10 @@ trait StreamAggOps extends StreamRuntime {
           .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
           .select(col("w.start").as("w_start"), col("event_type"),
             col("n"), col("sum_value"))
-        val key = "spark.sql.shuffle.partitions"
-        val prev = spark.conf.get(key)
-        spark.conf.set(key, "8")
-        try {
-          withRocksDb(spark) {
-            agg.writeStream
-              .format("parquet")
-              .option("path", out.toString)
-              .option("checkpointLocation",
-                newTempDir("graft_ckpt_s33").toString)
-              .outputMode("append")
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-              .awaitTermination()
-          }
-        } finally spark.conf.set(key, prev)
+        runAvailableNow(agg, "graft_s33",
+            (ShufflePartitions -> "8") +: RocksDb)(
+          _.format("parquet").option("path", out.toString)
+            .outputMode("append"))
         out.toString
     }
     spark.read.parquet(dirStr)
@@ -251,9 +236,7 @@ trait StreamAggOps extends StreamRuntime {
         OutputMode.Update(),
         org.apache.spark.sql.Encoders.product[SessOut])
       .toDF()
-    withRocksDb(spark) {
-      runToMemory(stream, "graft_s32", "update", Some(8))
-    }
+    runToMemory(stream, "graft_s32", "update", Some(8), conf = RocksDb)
       .select($"user_id",
         timestamp_micros($"start_us").as("s_start"),
         timestamp_micros($"end_us" + gapUs).as("s_end"),
@@ -261,11 +244,6 @@ trait StreamAggOps extends StreamRuntime {
         round($"sum4" / 10000.0, 2).as("sum_value"))
       .orderBy($"user_id", $"s_start")
   }
-
-  private val topNDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, String)]
-  private val boundedTriggerDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, String)]
 
   /** Streaming grouped top-N (the per-key leaderboard, see
     * [[TopNProcessor]]): events arrive in three mtime-ordered
@@ -278,18 +256,13 @@ trait StreamAggOps extends StreamRuntime {
     * produces different rows. */
   def streamTopN(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dirStr = orderedBatchDir(topNDirs, sfDir, "events.parquet",
-        "graft_topn") {
+    val dirStr = orderedBatchDir("s18", sfDir, "events.parquet") {
       val ev = graft.Tables.events(spark, sfDir)
         .select(col("event_type"), col("event_id"), col("value"))
       (0 until 3).map(i => ev.filter(col("event_id") % 3 === i))
     }
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+    val stream = changelogStream(spark, dirStr,
       "event_type STRING, event_id BIGINT, value DOUBLE")
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "changelog_*.parquet")
-      .parquet(dirStr)
       .as[TopNEvent]
       .groupByKey(_.event_type)
       .transformWithState(new TopNProcessor(5),
@@ -297,10 +270,8 @@ trait StreamAggOps extends StreamRuntime {
         OutputMode.Update(),
         org.apache.spark.sql.Encoders.product[TopNRow])
       .toDF()
-    val all = withRocksDb(spark) {
-      runToMemory(stream, "graft_s18", "update", Some(8),
-        noDataBatch = false)
-    }
+    val all = runToMemory(stream, "graft_s18", "update", Some(8),
+      noDataBatch = false, conf = RocksDb)
     // compact the emitted changelog to each key's latest version (the
     // result table is ≤ keys × N × batches rows — trivially small)
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("event_type"))
@@ -571,8 +542,7 @@ trait StreamAggOps extends StreamRuntime {
     * limit / backpressure control does to a Kafka consumer) may never
     * change the answer, only the emission schedule. */
   def streamBoundedTrigger(spark: SparkSession, sfDir: String): DataFrame = {
-    val dirStr = orderedBatchDir(boundedTriggerDirs, sfDir, "events.parquet",
-        "graft_bounded") {
+    val dirStr = orderedBatchDir("s23", sfDir, "events.parquet") {
       val ev = graft.Tables.events(spark, sfDir)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"), col("props"))
@@ -584,13 +554,9 @@ trait StreamAggOps extends StreamRuntime {
       Seq(ev.filter(day <= 10), ev.filter(day > 10 && day <= 20),
         ev.filter(day > 20), flush)
     }
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+    val stream = changelogStream(spark, dirStr,
       "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, " +
         "value DOUBLE, props STRING")
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "changelog_*.parquet")
-      .parquet(dirStr)
     runToMemory(
       stream.withWatermark("ts", "10 minutes")
         .filter(col("ts") < flushBound)
@@ -602,9 +568,6 @@ trait StreamAggOps extends StreamRuntime {
       "graft_s23", "append")
       .orderBy(col("w_start"))
   }
-
-  private val lateDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, String)]
 
   /** s38: GRACE / LATE-DATA semantics under the oracle gate — the last
     * §2 row that had been spec-only "by nature": it isn't, once the
@@ -634,19 +597,14 @@ trait StreamAggOps extends StreamRuntime {
     * pass over events. */
   def streamLateData(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dirStr = orderedBatchDir(lateDirs, sfDir, "events.parquet",
-        "graft_late") {
+    val dirStr = orderedBatchDir("s38", sfDir, "events.parquet") {
       val ev = graft.Tables.events(spark, sfDir)
         .select($"ts", $"event_type", $"event_id")
       (0 until 3).map(i => ev.filter($"event_id" % 3 === i)
         .select($"ts", $"event_type"))
     }
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+    val stream = changelogStream(spark, dirStr,
       "ts TIMESTAMP, event_type STRING")
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "changelog_*.parquet")
-      .parquet(dirStr)
       .withWatermark("ts", "2 days")
       .groupBy(window($"ts", "1 day").as("w"), $"event_type")
       .agg(count(lit(1)).as("n"))
@@ -726,30 +684,20 @@ trait StreamAggOps extends StreamRuntime {
     val counts = new java.util.concurrent.ConcurrentHashMap[String, Long]()
     val sums =
       new java.util.concurrent.ConcurrentHashMap[String, java.math.BigDecimal]()
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "2")
-    try {
-      eventsStream(spark, sfDir)
-        .select($"event_type", $"value")
-        .writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.groupBy($"event_type")
-            .agg(count(lit(1)).as("n"),
-              sum($"value".cast("decimal(18,4)")).as("s"))
-            .collect().foreach { r =>
-              val t = r.getString(0)
-              counts.merge(t, r.getLong(1), (a, b) => a + b)
-              sums.merge(t, r.getDecimal(2), (a, b) => a.add(b))
-            }
-          ()
-        }
-        .option("checkpointLocation",
-          newTempDir("graft_ckpt_s35").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
-    } finally spark.conf.set(key, prev)
+    runAvailableNow(eventsStream(spark, sfDir).select($"event_type", $"value"),
+        "graft_s35", Seq(ShufflePartitions -> "2")) {
+      _.foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.groupBy($"event_type")
+          .agg(count(lit(1)).as("n"),
+            sum($"value".cast("decimal(18,4)")).as("s"))
+          .collect().foreach { r =>
+            val t = r.getString(0)
+            counts.merge(t, r.getLong(1), (a, b) => a + b)
+            sums.merge(t, r.getDecimal(2), (a, b) => a.add(b))
+          }
+        ()
+      }
+    }
     import scala.jdk.CollectionConverters._
     counts.asScala.toSeq.map { case (t, n) =>
       // the Det.dsum contract, replicated driver-side: exact decimal

@@ -12,9 +12,6 @@ import org.apache.spark.sql.streaming.OutputMode
   * never rescans the ingested corpus. */
 trait StreamIngestOps extends StreamRuntime {
 
-  private val nearDupDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, String)]
-
   /** s24: INCREMENTAL near-dup ingest — the streaming face of the d06
     * MinHash/LSH pipeline, driven as two mtime-ordered micro-batches:
     *   batch 0 — the "existing corpus" (even doc_ids): every corpus
@@ -36,8 +33,7 @@ trait StreamIngestOps extends StreamRuntime {
     * occupied bucket), and each incoming doc costs 4 point lookups. */
   def streamNearDup(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dirStr = orderedBatchDir(nearDupDirs, sfDir, "documents.parquet",
-        "graft_neardup") {
+    val dirStr = orderedBatchDir("s24", sfDir, "documents.parquet") {
       val bands = graft.operators.TextOps.lshBands(spark, sfDir)
         .select(concat_ws(":", col("band"), col("bh")).as("bucket"),
           col("doc_id"))
@@ -48,12 +44,8 @@ trait StreamIngestOps extends StreamRuntime {
         bands.filter(col("doc_id") % 2 === 1)
           .select(col("bucket"), side("N"), col("doc_id")))
     }
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+    val stream = changelogStream(spark, dirStr,
       "bucket STRING, side STRING, doc_id BIGINT")
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "changelog_*.parquet")
-      .parquet(dirStr)
       .as[BandEvent]
       .groupByKey(_.bucket)
       .transformWithState(new NearDupProcessor,
@@ -61,18 +53,13 @@ trait StreamIngestOps extends StreamRuntime {
         OutputMode.Update(),
         org.apache.spark.sql.Encoders.product[BandMatch])
       .toDF()
-    withRocksDb(spark) {
-      runToMemory(stream, "graft_s24", "update", Some(8),
-        noDataBatch = false)
-    }
+    runToMemory(stream, "graft_s24", "update", Some(8),
+      noDataBatch = false, conf = RocksDb)
       .groupBy(col("new_doc"))
       .agg(min(col("dup_of")).as("dup_of"),
         count(lit(1)).as("matched_bands"))
       .orderBy(col("new_doc"))
   }
-
-  private val embNearDupDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, String)]
 
   /** s47: INCREMENTAL EMBEDDING near-dup ingest — the streaming face of
     * v08's sign-LSH (r10 verdict item 3: the one streaming seam left
@@ -104,8 +91,7 @@ trait StreamIngestOps extends StreamRuntime {
     * nested-loops. */
   def streamEmbedNearDup(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dirStr = orderedBatchDir(embNearDupDirs, sfDir, "embeddings.parquet",
-        "graft_embneardup") {
+    val dirStr = orderedBatchDir("s47", sfDir, "embeddings.parquet") {
       val bands = graft.operators.VectorOps.bandCodes(spark, sfDir)
         .select(concat_ws(":", col("band"), col("code")).as("bucket"),
           col("vec_id"))
@@ -116,12 +102,8 @@ trait StreamIngestOps extends StreamRuntime {
         bands.filter(col("vec_id") % 2 === 1)
           .select(col("bucket"), side("N"), col("vec_id").as("doc_id")))
     }
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+    val stream = changelogStream(spark, dirStr,
       "bucket STRING, side STRING, doc_id BIGINT")
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "changelog_*.parquet")
-      .parquet(dirStr)
       .as[BandEvent]
       .groupByKey(_.bucket)
       .transformWithState(new NearDupProcessor,
@@ -129,10 +111,8 @@ trait StreamIngestOps extends StreamRuntime {
         OutputMode.Update(),
         org.apache.spark.sql.Encoders.product[BandMatch])
       .toDF()
-    val cand = withRocksDb(spark) {
-      runToMemory(stream, "graft_s47", "update", Some(8),
-        noDataBatch = false)
-    }
+    val cand = runToMemory(stream, "graft_s47", "update", Some(8),
+      noDataBatch = false, conf = RocksDb)
       .select(col("dup_of").as("d1"), col("new_doc").as("d2"))
       .distinct()
     // exact-cosine verify — batch enrichment over the streamed
@@ -147,13 +127,10 @@ trait StreamIngestOps extends StreamRuntime {
       .orderBy($"d1", $"d2")
   }
 
-  private val serveDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, String)]
-
   /** The s48 serving checkpoint for `sfDir`, if built this session —
     * exposed so StateBoundSpec can read the index store out-of-band. */
   private[graft] def serveCheckpoint(sfDir: String): Option[String] =
-    serveDirs.get(sfDir).map(_._2)
+    cachedDir("s48", sfDir)
 
   /** s48: the STREAMING SERVING capstone — v30's ingest face (r10
     * verdict item 7). The production retrieval loop is ingest → index
@@ -233,17 +210,11 @@ trait StreamIngestOps extends StreamRuntime {
     val DivProbe = graft.operators.VectorOps.DivProbe
     val ServeTau = graft.operators.VectorOps.ServeTau
     val e = graft.operators.VectorOps.embDouble(spark, sfDir)
-    val buffers = withRocksDb(spark) {
-      spark.read.format("statestore")
-        .option("path", ckStr)
-        .option("stateVarName", "topn")
-        .option("batchId", lastCommittedBatchId(ckStr).toString)
-        .load()
-        .select($"key.value".cast("int").as("cell"),
-          $"value.ids".as("ids"), $"value.vals".as("vals"))
-        .select($"cell", posexplode(arrays_zip($"ids", $"vals")))
-        .select($"cell", $"col.ids".as("vec_id"), $"col.vals".as("cos"))
-    }
+    val buffers = readState(spark, ckStr, "topn")
+      .select($"key.value".cast("int").as("cell"),
+        $"value.ids".as("ids"), $"value.vals".as("vals"))
+      .select($"cell", posexplode(arrays_zip($"ids", $"vals")))
+      .select($"cell", $"col.ids".as("vec_id"), $"col.vals".as("cos"))
     val probes = graft.operators.VectorOps.probeCells(spark, sfDir,
         DivProbe, graft.operators.VectorOps.queryVecDf(spark, sfDir))
       .select($"probe_cell")
@@ -268,48 +239,30 @@ trait StreamIngestOps extends StreamRuntime {
     import spark.implicits._
     val DivCap = graft.operators.VectorOps.DivCap
     val e = graft.operators.VectorOps.embDouble(spark, sfDir)
-    val ckStr = cachedScratchDir(serveDirs, sfDir, "embeddings.parquet") {
+    val ckStr = cachedScratchDir("s48", sfDir, "embeddings.parquet") {
       val in = newTempDir("graft_s48_in")
-      val ck = newTempDir("graft_ckpt_s48")
       val src = e.select($"vec_id", $"v")
       def half(i: Int) = src.filter(pmod($"vec_id", lit(2L)) === i)
       (0 to 1).foreach(i => writeChangelogFile(half(i), in, i))
-      withShufflePartitions(spark, 8) {
-        withRocksDb(spark) {
-          serveIngestProjection(spark, sfDir, spark.readStream
-              .schema(org.apache.spark.sql.types.StructType.fromDDL(
-                "vec_id BIGINT, v ARRAY<DOUBLE>"))
-              .option("maxFilesPerTrigger", "1")
-              .option("pathGlobFilter", "changelog_*.parquet")
-              .parquet(in.toString))
-            .select($"cell".as("event_type"), $"vec_id".as("event_id"),
-              $"value")
-            .as[TopNEvent]
-            .groupByKey(_.event_type)
-            .transformWithState(new TopNProcessor(DivCap),
-              org.apache.spark.sql.streaming.TimeMode.None(),
-              OutputMode.Update(),
-              org.apache.spark.sql.Encoders.product[TopNRow])
-            .toDF()
-            .writeStream.format("noop").outputMode("update")
-            .option("checkpointLocation", ck.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start().awaitTermination()
-        }
-      }
-      ck.toString
+      foldIntoStore(serveIngestProjection(spark, sfDir,
+          changelogStream(spark, in.toString, "vec_id BIGINT, v ARRAY<DOUBLE>"))
+        .select($"cell".as("event_type"), $"vec_id".as("event_id"), $"value")
+        .as[TopNEvent]
+        .groupByKey(_.event_type)
+        .transformWithState(new TopNProcessor(DivCap),
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          OutputMode.Update(),
+          org.apache.spark.sql.Encoders.product[TopNRow])
+        .toDF(), "graft_s48")
     }
     serveTopKFromStore(spark, sfDir, ckStr)
   }
-
-  private val tombDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, String)]
 
   /** The s50 serving checkpoint for `sfDir`, if built this session —
     * exposed so StateBoundSpec can read the index + tombstone stores
     * out-of-band. */
   private[graft] def tombCheckpoint(sfDir: String): Option[String] =
-    tombDirs.get(sfDir).map(_._2)
+    cachedDir("s50", sfDir)
 
   /** s50: INDEX DELETION / TOMBSTONE MAINTENANCE — the one production
     * seam s48's insert-only serving index leaves open (r11 verdict
@@ -353,9 +306,8 @@ trait StreamIngestOps extends StreamRuntime {
     import spark.implicits._
     val DivCap = graft.operators.VectorOps.DivCap
     val TombK = graft.operators.VectorOps.TombK
-    val ckStr = cachedScratchDir(tombDirs, sfDir, "embeddings.parquet") {
+    val ckStr = cachedScratchDir("s50", sfDir, "embeddings.parquet") {
       val in = newTempDir("graft_s50_in")
-      val ck = newTempDir("graft_ckpt_s50")
       // the erasure list: the full pipeline's top-TombK served ids
       // (bounded collect — 5 rows), with their assigned cells
       val served = graft.operators.VectorOps.retrievalPipeline(spark, sfDir)
@@ -388,41 +340,26 @@ trait StreamIngestOps extends StreamRuntime {
         src.join(scoredBatch.filter($"cell".isin(tombCells: _*))
           .select($"vec_id"), "vec_id")
           .withColumn("side", lit("I")), in, 2)
-      withShufflePartitions(spark, 8) {
-        withRocksDb(spark) {
-          serveIngestProjection(spark, sfDir, spark.readStream
-              .schema(org.apache.spark.sql.types.StructType.fromDDL(
-                "vec_id BIGINT, v ARRAY<DOUBLE>, side STRING"))
-              .option("maxFilesPerTrigger", "1")
-              .option("pathGlobFilter", "changelog_*.parquet")
-              .parquet(in.toString))
-            .select($"cell", $"side", $"vec_id", $"value")
-            .as[TombEvent]
-            .groupByKey(_.cell)
-            .transformWithState(new TombstoneIndexProcessor(DivCap),
-              org.apache.spark.sql.streaming.TimeMode.None(),
-              OutputMode.Update(),
-              org.apache.spark.sql.Encoders.product[TopNRow])
-            .toDF()
-            .writeStream.format("noop").outputMode("update")
-            .option("checkpointLocation", ck.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start().awaitTermination()
-        }
-      }
-      ck.toString
+      foldIntoStore(serveIngestProjection(spark, sfDir,
+          changelogStream(spark, in.toString,
+            "vec_id BIGINT, v ARRAY<DOUBLE>, side STRING"))
+        .select($"cell", $"side", $"vec_id", $"value")
+        .as[TombEvent]
+        .groupByKey(_.cell)
+        .transformWithState(new TombstoneIndexProcessor(DivCap),
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          OutputMode.Update(),
+          org.apache.spark.sql.Encoders.product[TopNRow])
+        .toDF(), "graft_s50")
     }
     serveTopKFromStore(spark, sfDir, ckStr)
   }
-
-  private val cmsDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, String)]
 
   /** The s49 CMS checkpoint for `sfDir`, if built this session —
     * exposed so StateBoundSpec can read the sketch store
     * out-of-band. */
   private[graft] def cmsCheckpoint(sfDir: String): Option[String] =
-    cmsDirs.get(sfDir).map(_._2)
+    cachedDir("s49", sfDir)
 
   /** s49: STREAMING COUNT-MIN — x05's ingest face, completing the
     * sketch-family symmetry (x01 batch ↔ x03 merge ↔ this for
@@ -447,27 +384,22 @@ trait StreamIngestOps extends StreamRuntime {
     * path reads ≤ d·w rows and joins d rows per probed key. */
   def streamCountMin(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val ckStr = cachedScratchDir(cmsDirs, sfDir, "events.parquet") {
+    val ckStr = cachedScratchDir("s49", sfDir, "events.parquet") {
       val in = newTempDir("graft_s49_in")
-      val ck = newTempDir("graft_ckpt_s49")
       val ev = graft.Tables.events(spark, sfDir)
         .select($"user_id", $"event_id")
       def third(i: Int) = ev.filter(pmod($"event_id", lit(3L)) === i)
         .select($"user_id")
       (0 to 2).foreach(i => writeChangelogFile(third(i), in, i))
-      runBinFold(spark, in, ck, "user_id BIGINT") { raw =>
+      runBinFold(spark, in, "graft_s49", "user_id BIGINT") { raw =>
         raw.select(posexplode(array((0 until graft.operators.Extras.CmsD)
             .map(graft.operators.Extras.cmsBucket): _*)).as(Seq("r", "b")))
           .select($"r".cast("string").as("event_type"), $"b".as("bin"))
       }
-      ck.toString
     }
     val cells = readBinCells(spark, ckStr, "r", "b", "c")
     graft.operators.Extras.cmsProbe(spark, sfDir, cells)
   }
-
-  private val anomalyDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, String)]
 
   /** s30: streaming rolling z-score anomalies — the ingest face of e39
     * (the same pairing as d30/s26 and e36/s25): events arrive in two
@@ -483,8 +415,7 @@ trait StreamIngestOps extends StreamRuntime {
     * top-20 is a TakeOrdered over only the emitted scores. */
   def streamRollingAnomaly(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dirStr = orderedBatchDir(anomalyDirs, sfDir, "events.parquet",
-        "graft_anomaly") {
+    val dirStr = orderedBatchDir("s30", sfDir, "events.parquet") {
       val ev = graft.Tables.events(spark, sfDir)
         .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
           col("event_id"),
@@ -496,13 +427,9 @@ trait StreamIngestOps extends StreamRuntime {
         .toInstant(java.time.ZoneOffset.UTC).toEpochMilli * 1000L
       Seq(ev.filter(col("ts_us") < cutUs), ev.filter(col("ts_us") >= cutUs))
     }
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+    val stream = changelogStream(spark, dirStr,
       "user_id BIGINT, ts_us BIGINT, event_id BIGINT, cents BIGINT, " +
         "value DOUBLE")
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "changelog_*.parquet")
-      .parquet(dirStr)
       .as[AnomalyEvent]
       .groupByKey(_.user_id)
       .transformWithState(new RollingAnomalyProcessor,
@@ -510,10 +437,8 @@ trait StreamIngestOps extends StreamRuntime {
         OutputMode.Update(),
         org.apache.spark.sql.Encoders.product[AnomalyScore])
       .toDF()
-    withRocksDb(spark) {
-      runToMemory(stream, "graft_s30", "update", Some(8),
-        noDataBatch = false)
-    }
+    runToMemory(stream, "graft_s30", "update", Some(8),
+      noDataBatch = false, conf = RocksDb)
       .filter($"den" > 0)
       .select($"event_id", $"user_id",
         timestamp_micros($"ts_us").as("ts"),
@@ -527,9 +452,6 @@ trait StreamIngestOps extends StreamRuntime {
     * oracle SQL (the cut is part of the query's semantics, unlike s30's
     * batch boundary which only shapes delivery). */
   private[graft] val CusumCut = "2024-01-15 00:00:00"
-
-  private val cusumDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, String)]
 
   /** s31: streaming CUSUM mean-shift monitoring — the prospective
     * companion to the e41 batch scan: the first 14 days fix each user's
@@ -546,8 +468,7 @@ trait StreamIngestOps extends StreamRuntime {
     * only emitted points. */
   def streamCusum(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dirStr = orderedBatchDir(cusumDirs, sfDir, "events.parquet",
-        "graft_cusum") {
+    val dirStr = orderedBatchDir("s31", sfDir, "events.parquet") {
       val ev = graft.Tables.events(spark, sfDir)
         .select(col("user_id"), col("ts"),
           unix_micros(col("ts")).as("ts_us"), col("event_id"),
@@ -558,13 +479,9 @@ trait StreamIngestOps extends StreamRuntime {
           col("event_id"), col("cents"))
       Seq(side(col("ts") < cut, "B"), side(col("ts") >= cut, "M"))
     }
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+    val stream = changelogStream(spark, dirStr,
       "user_id BIGINT, side STRING, ts_us BIGINT, event_id BIGINT, " +
         "cents BIGINT")
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "changelog_*.parquet")
-      .parquet(dirStr)
       .as[CusumEvent]
       .groupByKey(_.user_id)
       .transformWithState(new CusumProcessor,
@@ -572,10 +489,8 @@ trait StreamIngestOps extends StreamRuntime {
         OutputMode.Update(),
         org.apache.spark.sql.Encoders.product[CusumPoint])
       .toDF()
-    val pts = withRocksDb(spark) {
-      runToMemory(stream, "graft_s31", "update", Some(8),
-        noDataBatch = false)
-    }
+    val pts = runToMemory(stream, "graft_s31", "update", Some(8),
+      noDataBatch = false, conf = RocksDb)
     val byUser = org.apache.spark.sql.expressions.Window
       .partitionBy($"user_id")
     pts
@@ -589,9 +504,6 @@ trait StreamIngestOps extends StreamRuntime {
         $"event_id".as("cp_event_id"))
       .orderBy($"user_id")
   }
-
-  private val funnelDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, String)]
 
   /** s36: streaming ordered-funnel tracking — the ingest face of e44:
     * events arrive in three time-partitioned micro-batches, each user's
@@ -609,8 +521,7 @@ trait StreamIngestOps extends StreamRuntime {
     * user per batch, not per event. */
   def streamFunnel(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dirStr = orderedBatchDir(funnelDirs, sfDir, "events.parquet",
-        "graft_funnel") {
+    val dirStr = orderedBatchDir("s36", sfDir, "events.parquet") {
       val ev = graft.Tables.events(spark, sfDir)
         .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
           col("event_id"), col("event_type"))
@@ -623,12 +534,8 @@ trait StreamIngestOps extends StreamRuntime {
         ev.filter(col("ts_us") >= cutUs(11) && col("ts_us") < cutUs(21)),
         ev.filter(col("ts_us") >= cutUs(21)))
     }
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+    val stream = changelogStream(spark, dirStr,
       "user_id BIGINT, ts_us BIGINT, event_id BIGINT, event_type STRING")
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "changelog_*.parquet")
-      .parquet(dirStr)
       .as[FunnelEvent]
       .groupByKey(_.user_id)
       .transformWithState(new FunnelProcessor,
@@ -636,16 +543,11 @@ trait StreamIngestOps extends StreamRuntime {
         OutputMode.Update(),
         org.apache.spark.sql.Encoders.product[FunnelDepth])
       .toDF()
-    val depths = withRocksDb(spark) {
-      runToMemory(stream, "graft_s36", "update", Some(8),
-        noDataBatch = false)
-    }
+    val depths = runToMemory(stream, "graft_s36", "update", Some(8),
+      noDataBatch = false, conf = RocksDb)
     graft.operators.Events.funnelReduce(
       depths.groupBy($"user_id").agg(max($"stage").as("stage")))
   }
-
-  private val attribDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, String)]
 
   /** s37: streaming last-touch attribution — the ingest face of e47,
     * and the KStream⋈KTable join under continuous ingest: the click
@@ -665,8 +567,7 @@ trait StreamIngestOps extends StreamRuntime {
     * expression. */
   def streamAttribution(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dirStr = orderedBatchDir(attribDirs, sfDir, "events.parquet",
-        "graft_attrib") {
+    val dirStr = orderedBatchDir("s37", sfDir, "events.parquet") {
       val ev = graft.Tables.events(spark, sfDir)
         .withColumn("kb",
           expr("try_cast(get_json_object(props, '$.k') AS BIGINT) % 4"))
@@ -685,13 +586,9 @@ trait StreamIngestOps extends StreamRuntime {
         ev.filter(col("ts_us") >= cutUs(11) && col("ts_us") < cutUs(21)),
         ev.filter(col("ts_us") >= cutUs(21)))
     }
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+    val stream = changelogStream(spark, dirStr,
       "user_id BIGINT, ts_us BIGINT, event_id BIGINT, event_type STRING, " +
         "channel STRING, value DOUBLE")
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "changelog_*.parquet")
-      .parquet(dirStr)
       .as[AttribEvent]
       .groupByKey(_.user_id)
       .transformWithState(new AttributionProcessor,
@@ -699,17 +596,12 @@ trait StreamIngestOps extends StreamRuntime {
         OutputMode.Update(),
         org.apache.spark.sql.Encoders.product[AttribHit])
       .toDF()
-    val hits = withRocksDb(spark) {
-      runToMemory(stream, "graft_s37", "update", Some(8),
-        noDataBatch = false)
-    }
+    val hits = runToMemory(stream, "graft_s37", "update", Some(8),
+      noDataBatch = false, conf = RocksDb)
     graft.operators.Events.attributionReduce(
       hits.select($"channel",
         when($"lag_s" >= 0, $"lag_s").as("lag_s"), $"value"))
   }
-
-  private val cdcDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, String)]
 
   /** s39: streaming CDC snapshot ingest — the d49 diff's streaming
     * face (the e47/s37 pairing): the old snapshot loads per-key hashes
@@ -727,19 +619,14 @@ trait StreamIngestOps extends StreamRuntime {
     * ingest shape of s24/s26. */
   def streamCdcDiff(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dirStr = orderedBatchDir(cdcDirs, sfDir, "documents.parquet",
-        "graft_cdc") {
+    val dirStr = orderedBatchDir("s39", sfDir, "documents.parquet") {
       val (old, nw) = graft.operators.TextOps.snapshotSides(spark, sfDir)
       Seq(old.withColumn("side", lit("O")),
         nw.withColumn("side", lit("N")))
         .map(_.select(col("k"), col("side"), col("h"), col("chars")))
     }
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+    val stream = changelogStream(spark, dirStr,
       "k BIGINT, side STRING, h STRING, chars BIGINT")
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "changelog_*.parquet")
-      .parquet(dirStr)
       .as[SnapEvent]
       .groupByKey(_.k)
       .transformWithState(new CdcProcessor,
@@ -747,16 +634,11 @@ trait StreamIngestOps extends StreamRuntime {
         OutputMode.Update(),
         org.apache.spark.sql.Encoders.product[CdcEmit])
       .toDF()
-    val hits = withRocksDb(spark) {
-      runToMemory(stream, "graft_s39", "update", Some(8),
-        noDataBatch = false)
-    }
+    val hits = runToMemory(stream, "graft_s39", "update", Some(8),
+      noDataBatch = false, conf = RocksDb)
     graft.operators.TextOps.snapshotDiffReduce(
       hits.select($"k", $"status", $"new_chars", $"old_chars"))
   }
-
-  private val noveltyDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, String)]
 
   /** s26: INCREMENTAL novelty scoring — the streaming face of d30, and
     * s24's n-gram-level companion: the corpus batch (even doc_ids)
@@ -777,19 +659,14 @@ trait StreamIngestOps extends StreamRuntime {
   def streamNovelty(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val shingles = graft.operators.TextOps.distinctShingles(spark, sfDir)
-    val dirStr = orderedBatchDir(noveltyDirs, sfDir, "documents.parquet",
-        "graft_novelty") {
+    val dirStr = orderedBatchDir("s26", sfDir, "documents.parquet") {
       def side(parity: Int, tag: String) = shingles
         .filter(col("doc_id") % 2 === parity)
         .select(col("s").as("bucket"), lit(tag).as("side"), col("doc_id"))
       Seq(side(0, "O"), side(1, "N"))
     }
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+    val stream = changelogStream(spark, dirStr,
       "bucket STRING, side STRING, doc_id BIGINT")
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "changelog_*.parquet")
-      .parquet(dirStr)
       .as[BandEvent]
       .groupByKey(_.bucket)
       .transformWithState(new NearDupProcessor,
@@ -797,10 +674,8 @@ trait StreamIngestOps extends StreamRuntime {
         OutputMode.Update(),
         org.apache.spark.sql.Encoders.product[BandMatch])
       .toDF()
-    val seen = withRocksDb(spark) {
-      runToMemory(stream, "graft_s26", "update", Some(8),
-        noDataBatch = false)
-    }
+    val seen = runToMemory(stream, "graft_s26", "update", Some(8),
+      noDataBatch = false, conf = RocksDb)
       .groupBy(col("new_doc").as("doc_id"))
       .agg(count(lit(1)).as("n_seen"))
     shingles.filter(col("doc_id") % 2 === 1)
@@ -813,9 +688,6 @@ trait StreamIngestOps extends StreamRuntime {
           col("n_grams") - col("n_seen"), col("n_grams")).as("novelty"))
       .orderBy(col("doc_id"))
   }
-
-  private val indexDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, String)]
 
   /** s29: streaming inverted-index maintenance — the d37 batch build's
     * ingest face (the s24/s26 pattern applied to retrieval): documents
@@ -833,8 +705,7 @@ trait StreamIngestOps extends StreamRuntime {
     * ≤ touched-terms rows per batch). */
   def streamInvertedIndex(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dirStr = orderedBatchDir(indexDirs, sfDir, "documents.parquet",
-        "graft_index") {
+    val dirStr = orderedBatchDir("s29", sfDir, "documents.parquet") {
       val tf = graft.operators.TextOps.docsWithToks(spark, sfDir)
         .select(col("doc_id"), explode(col("toks")).as("term"))
         .groupBy(col("term"), col("doc_id"))
@@ -842,12 +713,8 @@ trait StreamIngestOps extends StreamRuntime {
       Seq(tf.filter(col("doc_id") % 2 === 0), tf.filter(col("doc_id") % 2 === 1))
         .map(_.select(col("term"), col("doc_id"), col("tf")))
     }
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+    val stream = changelogStream(spark, dirStr,
       "term STRING, doc_id BIGINT, tf BIGINT")
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "changelog_*.parquet")
-      .parquet(dirStr)
       .as[TermDocTf]
       .groupByKey(_.term)
       .transformWithState(new IndexStatsProcessor,
@@ -855,10 +722,8 @@ trait StreamIngestOps extends StreamRuntime {
         OutputMode.Update(),
         org.apache.spark.sql.Encoders.product[TermStats])
       .toDF()
-    val emitted = withRocksDb(spark) {
-      runToMemory(stream, "graft_s29", "update", Some(8),
-        noDataBatch = false)
-    }
+    val emitted = runToMemory(stream, "graft_s29", "update", Some(8),
+      noDataBatch = false, conf = RocksDb)
     // latest emission per term: df is monotone across batches
     emitted.groupBy(col("term"))
       .agg(max(struct(col("df"), col("tf_total"))).as("m"))
@@ -867,55 +732,35 @@ trait StreamIngestOps extends StreamRuntime {
       .orderBy(desc("df"), col("term")).limit(50)
   }
 
-  private val binMedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, String)]
-
   /** The shared s46/s49 MONOID-FOLD harness (the r11 review's
     * duplication finding): stream `schemaDdl`-shaped changelog rows
     * from `in`, `shape` them into BinDelta (key, bin) rows, fold into
-    * [[BinCountProcessor]] MapState under checkpoint `ck`, noop sink —
-    * the store is the product (s42's discipline). */
+    * [[BinCountProcessor]] MapState ([[foldIntoStore]]) — the store is
+    * the product (s42's discipline). Returns the checkpoint dir. */
   private def runBinFold(spark: SparkSession, in: java.nio.file.Path,
-      ck: java.nio.file.Path, schemaDdl: String)(
-      shape: DataFrame => DataFrame): Unit = {
+      name: String, schemaDdl: String)(
+      shape: DataFrame => DataFrame): String = {
     import spark.implicits._
-    withShufflePartitions(spark, 8) {
-      withRocksDb(spark) {
-        shape(spark.readStream
-            .schema(org.apache.spark.sql.types.StructType.fromDDL(schemaDdl))
-            .option("maxFilesPerTrigger", "1")
-            .option("pathGlobFilter", "changelog_*.parquet")
-            .parquet(in.toString))
-          .as[BinDelta]
-          .groupByKey(_.event_type)
-          .transformWithState(new BinCountProcessor,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            OutputMode.Update(),
-            org.apache.spark.sql.Encoders.product[BinDelta])
-          .toDF()
-          .writeStream.format("noop").outputMode("update")
-          .option("checkpointLocation", ck.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start().awaitTermination()
-      }
-    }
+    foldIntoStore(shape(changelogStream(spark, in.toString, schemaDdl))
+      .as[BinDelta]
+      .groupByKey(_.event_type)
+      .transformWithState(new BinCountProcessor,
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        OutputMode.Update(),
+        org.apache.spark.sql.Encoders.product[BinDelta])
+      .toDF(), name)
   }
 
   /** The matching serving read: BinCountProcessor's flattened MapState
     * (one row per (grouping key, map key)) at the last committed
     * batchId, with caller-chosen column names. */
   private def readBinCells(spark: SparkSession, ckStr: String,
-      key: String, mapKey: String, cnt: String): DataFrame =
-    withRocksDb(spark) {
-      import spark.implicits._
-      spark.read.format("statestore")
-        .option("path", ckStr)
-        .option("stateVarName", "bins")
-        .option("batchId", lastCommittedBatchId(ckStr).toString)
-        .load()
-        .select($"key.value".as(key), $"user_map_key.value".as(mapKey),
-          $"user_map_value.value".as(cnt))
-    }
+      key: String, mapKey: String, cnt: String): DataFrame = {
+    import spark.implicits._
+    readState(spark, ckStr, "bins")
+      .select($"key.value".as(key), $"user_map_key.value".as(mapKey),
+        $"user_map_value.value".as(cnt))
+  }
 
   /** s46: STREAMING APPROX MEDIAN — e54's "bin counts are mergeable
     * monoid state" claim made real. Three %3-interleaved micro-batches
@@ -936,9 +781,8 @@ trait StreamIngestOps extends StreamRuntime {
   def streamBinnedMedian(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val B = graft.operators.Events.MadBinCents
-    val ckStr = cachedScratchDir(binMedDirs, sfDir, "events.parquet") {
+    val ckStr = cachedScratchDir("s46", sfDir, "events.parquet") {
       val in = newTempDir("graft_s46_in")
-      val ck = newTempDir("graft_ckpt_s46")
       val ev = graft.Tables.events(spark, sfDir)
         .select($"event_type", $"event_id",
           graft.functions.Det.fdiv(
@@ -947,8 +791,8 @@ trait StreamIngestOps extends StreamRuntime {
       def third(i: Int) = ev.filter(pmod($"event_id", lit(3L)) === i)
         .select($"event_type", $"bin")
       (0 to 2).foreach(i => writeChangelogFile(third(i), in, i))
-      runBinFold(spark, in, ck, "event_type STRING, bin BIGINT")(identity)
-      ck.toString
+      runBinFold(spark, in, "graft_s46", "event_type STRING, bin BIGINT")(
+        identity)
     }
     // the serving read: bins out of the store (the flattened MapState
     // layout — one row per (grouping key, map key)), e54's read-off on
@@ -972,14 +816,11 @@ trait StreamIngestOps extends StreamRuntime {
       .orderBy($"event_type")
   }
 
-  private val shardDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, String)]
-
   /** The s51 shard-manifest checkpoint for `sfDir`, if built this
     * session — exposed so StateBoundSpec can read the cell store
     * out-of-band. */
   private[graft] def shardCheckpoint(sfDir: String): Option[String] =
-    shardDirs.get(sfDir).map(_._2)
+    cachedDir("s51", sfDir)
 
   /** s51: STREAMING SHARD-MANIFEST ingest — d57's training-output
     * manifest as a running fold, the shape a continuous-crawl writer
@@ -997,9 +838,8 @@ trait StreamIngestOps extends StreamRuntime {
     * between the faces flips the hash. */
   def streamShardManifest(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val ckStr = cachedScratchDir(shardDirs, sfDir, "documents.parquet") {
+    val ckStr = cachedScratchDir("s51", sfDir, "documents.parquet") {
       val in = newTempDir("graft_s51_in")
-      val ck = newTempDir("graft_ckpt_s51")
       val docs = graft.Tables.documents(spark, sfDir)
         .select($"doc_id", graft.operators.TextOps.shardOf.as("shard"),
           size(split($"text", " ")).cast("long").as("toks"),
@@ -1007,38 +847,19 @@ trait StreamIngestOps extends StreamRuntime {
       def third(i: Int) = docs.filter(pmod($"doc_id", lit(3L)) === i)
         .select($"shard", $"toks", $"bytes")
       (0 to 2).foreach(i => writeChangelogFile(third(i), in, i))
-      withShufflePartitions(spark, 8) {
-        withRocksDb(spark) {
-          spark.readStream
-            .schema(org.apache.spark.sql.types.StructType.fromDDL(
-              "shard BIGINT, toks BIGINT, bytes BIGINT"))
-            .option("maxFilesPerTrigger", "1")
-            .option("pathGlobFilter", "changelog_*.parquet")
-            .parquet(in.toString)
-            .as[ShardDelta]
-            .groupByKey(_.shard)
-            .transformWithState(new ShardStatsProcessor,
-              org.apache.spark.sql.streaming.TimeMode.None(),
-              OutputMode.Update(),
-              org.apache.spark.sql.Encoders.product[ShardDelta])
-            .toDF()
-            .writeStream.format("noop").outputMode("update")
-            .option("checkpointLocation", ck.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start().awaitTermination()
-        }
-      }
-      ck.toString
+      foldIntoStore(changelogStream(spark, in.toString,
+          "shard BIGINT, toks BIGINT, bytes BIGINT")
+        .as[ShardDelta]
+        .groupByKey(_.shard)
+        .transformWithState(new ShardStatsProcessor,
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          OutputMode.Update(),
+          org.apache.spark.sql.Encoders.product[ShardDelta])
+        .toDF(), "graft_s51")
     }
-    val cells = withRocksDb(spark) {
-      spark.read.format("statestore")
-        .option("path", ckStr)
-        .option("stateVarName", "cell")
-        .option("batchId", lastCommittedBatchId(ckStr).toString)
-        .load()
-        .select($"key.value".as("shard"), $"value.n_docs",
-          $"value.n_tokens", $"value.n_bytes")
-    }
+    val cells = readState(spark, ckStr, "cell")
+      .select($"key.value".as("shard"), $"value.n_docs",
+        $"value.n_tokens", $"value.n_bytes")
     graft.operators.TextOps.shardManifestFrom(cells)
   }
 }

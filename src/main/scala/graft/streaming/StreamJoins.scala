@@ -251,13 +251,6 @@ trait StreamJoinOps extends StreamRuntime {
       .orderBy(col("event_id"), col("promo_id"))
   }
 
-  // s10/s15 changelog dirs: derived from the fixture tables; cached per
-  // (sfDir, fixture mtime) like flushDirs, cleaned on JVM exit
-  private val fkStreamDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, String)]
-  private val tableUpdateDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, String)]
-
   /** The FK changelog join driven as a TRUE STREAM in three ordered
     * micro-batches (file source, maxFilesPerTrigger=1, files ordered by
     * mtime):
@@ -273,8 +266,7 @@ trait StreamJoinOps extends StreamRuntime {
     * rows are absent. */
   def streamFkChangelog(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dirStr = orderedBatchDir(fkStreamDirs, sfDir, "customer.parquet",
-        "graft_fk_stream") {
+    val dirStr = orderedBatchDir("s10", sfDir, "customer.parquet") {
       val nation = graft.Tables.nation(spark, sfDir)
       val customer = graft.Tables.customer(spark, sfDir)
       def rightVer(nameExpr: org.apache.spark.sql.Column) = nation.select(
@@ -289,12 +281,8 @@ trait StreamJoinOps extends StreamRuntime {
       Seq(rightVer(concat(lit("OLD_"), col("n_name"))), lefts,
           rightVer(col("n_name")))
     }
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+    val stream = changelogStream(spark, dirStr,
       "fk BIGINT, side STRING, left_key BIGINT, left_val STRING, right_val STRING")
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "changelog_*.parquet")
-      .parquet(dirStr)
       .as[FkEvent]
       .groupByKey(_.fk)
       .transformWithState(new FkJoinProcessor,
@@ -302,11 +290,9 @@ trait StreamJoinOps extends StreamRuntime {
         OutputMode.Update(),
         org.apache.spark.sql.Encoders.product[FkJoined])
       .toDF()
-    withRocksDb(spark) {
-      runToMemory(stream, "graft_s10", "update", Some(8),
-        noDataBatch = false)
-        .orderBy(col("left_key"), col("right_val"))
-    }
+    runToMemory(stream, "graft_s10", "update", Some(8),
+      noDataBatch = false, conf = RocksDb)
+      .orderBy(col("left_key"), col("right_val"))
   }
 
   /** Stream ⋈ UPDATING KTable driven as a true stream in four
@@ -322,8 +308,7 @@ trait StreamJoinOps extends StreamRuntime {
     * the rows. Complements s14, which pins the snapshot-join algebra. */
   def streamTableUpdateJoin(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dirStr = orderedBatchDir(tableUpdateDirs, sfDir, "events.parquet",
-        "graft_st_update") {
+    val dirStr = orderedBatchDir("s15", sfDir, "events.parquet") {
       val nation = graft.Tables.nation(spark, sfDir)
       val ev = graft.Tables.events(spark, sfDir).select(
         (col("user_id") % 25).as("nk"), lit("S").as("side"),
@@ -338,13 +323,9 @@ trait StreamJoinOps extends StreamRuntime {
           tableVer(col("n_name")),
           ev.filter(col("event_id") % 2 =!= 0))
     }
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+    val stream = changelogStream(spark, dirStr,
       "nk BIGINT, side STRING, event_id BIGINT, user_id BIGINT, " +
         "event_type STRING, dim_name STRING")
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "changelog_*.parquet")
-      .parquet(dirStr)
       .as[StEvent]
       .groupByKey(_.nk)
       .transformWithState(new StreamTableJoinProcessor,
@@ -352,11 +333,9 @@ trait StreamJoinOps extends StreamRuntime {
         OutputMode.Update(),
         org.apache.spark.sql.Encoders.product[StJoined])
       .toDF()
-    withRocksDb(spark) {
-      runToMemory(stream, "graft_s15", "update", Some(8),
-        noDataBatch = false)
-        .orderBy(col("event_id"))
-    }
+    runToMemory(stream, "graft_s15", "update", Some(8),
+      noDataBatch = false, conf = RocksDb)
+      .orderBy(col("event_id"))
   }
 
   /** Streaming KStream ⋈ KTable (stream joins the compacted changelog):
@@ -391,9 +370,6 @@ trait StreamJoinOps extends StreamRuntime {
       .orderBy(col("event_id"))
   }
 
-  private val asOfDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, String)]
-
   /** s25: streaming AS-OF join (see [[AsOfJoinProcessor]]) in two
     * mtime-ordered micro-batches:
     *   batch 0 — reference side: every 'view' event as a (ts, value)
@@ -407,8 +383,7 @@ trait StreamJoinOps extends StreamRuntime {
     * unmatched probe all change the result. */
   def streamAsOfJoin(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dirStr = orderedBatchDir(asOfDirs, sfDir, "events.parquet",
-        "graft_asof") {
+    val dirStr = orderedBatchDir("s25", sfDir, "events.parquet") {
       val ev = graft.Tables.events(spark, sfDir)
       def shape(tpe: String, tag: String) = ev
         .filter(col("event_type") === tpe)
@@ -417,13 +392,9 @@ trait StreamJoinOps extends StreamRuntime {
           col("value"))
       Seq(shape("view", "Q"), shape("purchase", "T"))
     }
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+    val stream = changelogStream(spark, dirStr,
       "user_id BIGINT, side STRING, ts_us BIGINT, event_id BIGINT, " +
         "value DOUBLE")
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "changelog_*.parquet")
-      .parquet(dirStr)
       .as[AsOfEvent]
       .groupByKey(_.user_id)
       .transformWithState(new AsOfJoinProcessor,
@@ -431,10 +402,8 @@ trait StreamJoinOps extends StreamRuntime {
         OutputMode.Update(),
         org.apache.spark.sql.Encoders.product[AsOfJoined])
       .toDF()
-    withRocksDb(spark) {
-      runToMemory(stream, "graft_s25", "update", Some(8),
-        noDataBatch = false)
-    }
+    runToMemory(stream, "graft_s25", "update", Some(8),
+        noDataBatch = false, conf = RocksDb)
       .select($"trade_id", $"user_id",
         timestamp_micros($"trade_ts_us").as("trade_ts"),
         timestamp_micros($"quote_ts_us").as("quote_ts"),

@@ -1,14 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.functions._
 
-/** The streaming RUNTIME seam of [[StreamOps]] (round-12 split of the
-  * former single file): sources + serde (the Kafka stand-in file
-  * source, flush sentinels), the memory-sink driver harness
-  * ([[runToMemory]]), scratch-dir/changelog-file machinery, and the
-  * session-conf helpers every streaming query shares. Pure mechanical
-  * move — no query text changed. */
+/** The streaming RUNTIME seam every s-query runs on: the sources (the
+  * Kafka stand-in file source, flush sentinels, changelog replay), the
+  * fixture-derived scratch-dir cache, one AvailableNow run primitive
+  * ([[runAvailableNow]], with [[runToMemory]] and [[foldIntoStore]] on
+  * top), the out-of-band state-store read ([[readState]]), and the
+  * session-conf scoping ([[withConf]]) those runs share. A query states
+  * its own transform, sink and conf pairs; everything else lives here. */
 trait StreamRuntime {
 
   /** KTable materialization: latest value per key as a changelog
@@ -103,13 +105,6 @@ trait StreamRuntime {
     * tracks max event time) and be filtered AFTER it — which is how the
     * consumers below are structured. In production this is the role of
     * periodic broker heartbeats / idle-source timeouts. */
-  // Flush-augmented source dirs are derived purely from the fixture
-  // file, so they are shared across sessions; the cache records the
-  // fixture's mtime and rebuilds if the file is regenerated in place.
-  // Temp dirs are deleted on JVM exit (shutdown hook below).
-  private val flushDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, String)]
-
   private[graft] def deleteRecursively(p: java.nio.file.Path): Unit = {
     import scala.jdk.CollectionConverters._
     if (java.nio.file.Files.exists(p)) {
@@ -175,7 +170,7 @@ trait StreamRuntime {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$sfDir/events.parquet"
     val raw = spark.read.parquet(path)
-    val dirStr = cachedScratchDir(flushDirs, sfDir, "events.parquet") {
+    val dirStr = cachedScratchDir("flush", sfDir, "events.parquet") {
       val dir = newTempDir("graft_stream_flush")
       // One flush row PER event type: Catalyst pushes deterministic
       // event_type predicates below the EventTimeWatermark operator, so a
@@ -207,45 +202,123 @@ trait StreamRuntime {
     normalizeTs(stream)
   }
 
-  /** Terminal progress of the most recent [[runToMemory]] run, by query
-    * name — the observability seam for state-size assertions: the spec
-    * suite reads `stateOperators.numRowsTotal` here to prove each
+  /** Terminal progress of the most recent [[runAvailableNow]] run, by
+    * query name — the observability seam for state-size assertions: the
+    * spec suite reads `stateOperators.numRowsTotal` here to prove each
     * transformWithState query's RocksDB row count is bounded by its
     * declared contract (occupied buckets / one record per user /
     * touched terms), not by event volume. */
   private[graft] val lastProgressByName = scala.collection.concurrent
     .TrieMap.empty[String, org.apache.spark.sql.streaming.StreamingQueryProgress]
 
-  /** Drive a streaming DataFrame to completion against a memory sink and
-    * return the materialized result (available-now semantics).
+  private[graft] val ShufflePartitions = "spark.sql.shuffle.partitions"
+
+  /** transformWithState requires the RocksDB state store provider.
+    * Changelog checkpointing goes with it: per commit, upload only the
+    * batch's changelog instead of a full RocksDB snapshot — the
+    * documented production setting for frequent-commit workloads, and
+    * measured ~5% off the s-series fixed overhead here (snapshots still
+    * happen, just in the background maintenance pass). */
+  private[graft] val RocksDb: Seq[(String, String)] = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+      "true")
+
+  /** Set each of `pairs` on the session for the duration of `body`, then
+    * put every key back as it was — its previous session value, or unset
+    * if the session had not set it — also when `body` throws. The one
+    * conf-scoping helper: streaming runs size their state stores and pick
+    * their provider through it without leaking either into the next
+    * query. */
+  private[graft] def withConf[A](spark: SparkSession,
+      pairs: (String, String)*)(body: => A): A = {
+    val session = spark.conf.getAll
+    val prev = pairs.map { case (k, _) => k -> session.get(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
+  /** Replay the `changelog_<i>.parquet` files under `dir` (see
+    * [[orderedBatchDir]]/[[writeChangelogFile]]) as one micro-batch per
+    * file, in index order — the stand-in for consuming ordered Kafka
+    * topic offsets. `ddl` is the files' schema. */
+  private[graft] def changelogStream(spark: SparkSession, dir: String,
+      ddl: String): DataFrame =
+    spark.readStream
+      .schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
+      .option("maxFilesPerTrigger", "1")
+      .option("pathGlobFilter", "changelog_*.parquet")
+      .parquet(dir)
+
+  /** Drive `df` to completion under an AvailableNow trigger: process
+    * everything available (including the watermark-close no-data batch
+    * that emits final windows / outer-join padding) and terminate — one
+    * less idle-detection round trip than processAllAvailable + stop.
+    * The caller picks the sink and output mode (`sink`) and the session
+    * conf the run needs (`conf`, scoped by [[withConf]]); the checkpoint
+    * is a fresh scratch dir unless a restart passes its own. Records the
+    * terminal progress in [[lastProgressByName]] and returns its batchId
+    * (−1 if no batch ran).
+    *
+    * Callers whose ORACLE encodes the micro-batch schedule (s38: the
+    * two-watermark late filter lags exactly one batch per file trigger)
+    * pin the terminal batchId with `assertLastBatchId`, so a Spark
+    * upgrade that changes AvailableNow scheduling (an interleaved
+    * no-data batch, a merged trigger) fails loudly instead of silently
+    * producing a one-batch-off oracle divergence. */
+  private[graft] def runAvailableNow(df: DataFrame, name: String,
+      conf: Seq[(String, String)] = Nil,
+      checkpoint: Option[java.nio.file.Path] = None,
+      assertLastBatchId: Option[Long] = None)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Long = {
+    val ck = checkpoint.getOrElse(newTempDir(s"graft_ckpt_$name"))
+    val last = withConf(df.sparkSession, conf: _*) {
+      val q = sink(df.writeStream.queryName(name))
+        .option("checkpointLocation", ck.toString)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      Option(q.lastProgress)
+    }
+    last.foreach(lastProgressByName.put(name, _))
+    val got = last.map(_.batchId).getOrElse(-1L)
+    assertLastBatchId.foreach { expect =>
+      require(got == expect,
+        s"$name: terminal batchId $got != expected $expect — " +
+          "micro-batch scheduling changed; revisit the oracle's " +
+          "batch-lag assumptions")
+    }
+    got
+  }
+
+  /** [[runAvailableNow]] into a memory sink named `name`; returns the
+    * materialized result.
     *
     * Streaming shuffles are exempt from AQE partition coalescing, so a
     * high session `shuffle.partitions` (tuned for batch) means that many
     * state-store instances per micro-batch — pure overhead at local
-    * fixture scale. Cap the stateful parallelism for the streaming query
-    * and restore the session value afterwards (the knob a Kafka Streams
-    * app would call num.stream.threads). */
+    * fixture scale. The run caps the stateful parallelism (the knob a
+    * Kafka Streams app would call num.stream.threads). Most fixture
+    * queries keep tiny per-batch state (≤150 keys), so 2 stores saturate
+    * a local run; queries that push the full event volume THROUGH the
+    * store per batch (the transformWithState changelogs) pass a higher
+    * `partitions` — match store parallelism to per-batch state traffic,
+    * not to key count. `conf` adds the caller's own pairs ([[RocksDb]]
+    * for transformWithState). */
   def runToMemory(df: DataFrame, name: String, mode: String,
       partitions: Option[Int] = None,
       noDataBatch: Boolean = true,
-      assertLastBatchId: Option[Long] = None): DataFrame = {
+      assertLastBatchId: Option[Long] = None,
+      conf: Seq[(String, String)] = Nil): DataFrame = {
     val spark = df.sparkSession
-    val key = "spark.sql.shuffle.partitions"
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = spark.conf.get(key)
-    val prevNd = spark.conf.get(ndKey)
     spark.catalog.dropTempView(name)
-    // Streaming shuffle parallelism = state-store instances per batch.
-    // Most fixture queries keep tiny per-batch state (≤150 keys), so 2
-    // stores saturate a local run; queries that push the full event
-    // volume THROUGH the store per batch (the transformWithState
-    // changelogs) pass a higher `partitions` — the same sizing call a
-    // Kafka Streams deployment makes with num.stream.threads: match
-    // store parallelism to per-batch state traffic, not to key count.
-    val cap = partitions.getOrElse(
-      Integer.getInteger("graft.stream.partitions", 2).intValue())
-    spark.conf.set(key,
-      math.min(cap, spark.sparkContext.defaultParallelism).toString)
+    val n = math.min(partitions.getOrElse(2),
+      spark.sparkContext.defaultParallelism)
     // Complete mode re-emits the whole result every batch and never
     // waits on a watermark close, so the trailing no-data batch is one
     // pure-overhead state-store round trip; append/update queries NEED
@@ -253,74 +326,81 @@ trait StreamRuntime {
     // TimeMode.None transformWithState pipelines, which have no
     // watermark and no timers to fire, so their callers pass
     // noDataBatch = false and skip the same overhead.
-    if (mode == "complete" || !noDataBatch) spark.conf.set(ndKey, "false")
-    try {
-      // AvailableNow: process everything (including the watermark-close
-      // no-data batch that emits final windows / outer-join padding) and
-      // terminate — one less idle-detection round trip than
-      // processAllAvailable + stop
-      val q = df.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation",
-          newTempDir(s"graft_ckpt_$name").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      Option(q.lastProgress).foreach(lastProgressByName.put(name, _))
-      // Callers whose ORACLE encodes the micro-batch schedule (s38: the
-      // two-watermark late filter lags exactly one batch per file
-      // trigger) pin the terminal batchId here, so a Spark upgrade that
-      // changes AvailableNow scheduling (an interleaved no-data batch,
-      // a merged trigger) fails loudly instead of silently producing a
-      // one-batch-off oracle divergence.
-      assertLastBatchId.foreach { expect =>
-        val got = Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
-        require(got == expect,
-          s"$name: terminal batchId $got != expected $expect — " +
-            "micro-batch scheduling changed; revisit the oracle's " +
-            "batch-lag assumptions")
-      }
-    } finally {
-      spark.conf.set(key, prev)
-      spark.conf.set(ndKey, prevNd)
-    }
+    val noData =
+      if (mode == "complete" || !noDataBatch)
+        Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+      else Nil
+    runAvailableNow(df, name,
+      conf ++ ((ShufflePartitions -> n.toString) +: noData),
+      assertLastBatchId = assertLastBatchId)(
+      _.format("memory").outputMode(mode))
     spark.table(name)
   }
 
-  /** Materialize `batches` as ONE parquet file each, mtime-ordered, so a
-    * file-source stream with maxFilesPerTrigger=1 replays them as that
-    * exact micro-batch sequence — the harness's stand-in for ordered
-    * Kafka topic offsets. Cached per (sfDir, fixture mtime). */
-  /** Cache a derived scratch dir per (sfDir, source-fixture mtime) —
+  /** Fold a TimeMode.None transformWithState changelog `df` into its
+    * RocksDB store with a noop sink — the store, not the changelog, is
+    * the product (read it back with [[readState]]). 8 state partitions:
+    * the full event volume passes through the store per batch (see
+    * [[runToMemory]]'s sizing note). Returns the checkpoint dir;
+    * `checkpoint` resumes an earlier fold (a restart), `conf` adds
+    * pairs to the run. */
+  private[graft] def foldIntoStore(df: DataFrame, name: String,
+      checkpoint: Option[java.nio.file.Path] = None,
+      conf: Seq[(String, String)] = Nil): String = {
+    val ck = checkpoint.getOrElse(newTempDir(s"graft_ckpt_$name"))
+    runAvailableNow(df, name,
+      ((ShufflePartitions -> "8") +: RocksDb) ++ conf, Some(ck))(
+      _.format("noop").outputMode("update"))
+    ck.toString
+  }
+
+  /** Read state variable `stateVar` out of checkpoint `ck` with no query
+    * running — the Interactive Queries read. It pins an EXPLICIT
+    * batchId (default: the last committed one) instead of the implicit
+    * "latest", so a later run appending batches cannot change what the
+    * read returns; an older id reads an earlier store version (time
+    * travel, see StateSourceBatchIdSpec). The provider and encoding come
+    * from the checkpoint, so no session conf is needed. */
+  private[graft] def readState(spark: SparkSession, ck: String,
+      stateVar: String, batchId: Option[Long] = None): DataFrame =
+    spark.read.format("statestore")
+      .option("path", ck)
+      .option("stateVarName", stateVar)
+      .option("batchId", batchId.getOrElse(lastCommittedBatchId(ck)).toString)
+      .load()
+
+  /** Fixture-derived scratch dirs, keyed by (tag, sfDir): the fixture's
+    * mtime at build time and the dir. The dirs derive purely from the
+    * fixture file, so they are shared across sessions and rebuilt if
+    * the file is regenerated in place; they are deleted on JVM exit. */
+  private val scratchDirs = scala.collection.concurrent
+    .TrieMap.empty[(String, String), (Long, String)]
+
+  /** Cache a derived scratch dir per (tag, sfDir, source-fixture mtime) —
     * THE idiom for every fixture-derived scratch location (flush dirs,
-    * changelog dirs, sink output): rebuild iff the driver regenerated
-    * the fixture in place. NOTE: `updateWith`'s remapping function may
-    * in principle re-run under contention; the driver surfaces invoke
-    * queries single-threaded, and a re-run would only build a duplicate
-    * scratch dir (both tracked for exit cleanup), never corrupt one. */
-  private[graft] def cachedScratchDir(cache:
-      scala.collection.concurrent.TrieMap[String, (Long, String)],
-      sfDir: String, srcFixture: String)(build: => String): String = {
+    * changelog dirs, checkpoints, sink output): rebuild iff the fixture
+    * was regenerated in place. `tag` names the query that owns the dir.
+    * NOTE: `updateWith`'s remapping function may in principle re-run
+    * under contention; Bench and Verify invoke queries single-threaded,
+    * and a re-run would only build a duplicate scratch dir (both
+    * tracked for exit cleanup), never corrupt one. */
+  private[graft] def cachedScratchDir(tag: String, sfDir: String,
+      srcFixture: String)(build: => String): String = {
+    val key = (tag, sfDir)
     val srcMtime = new java.io.File(s"$sfDir/$srcFixture").lastModified()
-    val dir = cache.get(sfDir).filter(_._1 == srcMtime).map(_._2).getOrElse(
-      cache.updateWith(sfDir) { _ => Some((srcMtime, build)) }.get._2)
+    val dir = scratchDirs.get(key).filter(_._1 == srcMtime).map(_._2)
+      .getOrElse(scratchDirs.updateWith(key) { _ =>
+        Some((srcMtime, build))
+      }.get._2)
     pinnedDirs.add(dir) // survives reclaimScratch while this cache lives
     dir
   }
 
-  /** Set `spark.sql.shuffle.partitions` for the duration of `body` and
-    * restore the session value after — the save/set/try/finally block
-    * every streaming roundtrip needs (state-store instances per batch =
-    * shuffle partitions; see [[runToMemory]]'s sizing note). */
-  private[graft] def withShufflePartitions[A](spark: SparkSession,
-      n: Int)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
-  }
+  /** The dir [[cachedScratchDir]] holds for (tag, sfDir), if built this
+    * session — how specs find a query's checkpoint to read its store
+    * out-of-band. */
+  private[graft] def cachedDir(tag: String, sfDir: String): Option[String] =
+    scratchDirs.get((tag, sfDir)).map(_._2)
 
   /** Write `df` as exactly ONE uncompressed parquet FILE at `dst` (not
     * a directory): coalesce(1) into a scratch dir, move the single part
@@ -353,59 +433,30 @@ trait StreamRuntime {
     dst.toFile.setLastModified(1700000000000L + i * 60000L)
   }
 
-  private[graft] def orderedBatchDir(cache:
-      scala.collection.concurrent.TrieMap[String, (Long, String)],
-      sfDir: String, srcFixture: String, prefix: String)(
-      batches: => Seq[DataFrame]): String =
-    cachedScratchDir(cache, sfDir, srcFixture) {
-          val dir = newTempDir(prefix)
-          // each batch is its own Spark job — run them concurrently
-          // (the scheduler interleaves them across the idle cores) and
-          // skip compression: this is throwaway scratch on tmpfs, the
-          // snappy encode of a full event batch is pure timed overhead
-          import scala.concurrent.ExecutionContext.Implicits.global
-          import scala.concurrent.{Await, Future}
-          val writes = batches.zipWithIndex.map { case (df, i) => Future {
-            writeChangelogFile(df, dir, i)
-          }}
-          writes.foreach(Await.result(_, scala.concurrent.duration.Duration.Inf))
-          dir.toString
+  /** Materialize `batches` as ONE parquet file each, mtime-ordered, so
+    * [[changelogStream]] replays them as that exact micro-batch sequence
+    * — the harness's stand-in for ordered Kafka topic offsets. Cached
+    * per (tag, sfDir, fixture mtime) by [[cachedScratchDir]]. */
+  private[graft] def orderedBatchDir(tag: String, sfDir: String,
+      srcFixture: String)(batches: => Seq[DataFrame]): String =
+    cachedScratchDir(tag, sfDir, srcFixture) {
+      val dir = newTempDir(s"graft_$tag")
+      // each batch is its own Spark job — run them concurrently
+      // (the scheduler interleaves them across the idle cores) and
+      // skip compression: this is throwaway scratch on tmpfs, the
+      // snappy encode of a full event batch is pure timed overhead
+      import scala.concurrent.ExecutionContext.Implicits.global
+      import scala.concurrent.{Await, Future}
+      val writes = batches.zipWithIndex.map { case (df, i) => Future {
+        writeChangelogFile(df, dir, i)
+      }}
+      writes.foreach(Await.result(_, scala.concurrent.duration.Duration.Inf))
+      dir.toString
     }
-
-  /** transformWithState requires the RocksDB state store provider; set it
-    * for the duration of `body` and restore the session values after.
-    * Changelog checkpointing goes with it: per commit, upload only the
-    * batch's changelog instead of a full RocksDB snapshot — the
-    * documented production setting for frequent-commit workloads, and
-    * measured ~5% off the s-series fixed overhead here (snapshots still
-    * happen, just in the background maintenance pass). */
-  private[graft] def withRocksDb[A](spark: SparkSession)(body: => A): A = {
-    val pk = "spark.sql.streaming.stateStore.providerClass"
-    val ck = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prev = spark.conf.getOption(pk)
-    val prevCk = spark.conf.getOption(ck)
-    spark.conf.set(pk,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set(ck, "true")
-    try body
-    finally {
-      prev match {
-        case Some(v) => spark.conf.set(pk, v)
-        case None => spark.conf.unset(pk)
-      }
-      prevCk match {
-        case Some(v) => spark.conf.set(ck, v)
-        case None => spark.conf.unset(ck)
-      }
-    }
-  }
 
   /** Resolve the newest committed batchId from a checkpoint's commit
-    * log, so state-source reads pin an EXPLICIT batch instead of the
-    * implicit "latest" — replay-stable (a later run appending batches
-    * cannot change what this read returns) and the serving-layer
-    * time-travel mechanism (pass an older id to read an earlier store
-    * version; StateSourceBatchIdSpec exercises that path). */
+    * log — [[readState]]'s default pin, and the entry s41 deletes to
+    * force a redelivery. */
   private[graft] def lastCommittedBatchId(ck: String): Long = {
     val dir = new java.io.File(ck, "commits")
     val ids = Option(dir.list()).getOrElse(Array.empty[String])

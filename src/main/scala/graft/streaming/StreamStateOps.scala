@@ -10,9 +10,6 @@ import org.apache.spark.sql.streaming.OutputMode
   * redelivery, and checkpoint-kill-restart recovery. */
 trait StreamStateOps extends StreamRuntime {
 
-  private val foreachEosDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, String)]
-
   /** Evidence that [[streamForeachExactlyOnce]]'s replay actually
     * happened: batch count, total foreachBatch invocations (including
     * duplicates), and whether the redelivered batch carried
@@ -43,8 +40,7 @@ trait StreamStateOps extends StreamRuntime {
   private[graft] def runForeachExactlyOnce(spark: SparkSession,
       sfDir: String): (DataFrame, ForeachEvidence) = {
     import spark.implicits._
-    val dirStr = orderedBatchDir(foreachEosDirs, sfDir, "events.parquet",
-        "graft_s41") {
+    val dirStr = orderedBatchDir("s41", sfDir, "events.parquet") {
       val ev = graft.Tables.events(spark, sfDir)
         .select($"event_type", $"value", $"event_id")
       (0 until 3).map(i => ev.filter($"event_id" % 3 === i)
@@ -55,33 +51,24 @@ trait StreamStateOps extends StreamRuntime {
     val deliveries = new java.util.concurrent.atomic.AtomicInteger(0)
     val dupIdentical = new java.util.concurrent.atomic.AtomicBoolean(false)
     val ck = newTempDir("graft_ckpt_s41")
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "event_type STRING, value DOUBLE")
-    def runOnce(): Unit = withShufflePartitions(spark, 2) {
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "changelog_*.parquet")
-        .parquet(dirStr)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val rows = batch.groupBy(col("event_type"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("value").cast("decimal(18,4)")).as("s"))
-            .collect()
-            .map(r => (r.getString(0), r.getLong(1), r.getDecimal(2)))
-            .sortBy(_._1)
-          deliveries.incrementAndGet()
-          store.putIfAbsent(batchId, rows) match {
-            case Some(prior) =>   // duplicate delivery: store unchanged
-              if (prior.sameElements(rows)) dupIdentical.set(true)
-            case None => ()
-          }
-          ()
+    def runOnce(): Unit = runAvailableNow(
+        changelogStream(spark, dirStr, "event_type STRING, value DOUBLE"),
+        "graft_s41", Seq(ShufflePartitions -> "2"), Some(ck)) {
+      _.foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val rows = batch.groupBy(col("event_type"))
+          .agg(count(lit(1)).as("n"),
+            sum(col("value").cast("decimal(18,4)")).as("s"))
+          .collect()
+          .map(r => (r.getString(0), r.getLong(1), r.getDecimal(2)))
+          .sortBy(_._1)
+        deliveries.incrementAndGet()
+        store.putIfAbsent(batchId, rows) match {
+          case Some(prior) =>   // duplicate delivery: store unchanged
+            if (prior.sameElements(rows)) dupIdentical.set(true)
+          case None => ()
         }
-        .option("checkpointLocation", ck.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
+        ()
+      }
     }
     runOnce()
     // Crash injection: drop the newest commit-log entry. The offset log
@@ -126,18 +113,15 @@ trait StreamStateOps extends StreamRuntime {
     df
   }
 
-  private val iqDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, String)]
-
   /** s42: QUERYABLE STATE — Kafka Streams' Interactive Queries surface,
     * the one §2-adjacent capability prior rounds listed as missing "no
     * mid-run store-read API". Spark 4's state data source IS that API:
     * a streaming changelog query (the [[LatestEventProcessor]] KTable
     * materialization) runs to completion leaving its RocksDB checkpoint
-    * behind, and the store is then read OUT-OF-BAND with
-    * `spark.read.format("statestore")` — no query running, exactly how
-    * an ops console or serving layer reads a Kafka Streams store via
-    * IQ. The declared result is the store CONTENT (latest event per
+    * behind, and the store is then read OUT-OF-BAND through the
+    * `statestore` data source ([[readState]]) — no query running,
+    * exactly how an ops console or serving layer reads a Kafka Streams
+    * store via IQ. The declared result is the store CONTENT (latest event per
     * user), which must hash-match the batch latest-by-key oracle: a
     * stale store, a lost key, or a wrong changelog reduction all flip
     * the hash.
@@ -149,46 +133,24 @@ trait StreamStateOps extends StreamRuntime {
 
   def streamQueryableState(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val ckStr = cachedScratchDir(iqDirs, sfDir, "events.parquet") {
-      val ck = newTempDir("graft_ckpt_s42")
-      withShufflePartitions(spark, 8) {
-        withRocksDb(spark) {
-          eventsStream(spark, sfDir).as[EventRow]
-            .groupByKey(_.user_id)
-            .transformWithState(new LatestEventProcessor,
-              org.apache.spark.sql.streaming.TimeMode.None(),
-              OutputMode.Update(),
-              org.apache.spark.sql.Encoders.product[LatestEvent])
-            .toDF()
-            .writeStream
-            // the changelog consumer is irrelevant here — the STORE is
-            // the product (a real deployment tees this to Kafka/a sink)
-            .format("noop")
-            .outputMode("update")
-            .option("checkpointLocation", ck.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-            .awaitTermination()
-        }
-      }
-      ck.toString
+    // the changelog consumer is irrelevant here — the STORE is the
+    // product (a real deployment tees this to Kafka/a sink)
+    val ckStr = cachedScratchDir("s42", sfDir, "events.parquet") {
+      foldIntoStore(eventsStream(spark, sfDir).as[EventRow]
+        .groupByKey(_.user_id)
+        .transformWithState(new LatestEventProcessor,
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          OutputMode.Update(),
+          org.apache.spark.sql.Encoders.product[LatestEvent])
+        .toDF(), "graft_s42")
     }
     // the Interactive Query: read the named state variable from the
     // last committed batch's store, with no streaming query running
-    withRocksDb(spark) {
-      spark.read.format("statestore")
-        .option("path", ckStr)
-        .option("stateVarName", "latest")
-        .option("batchId", lastCommittedBatchId(ckStr).toString)
-        .load()
-        .select($"value.user_id", $"value.event_id", $"value.ts_us",
-          $"value.event_type", round($"value.value", 2).as("value"))
-        .orderBy($"user_id")
-    }
+    readState(spark, ckStr, "latest")
+      .select($"value.user_id", $"value.event_id", $"value.ts_us",
+        $"value.event_type", round($"value.value", 2).as("value"))
+      .orderBy($"user_id")
   }
-
-  private val bootstrapDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, String)]
 
   /** s43: STATE BOOTSTRAP — the Kafka Streams changelog-restore /
     * KTable warm-start path, s42's companion on the write side: a new
@@ -220,65 +182,29 @@ trait StreamStateOps extends StreamRuntime {
     val cut = to_timestamp(lit("2024-01-16 09:30:00"))
     // the s31 cents discipline: double→cents in each engine's round()
     val centsCol = expr("CAST(round(value * 100, 0) AS BIGINT)")
-    val ckStr = cachedScratchDir(bootstrapDirs, sfDir, "events.parquet") {
-      val ck = newTempDir("graft_ckpt_s43")
+    val ckStr = cachedScratchDir("s43", sfDir, "events.parquet") {
       // the offline snapshot: batch per-user totals over the first half
       val snapshot = graft.Tables.events(spark, sfDir)
         .filter($"ts" < cut)
         .groupBy($"user_id")
         .agg(count(lit(1)).as("n_events"), sum(centsCol).as("cents"))
         .as[UserCounts]
-      withShufflePartitions(spark, 8) {
-        withRocksDb(spark) {
-          eventsStream(spark, sfDir)
-            .filter($"ts" >= cut)
-            .select($"user_id", centsCol.as("cents"))
-            .as[UserDelta]
-            .groupByKey(_.user_id)
-            .transformWithState(new CountBootstrapProcessor,
-              org.apache.spark.sql.streaming.TimeMode.None(),
-              OutputMode.Update(),
-              snapshot.groupByKey(_.user_id),
-              org.apache.spark.sql.Encoders.product[UserCounts],
-              org.apache.spark.sql.Encoders.product[UserCounts])
-            .toDF()
-            .writeStream
-            .format("noop")
-            .outputMode("update")
-            .option("checkpointLocation", ck.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-            .awaitTermination()
-        }
-      }
-      ck.toString
+      foldIntoStore(eventsStream(spark, sfDir)
+        .filter($"ts" >= cut)
+        .select($"user_id", centsCol.as("cents"))
+        .as[UserDelta]
+        .groupByKey(_.user_id)
+        .transformWithState(new CountBootstrapProcessor,
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          OutputMode.Update(),
+          snapshot.groupByKey(_.user_id),
+          org.apache.spark.sql.Encoders.product[UserCounts],
+          org.apache.spark.sql.Encoders.product[UserCounts])
+        .toDF(), "graft_s43")
     }
-    withRocksDb(spark) {
-      spark.read.format("statestore")
-        .option("path", ckStr)
-        .option("stateVarName", "totals")
-        .option("batchId", lastCommittedBatchId(ckStr).toString)
-        .load()
-        .select($"value.user_id", $"value.n_events", $"value.cents")
-        .orderBy($"user_id")
-    }
-  }
-
-  private val evoDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, String)]
-
-  /** Avro state encoding for the duration of `body` — the setting that
-    * buys transformWithState STATE SCHEMA EVOLUTION (the default
-    * UnsafeRow encoding is layout-exact and rejects any schema change
-    * across restart). */
-  private[graft] def withAvroState[A](spark: SparkSession)(body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.encodingFormat"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "avro")
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
+    readState(spark, ckStr, "totals")
+      .select($"value.user_id", $"value.n_events", $"value.cents")
+      .orderBy($"user_id")
   }
 
   /** s44: STATE SCHEMA EVOLUTION across a restart — the rolling-upgrade
@@ -301,32 +227,22 @@ trait StreamStateOps extends StreamRuntime {
     import spark.implicits._
     val cut = to_timestamp(lit("2024-01-16 09:30:00"))
     val centsCol = expr("CAST(round(value * 100, 0) AS BIGINT)")
-    val ckStr = cachedScratchDir(evoDirs, sfDir, "events.parquet") {
+    val ckStr = cachedScratchDir("s44", sfDir, "events.parquet") {
       val in = newTempDir("graft_s44_in")
       val ck = newTempDir("graft_ckpt_s44")
       val ev = graft.Tables.events(spark, sfDir)
       def half(cond: Column) = ev.filter(cond)
         .select($"user_id", centsCol.as("cents"))
-      val src = spark.readStream
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(
-          "user_id BIGINT, cents BIGINT"))
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "changelog_*.parquet")
-        .parquet(in.toString)
+      val src = changelogStream(spark, in.toString,
+          "user_id BIGINT, cents BIGINT")
         .as[UserDelta]
         .groupByKey(_.user_id)
-      def runLeg(out: DataFrame): Unit =
-        withShufflePartitions(spark, 8) {
-          withRocksDb(spark) {
-            withAvroState(spark) {
-              out.writeStream.format("noop").outputMode("update")
-                .option("checkpointLocation", ck.toString)
-                .trigger(
-                  org.apache.spark.sql.streaming.Trigger.AvailableNow())
-                .start().awaitTermination()
-            }
-          }
-        }
+      // Avro state encoding buys transformWithState STATE SCHEMA
+      // EVOLUTION (the default UnsafeRow encoding is layout-exact and
+      // rejects any schema change across restart)
+      def runLeg(out: DataFrame): Unit = foldIntoStore(out, "graft_s44",
+        Some(ck),
+        Seq("spark.sql.streaming.stateStore.encodingFormat" -> "avro"))
       writeChangelogFile(half($"ts" < cut), in, 0)
       runLeg(src.transformWithState(new CountV1Processor,       // v1 era
         org.apache.spark.sql.streaming.TimeMode.None(),
@@ -339,22 +255,11 @@ trait StreamStateOps extends StreamRuntime {
         org.apache.spark.sql.Encoders.product[UserCountsV2]).toDF())
       ck.toString
     }
-    withRocksDb(spark) {
-      withAvroState(spark) {
-        spark.read.format("statestore")
-          .option("path", ckStr)
-          .option("stateVarName", "totals")
-          .option("batchId", lastCommittedBatchId(ckStr).toString)
-          .load()
-          .select($"value.user_id", $"value.n_events", $"value.cents",
-            $"value.cents_new")
-          .orderBy($"user_id")
-      }
-    }
+    readState(spark, ckStr, "totals")
+      .select($"value.user_id", $"value.n_events", $"value.cents",
+        $"value.cents_new")
+      .orderBy($"user_id")
   }
-
-  private val restartDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, String)]
 
   /** The s40 tumbling aggregation, shared by both query runs — restart
     * recovery requires the restarted query to be the SAME plan, so the
@@ -362,12 +267,8 @@ trait StreamStateOps extends StreamRuntime {
   private[graft] def restartAggStream(spark: SparkSession,
       in: java.nio.file.Path): DataFrame = {
     import graft.functions.Det.dsum
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "ts TIMESTAMP, event_type STRING, value DOUBLE")
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "changelog_*.parquet")
-      .parquet(in.toString)
+    changelogStream(spark, in.toString,
+        "ts TIMESTAMP, event_type STRING, value DOUBLE")
       .withWatermark("ts", "10 minutes")
       .filter(col("ts") < flushBound)
       .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
@@ -383,19 +284,9 @@ trait StreamStateOps extends StreamRuntime {
     * not an in-memory carryover. */
   private[graft] def runRestartLeg(spark: SparkSession, in: java.nio.file.Path,
       out: java.nio.file.Path, ck: java.nio.file.Path): Long =
-    withShufflePartitions(spark, 8) {
-      withRocksDb(spark) {
-        val q = restartAggStream(spark, in).writeStream
-          .format("parquet")
-          .option("path", out.toString)
-          .option("checkpointLocation", ck.toString)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
-      }
-    }
+    runAvailableNow(restartAggStream(spark, in), "graft_s40",
+        (ShufflePartitions -> "8") +: RocksDb, Some(ck))(
+      _.format("parquet").option("path", out.toString).outputMode("append"))
 
   /** s40: CHECKPOINT-KILL-RESTART RECOVERY under the oracle gate — the
     * fault-tolerance property a 100 TB deployment exercises that no
@@ -426,7 +317,7 @@ trait StreamStateOps extends StreamRuntime {
     * — checkpoint replay is O(state), not O(history). */
   def streamRestartRecovery(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val outStr = cachedScratchDir(restartDirs, sfDir, "events.parquet") {
+    val outStr = cachedScratchDir("s40", sfDir, "events.parquet") {
       val in = newTempDir("graft_s40_in")
       val out = newTempDir("graft_s40_out")
       val ck = newTempDir("graft_ckpt_s40")

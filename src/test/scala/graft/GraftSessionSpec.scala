@@ -7,6 +7,21 @@ import scala.sys.process._
 
 import org.scalatest.funsuite.AnyFunSuite
 
+/** The `src/main/scala` files (relative paths, sorted) whose text
+  * contains `needle` — the grep behind the single-seam pins. */
+object MainSources {
+  def containing(needle: String): Seq[String] = {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root: $root missing")
+    val walk = Files.walk(root)
+    try walk.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .filter(p => Files.readString(p).contains(needle))
+      .map(p => root.relativize(p).toString).toSeq.sorted
+    finally walk.close()
+  }
+}
+
 /** Pins [[GraftSession]]: the declared config every entry point runs in,
   * its `extraConf` precedence, and that it is the only session builder. */
 class GraftSessionSpec extends AnyFunSuite {
@@ -34,13 +49,8 @@ class GraftSessionSpec extends AnyFunSuite {
   }
 
   test("GraftSession.scala holds the only session builder under src/main") {
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"run from the repo root: $root missing")
-    val hits = Files.walk(root).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala"))
-      .filter(p => Files.readString(p).contains("SparkSession.builder"))
-      .map(p => root.relativize(p).toString).toSeq
-    assert(hits == Seq("graft/GraftSession.scala"))
+    assert(MainSources.containing("SparkSession.builder") ==
+      Seq("graft/GraftSession.scala"))
   }
 
   test("s07 runs as the first state-store user of a fresh SparkContext") {

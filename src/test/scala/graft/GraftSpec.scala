@@ -2787,19 +2787,13 @@ class TimerTtlSpec extends org.scalatest.funsuite.AnyFunSuite {
   import org.apache.spark.sql.Encoders
   import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-  import graft.streaming.{SessionCountProcessor, SessionFinal, TtlCountProcessor, CountOut}
+  import graft.streaming.{SessionCountProcessor, SessionFinal, StreamOps,
+    TtlCountProcessor, CountOut}
   lazy val spark = TestSession.spark
-
-  private def withRocksDb[T](f: => T): T = {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f
-    finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
 
   test("event-time timer emits the final count only after watermark close") {
     import spark.implicits._
-    withRocksDb {
+    StreamOps.withConf(spark, StreamOps.RocksDb: _*) {
       val input = MemoryStream[(Long, Timestamp)](spark)
       val ds = input.toDS().toDF("user_id", "ts")
         .withWatermark("ts", "1 second")
@@ -2830,7 +2824,7 @@ class TimerTtlSpec extends org.scalatest.funsuite.AnyFunSuite {
   test("TTL'd state expires between batches and the count restarts") {
     import spark.implicits._
     import org.apache.spark.sql.streaming.Trigger
-    withRocksDb {
+    StreamOps.withConf(spark, StreamOps.RocksDb: _*) {
       // Two runs over ONE checkpoint: state persists across the restart,
       // but the 500 ms TTL (wall clock) lapses during the sleep, so the
       // second run must read expired (absent) state. TTL requires
@@ -3270,7 +3264,7 @@ class WatermarkSemanticsSpec extends org.scalatest.funsuite.AnyFunSuite {
       }
       .outputMode("update")
       .option("checkpointLocation", ckpt).start()
-    StreamOps.withRocksDb(spark) {
+    StreamOps.withConf(spark, StreamOps.RocksDb: _*) {
       // run 1: only corpus rows — builds bucket state, emits nothing
       val q1 = start()
       input.addData(BandEvent("b1", "O", 2L), BandEvent("b1", "O", 8L),
@@ -4635,7 +4629,7 @@ class RestartRecoverySpec extends org.scalatest.funsuite.AnyFunSuite {
           lit(java.sql.Timestamp.valueOf("2100-01-01 00:00:00.0")))
         .withColumn("value", lit(0.0))
         .select($"ts", $"event_type", $"value"), in, 3)
-    val killedAt = StreamOps.withRocksDb(spark) {
+    val killedAt = StreamOps.withConf(spark, StreamOps.RocksDb: _*) {
       // run A: slow trigger so batch 1 won't start before the kill
       // lands — batch 0 commits, then stop() interrupts the idle query
       val qa = StreamOps.restartAggStream(spark, in).writeStream
@@ -4734,22 +4728,21 @@ class RestartRecoverySpec extends org.scalatest.funsuite.AnyFunSuite {
         .withColumn("value", lit(0.0))
         .select($"ts", $"event_type", $"value"), in, 2)
     // leg 2 under a conf that disagrees with the checkpoint
-    StreamOps.withShufflePartitions(spark, 3) {
-      StreamOps.withRocksDb(spark) {
-        val q = StreamOps.restartAggStream(spark, in).writeStream
-          .format("parquet")
-          .option("path", out.toString)
-          .option("checkpointLocation", ck.toString)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        // the checkpoint's recorded partition count wins over the conf
-        val parts = Option(q.lastProgress).map(
-          _.stateOperators.map(_.numShufflePartitions).max)
-        assert(parts.contains(8L),
-          s"state partitions followed the drifted conf: $parts")
-      }
+    StreamOps.withConf(spark,
+        (StreamOps.ShufflePartitions -> "3") +: StreamOps.RocksDb: _*) {
+      val q = StreamOps.restartAggStream(spark, in).writeStream
+        .format("parquet")
+        .option("path", out.toString)
+        .option("checkpointLocation", ck.toString)
+        .outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      // the checkpoint's recorded partition count wins over the conf
+      val parts = Option(q.lastProgress).map(
+        _.stateOperators.map(_.numShufflePartitions).max)
+      assert(parts.contains(8L),
+        s"state partitions followed the drifted conf: $parts")
     }
     val got = spark.read.parquet(out.toString)
     import graft.functions.Det.dsum
@@ -4873,10 +4866,7 @@ class StateBoundSpec extends org.scalatest.funsuite.AnyFunSuite {
       .select((-$"m.nl").as("cell")).distinct().count()
     val ck = StreamOps.serveCheckpoint(sf)
       .getOrElse(fail("no s48 checkpoint recorded"))
-    val got = spark.read.format("statestore")
-      .option("path", ck).option("stateVarName", "topn")
-      .option("batchId", StreamOps.lastCommittedBatchId(ck).toString)
-      .load().count()
+    val got = StreamOps.readState(spark, ck, "topn").count()
     assert(got == occupied,
       s"s48 state $got rows != occupied cells $occupied")
     assert(got <= cents.length.toLong)
@@ -4887,10 +4877,7 @@ class StateBoundSpec extends org.scalatest.funsuite.AnyFunSuite {
     StreamOps.streamCountMin(spark, sf).collect()
     val ck = StreamOps.cmsCheckpoint(sf)
       .getOrElse(fail("no s49 checkpoint recorded"))
-    val got = spark.read.format("statestore")
-      .option("path", ck).option("stateVarName", "bins")
-      .option("batchId", StreamOps.lastCommittedBatchId(ck).toString)
-      .load().count()
+    val got = StreamOps.readState(spark, ck, "bins").count()
     // occupied (r, b) cells recomputed batch-side with the same exprs
     val occupied = Tables.events(spark, sf).select($"user_id")
       .select(posexplode(array((0 until graft.operators.Extras.CmsD)
@@ -4920,10 +4907,7 @@ class StateBoundSpec extends org.scalatest.funsuite.AnyFunSuite {
       "deletion left the served top-5 unchanged — not load-bearing")
     val ck = StreamOps.tombCheckpoint(sf)
       .getOrElse(fail("no s50 checkpoint recorded"))
-    val batchId = StreamOps.lastCommittedBatchId(ck).toString
-    def stateVar(name: String) = spark.read.format("statestore")
-      .option("path", ck).option("stateVarName", name)
-      .option("batchId", batchId).load()
+    def stateVar(name: String) = StreamOps.readState(spark, ck, name)
     // buffers: one ValueState row per occupied cell, each ≤ DivCap
     // entries, even after delete + compaction replay
     val bufs = stateVar("topn")
@@ -5012,10 +4996,7 @@ class StateBoundSpec extends org.scalatest.funsuite.AnyFunSuite {
     val served = StreamOps.streamShardManifest(spark, sf).collect()
     val ck = StreamOps.shardCheckpoint(sf)
       .getOrElse(fail("no s51 checkpoint recorded"))
-    val got = spark.read.format("statestore")
-      .option("path", ck).option("stateVarName", "cell")
-      .option("batchId", StreamOps.lastCommittedBatchId(ck).toString)
-      .load().count()
+    val got = StreamOps.readState(spark, ck, "cell").count()
     // one ValueState cell per OCCUPIED shard — the hardest-capped
     // bound in the ingest family: config-sized regardless of corpus
     // volume (documents only ever touch existing cells)

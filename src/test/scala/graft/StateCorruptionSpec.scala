@@ -35,7 +35,7 @@ class StateCorruptionSpec extends AnyFunSuite {
     val ev = Tables.events(spark, sf).select($"user_id",
       expr("CAST(round(value * 100, 0) AS BIGINT)").as("cents"))
     StreamOps.writeChangelogFile(ev, in, 0)
-    StreamOps.withRocksDb(spark) {
+    StreamOps.withConf(spark, StreamOps.RocksDb: _*) {
       spark.readStream
         .schema(org.apache.spark.sql.types.StructType.fromDDL(
           "user_id BIGINT, cents BIGINT"))
@@ -54,7 +54,7 @@ class StateCorruptionSpec extends AnyFunSuite {
         .start().awaitTermination()
     }
     def readStore(path: java.nio.file.Path): Long =
-      StreamOps.withRocksDb(spark) {
+      StreamOps.withConf(spark, StreamOps.RocksDb: _*) {
         spark.read.format("statestore")
           .option("path", path.toString)
           .option("stateVarName", "totals")

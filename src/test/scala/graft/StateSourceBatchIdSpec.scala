@@ -19,7 +19,6 @@ class StateSourceBatchIdSpec extends AnyFunSuite {
   test("statestore read pinned to an older batchId sees the older store version") {
     import spark.implicits._
     val in = java.nio.file.Files.createTempDirectory("graft_tt_in")
-    val ck = java.nio.file.Files.createTempDirectory("graft_tt_ck")
     val cut = to_timestamp(lit("2024-01-16 09:30:00"))
     val ev = Tables.events(spark, sf).select($"user_id", $"ts",
       expr("CAST(round(value * 100, 0) AS BIGINT)").as("cents"))
@@ -27,39 +26,24 @@ class StateSourceBatchIdSpec extends AnyFunSuite {
       ev.filter(c).select($"user_id", $"cents")
     StreamOps.writeChangelogFile(half($"ts" < cut), in, 0)
     StreamOps.writeChangelogFile(half($"ts" >= cut), in, 1)
-    // maxFilesPerTrigger=1 → two committed batches (0 and 1)
-    StreamOps.withRocksDb(spark) {
-      spark.readStream
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(
-          "user_id BIGINT, cents BIGINT"))
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "changelog_*.parquet")
-        .parquet(in.toString)
+    // one file per trigger → two committed batches (0 and 1)
+    val ck = StreamOps.foldIntoStore(
+      StreamOps.changelogStream(spark, in.toString,
+          "user_id BIGINT, cents BIGINT")
         .as[UserDelta]
         .groupByKey(_.user_id)
         .transformWithState(new CountV1Processor,
           org.apache.spark.sql.streaming.TimeMode.None(),
           org.apache.spark.sql.streaming.OutputMode.Update(),
           org.apache.spark.sql.Encoders.product[UserCounts])
-        .toDF()
-        .writeStream.format("noop").outputMode("update")
-        .option("checkpointLocation", ck.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start().awaitTermination()
-    }
-    val last = StreamOps.lastCommittedBatchId(ck.toString)
+        .toDF(), "graft_tt")
+    val last = StreamOps.lastCommittedBatchId(ck)
     assert(last >= 1L, s"expected ≥2 committed batches, commit log ends at $last")
     def readAt(b: Long): Map[Long, (Long, Long)] =
-      StreamOps.withRocksDb(spark) {
-        spark.read.format("statestore")
-          .option("path", ck.toString)
-          .option("stateVarName", "totals")
-          .option("batchId", b.toString)
-          .load()
-          .select($"value.user_id", $"value.n_events", $"value.cents")
-          .collect()
-          .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-      }
+      StreamOps.readState(spark, ck, "totals", Some(b))
+        .select($"value.user_id", $"value.n_events", $"value.cents")
+        .collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     def expect(df: org.apache.spark.sql.DataFrame): Map[Long, (Long, Long)] =
       df.groupBy($"user_id")
         .agg(count(lit(1)).as("n"), sum($"cents").as("c"))

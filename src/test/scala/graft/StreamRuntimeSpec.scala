@@ -1,0 +1,66 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Pins the streaming-run seam: [[graft.streaming.StreamRuntime]] is the
+  * one place that starts a stream, replays a changelog dir, reads a
+  * state store or caches a scratch dir, and its [[withConf]] leaves the
+  * session conf exactly as it found it. */
+class StreamRuntimeSpec extends AnyFunSuite {
+  import graft.streaming.StreamOps
+  lazy val spark = TestSession.spark
+  val sf = TestSession.sf
+
+  test("StreamRuntime.scala holds every streaming-run primitive under src/main") {
+    val seam = "graft/streaming/StreamRuntime.scala"
+    Seq(".writeStream", "\"changelog_*.parquet\"", "format(\"statestore\")",
+      "Trigger.AvailableNow", "TrieMap.empty[String, (Long, String)]")
+      .foreach { needle =>
+        val hits = MainSources.containing(needle).filterNot(_ == seam)
+        assert(hits.isEmpty, s"$needle outside $seam: $hits")
+      }
+    Seq("def withShufflePartitions", "def withRocksDb", "def withAvroState",
+      "graft.stream.partitions").foreach { gone =>
+      assert(MainSources.containing(gone).isEmpty, s"$gone is back")
+    }
+  }
+
+  test("withConf restores set keys and leaves unset keys unset, also on a throw") {
+    val set = "spark.sql.files.maxPartitionBytes"    // GraftSession sets 8m
+    val registered = "spark.sql.streaming.stateStore.encodingFormat"
+    val unregistered = "graft.test.withConf.unset"
+    spark.conf.unset(registered)
+    def explicit = spark.conf.getAll
+    def assertRestored(): Unit = {
+      assert(spark.conf.get(set) == "8m")
+      assert(!explicit.contains(registered), s"$registered left set")
+      assert(!explicit.contains(unregistered), s"$unregistered left set")
+    }
+    val pairs = Seq(set -> "16m", registered -> "avro", unregistered -> "x")
+    val seen = StreamOps.withConf(spark, pairs: _*) {
+      pairs.map { case (k, _) => k -> spark.conf.get(k) }
+    }
+    assert(seen == pairs)
+    assertRestored()
+    val e = intercept[IllegalStateException] {
+      StreamOps.withConf(spark, pairs: _*) {
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(e.getMessage == "body failed")
+    assertRestored()
+  }
+
+  test("runAvailableNow enforces s38's terminal-batchId pin") {
+    StreamOps.streamLateData(spark, sf).collect()
+    assert(StreamOps.lastProgressByName("graft_s38").batchId == 2L)
+    val dir = StreamOps.cachedDir("s38", sf)
+      .getOrElse(fail("no s38 changelog dir recorded"))
+    val e = intercept[IllegalArgumentException] {
+      StreamOps.runToMemory(
+        StreamOps.changelogStream(spark, dir, "ts TIMESTAMP, event_type STRING"),
+        "graft_pin_probe", "append", assertLastBatchId = Some(1L))
+    }
+    assert(e.getMessage.contains("terminal batchId 2 != expected 1"))
+  }
+}
