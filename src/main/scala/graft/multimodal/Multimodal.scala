@@ -229,7 +229,7 @@ object Multimodal {
   def streamMediaDedup(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import graft.streaming.{BandEvent, BandMatch, NearDupProcessor, StreamOps}
-    val dirStr = StreamOps.orderedBatchDir("m08", sfDir, "documents.parquet") {
+    val dirStr = StreamOps.orderedBatchDir("m08", sfDir) {
       val fr = frameSample(spark, sfDir)
         .select($"frame_md5".as("bucket"), $"doc_id").distinct()
       def side(parity: Int, tag: String) = fr

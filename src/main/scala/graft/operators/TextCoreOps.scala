@@ -7,13 +7,13 @@ import graft.Tables
 import graft.functions.Det
 import graft.functions.Det.r4
 
-/** TextOps seam 1/5 (r12 verdict item 4 split, byte-verbatim moves —
-  * see [[TextOps]] for the module scaladoc): shared fixture/cache
-  * plumbing (docsWithToks, the sessionCached localCheckpoint registry)
-  * plus the EXACT-dedup surface — bag-of-words dedup (d01),
-  * normalize-then-dedup canonicalization (d14), fingerprinting (d05),
-  * deterministic sample split (d13), and the snapshot-diff CDC family
-  * (d49). */
+/** The shared document reader every text module builds on
+  * ([[docsWithToks]]), the normalization and fingerprint expressions the
+  * curation pipeline reuses ([[normTextCol]], [[bagHashCol]],
+  * [[Gram3Sql]], [[withSampleSplit]]), and the exact-dedup queries:
+  * bag-of-words dedup (d01), normalize-then-dedup canonicalization
+  * (d14), fingerprinting (d05), deterministic sample split (d13) and
+  * the snapshot diff (d49). See [[TextOps]] for the module scaladoc. */
 trait TextCoreOps {
   private[graft] def docsWithToks(spark: SparkSession, sfDir: String): DataFrame =
     Tables.documents(spark, sfDir)
@@ -92,71 +92,6 @@ trait TextCoreOps {
           .as("min_shingle_md5"))
       .orderBy($"doc_id")
   }
-
-  /** MinHash signatures (16 md5-permutations over distinct 3-token
-    * shingles) + LSH banding (4 bands × 4 rows): candidate pairs come
-    * ONLY from full band-hash collisions, estimated Jaccard = matching
-    * signature fraction over candidates. Shingling (not raw tokens) is
-    * what makes MinHash discriminative when the vocabulary is small
-    * relative to the corpus.
-    *
-    * Scale design: the self-join key is (band, band_hash) — all 4 rows
-    * of a band must collide to create a candidate, so bucket sizes stay
-    * near-constant and the join is linear in candidates, never the
-    * near-quadratic "any 1/16 seeds collide" blowup. The verify step
-    * compares the two 16-entry signature arrays with zip_with inside
-    * codegen — no flat (doc, seed, h) table is ever shuffled. */
-  // Materialized intermediates shared by every consumer in the session
-  // (d06 builds signatures + pairs; d12 reuses the pairs for
-  // clustering): the checkpoint blocks already live on the executors,
-  // so recomputing the pipeline per caller would only burn CPU. Each
-  // entry holds the owning session strongly, so its identity hash
-  // cannot be recycled while the entry lives, and lookups re-check the
-  // session by REFERENCE (`eq`) — a different live session that
-  // collides on hash recomputes instead of receiving a foreign
-  // DataFrame. Entries of stopped contexts are evicted on every
-  // access, so a long-lived JVM hosting many sessions can't pin dead
-  // sessions' checkpoint blocks.
-  private val dfCache = scala.collection.concurrent.TrieMap
-    .empty[(Int, String, String), (SparkSession, Long, Any)]
-
-  /** Combined mtime stamp of the corpus fixtures an entry may derive
-    * from (documents / embeddings / events under sfDir) — the
-    * skewStatsCache/cachedScratchDir invalidation discipline applied
-    * to the whole dfCache (r10 ADVICE: ivf_assigned had no fixture
-    * guard): a regenerated fixture at the same path changes the stamp,
-    * so the stale entry is rebuilt instead of served. Missing files
-    * stamp as 0, which still changes when the file appears. */
-  private def fixtureStamp(sfDir: String): Long =
-    Seq("documents", "embeddings", "events").foldLeft(0L) { (acc, t) =>
-      acc * 1000003L +
-        new java.io.File(s"$sfDir/$t.parquet").lastModified()
-    }
-
-  /** The session-keyed cache discipline, generic in the value (one
-    * definition — DataFrames go through [[cached]] which adds the
-    * localCheckpoint; non-DF artifacts like the BPE run pair use this
-    * directly). Entries are guarded by [[fixtureStamp]]: a stale stamp
-    * rebuilds in place (the put overwrites, so at most one entry per
-    * key ever lives). */
-  private[operators] def sessionCached[A](spark: SparkSession, sfDir: String,
-      what: String)(build: => A): A = {
-    dfCache.filterInPlace { case (_, (s, _, _)) => !s.sparkContext.isStopped }
-    val stamp = fixtureStamp(sfDir)
-    val key = (System.identityHashCode(spark), sfDir, what)
-    dfCache.get(key)
-      .filter { case (s, st, _) => (s eq spark) && st == stamp }
-      .map(_._3.asInstanceOf[A])
-      .getOrElse {
-        val v = build
-        dfCache.put(key, (spark, stamp, v))
-        v
-      }
-  }
-
-  private[operators] def cached(spark: SparkSession, sfDir: String, what: String)(
-      build: => DataFrame): DataFrame =
-    sessionCached(spark, sfDir, what)(build.localCheckpoint())
 
   /** Deterministic stratified sampling + train/val/test split — the
     * training-data-mixing staple, done the way it scales: NO RNG and NO

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{FixtureCache, Tables}
 import graft.functions.Det
 import graft.functions.Det.r4
 
@@ -223,10 +223,12 @@ trait TextStatsOps extends TextCoreOps {
     * (fertility over the final corpus). The final corpus comes back
     * UN-checkpointed: a d36-only session keeps the skip optimization
     * (nothing materializes a table only the final recount reads);
-    * d48's first access checkpoints it through [[cached]]. */
+    * d48's first access checkpoints it through
+    * [[graft.FixtureCache.checkpointed]]. */
   private def bpeRunCached(spark: SparkSession,
       sfDir: String): (DataFrame, DataFrame) =
-    sessionCached(spark, sfDir, "bpe_run") {
+    // bound: ≤ 3 summary rows plus one checkpointed (doc_id, pos, tok, nxt) row per token
+    FixtureCache.perSession(spark, sfDir, "bpe_run") {
       bpeRun(spark, docsWithToks(spark, sfDir))
     }
 
@@ -317,7 +319,7 @@ trait TextStatsOps extends TextCoreOps {
             // the last round's rewrite feeds ONLY the final pair
             // recount on this path — computing it inside that count
             // job beats materializing a checkpoint nothing else reads
-            // (d48 checkpoints its own read through `cached`)
+            // (d48 checkpoints its own read as "bpe_final")
             withNext =
               if (it < nRounds) rewritten.localCheckpoint() else rewritten
         }
@@ -355,7 +357,8 @@ trait TextStatsOps extends TextCoreOps {
     // the shared run's final corpus, checkpointed on first d48 access
     // (recomputes at most the final rewrite round from the round-2
     // checkpoint, once) — d36-only sessions never pay this
-    val corpus = cached(spark, sfDir, "bpe_final") {
+    // bound: one (doc_id, pos, tok, nxt) row per final token unit
+    val corpus = FixtureCache.checkpointed(spark, sfDir, "bpe_final") {
       bpeRunCached(spark, sfDir)._2
     }
     val perDoc = corpus.groupBy($"doc_id")

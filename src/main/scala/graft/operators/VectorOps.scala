@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{FixtureCache, Tables}
 import graft.functions.Det
 import org.apache.spark.sql.graft.VectorExpressions
 
@@ -265,7 +265,9 @@ object VectorOps {
   // materialized once per session: v08 declares the pairs, v10 clusters
   // them — same sharing pattern as d06/d12
   private[operators] def lshPairs(spark: SparkSession, sfDir: String): DataFrame =
-    TextOps.cached(spark, sfDir, "v08_pairs")(lshNearDupUncached(spark, sfDir))
+    // bound: one row per verified pair of ≤ n·8·LshBlk/2 candidates, n = vectors
+    FixtureCache.checkpointed(spark, sfDir, "v08_pairs")(
+      lshNearDupUncached(spark, sfDir))
 
   def lshNearDup(spark: SparkSession, sfDir: String): DataFrame =
     // the total order is applied OUTSIDE the checkpoint: an eager
@@ -468,7 +470,8 @@ object VectorOps {
     // consumer (v07/v22/v23/v25/v26/v28/v30, s34's batch face) reads
     // one materialization instead of re-deriving the corpus×centroid
     // argmax per query
-    val assigned = TextOps.cached(spark, sfDir, "ivf_assigned") {
+    // bound: one (vec_id, v, cell) row per embedding
+    val assigned = FixtureCache.checkpointed(spark, sfDir, "ivf_assigned") {
       e.crossJoin(broadcast(cent))
         .withColumn("cos", call_function("graft_cosine", $"v", $"cv"))
         .withColumn("rn", row_number().over(wAssign))
@@ -538,31 +541,14 @@ object VectorOps {
     * index whose probe half is v07. Argmin uses
     * dist² − ‖v‖² = ‖c‖² − 2·v·c (the per-vector ‖v‖² term can't change
     * the argmin, so it is never computed). */
-  // v09 and v19 both need the trained model; train once per
-  // (session, sfDir) — same eviction discipline as TextOps.dfCache
-  // keyed on the SparkSession REFERENCE (default Object equality), not
-  // its identity hash — colliding hashes of two live sessions would
-  // perpetually evict each other's entry
-  private val kmCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String),
-      (Long, (DataFrame, Seq[(Long, Array[Double])]))]
-
   /** The Lloyd loop shared by v09 (centroid report) and v19
     * (silhouette): returns the final assignment frame and the final
-    * 6-dp-rounded centroids, cached per session so the two queries
-    * train once. Guarded by the embeddings fixture's mtime (the
-    * dfCache/skewStatsCache invalidation discipline): a regenerated
-    * fixture at the same path retrains instead of serving a stale
-    * model. */
+    * 6-dp-rounded centroids, held per session in [[FixtureCache]] so
+    * the two queries train once. */
   private def kmeansCore(spark: SparkSession, sfDir: String)
-      : (DataFrame, Seq[(Long, Array[Double])]) = {
-    kmCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    val stamp = new java.io.File(s"$sfDir/embeddings.parquet").lastModified()
-    kmCache.updateWith((spark, sfDir)) {
-      case Some((st, v)) if st == stamp => Some((st, v))
-      case _ => Some((stamp, kmeansTrain(spark, sfDir)))
-    }.get._2
-  }
+      : (DataFrame, Seq[(Long, Array[Double])]) =
+    // bound: KmK centroids of dim doubles; the assignment frame is an unmaterialized plan
+    FixtureCache.perSession(spark, sfDir, "kmeans")(kmeansTrain(spark, sfDir))
 
   private def kmeansTrain(spark: SparkSession, sfDir: String)
       : (DataFrame, Seq[(Long, Array[Double])]) = {
@@ -714,19 +700,14 @@ object VectorOps {
       .limit(10)
   }
 
-  private val pqCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Map[(Int, Long), Array[Double]]]
-
   /** PQ sub-codebook training — the v13 model, factored out so the
-    * composed IVF-PQ index (v22) trains the SAME codebooks, and cached
-    * per (session, sfDir) so they train once (the kmCache discipline:
-    * stopped-session entries evicted on access). Returns
+    * composed IVF-PQ index (v22) trains the SAME codebooks, and held
+    * per session in [[FixtureCache]] so they train once. Returns
     * (subspace, codeword) → 6-dp-rounded centroid slice. */
   private def pqModel(spark: SparkSession,
-      sfDir: String): Map[(Int, Long), Array[Double]] = {
-    pqCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    pqCache.getOrElseUpdate((spark, sfDir), pqTrain(spark, sfDir))
-  }
+      sfDir: String): Map[(Int, Long), Array[Double]] =
+    // bound: PqS·PqK centroid slices of PqD doubles
+    FixtureCache.perSession(spark, sfDir, "pq")(pqTrain(spark, sfDir))
 
   private def pqTrain(spark: SparkSession,
       sfDir: String): Map[(Int, Long), Array[Double]] = {

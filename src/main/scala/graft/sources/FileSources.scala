@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.Tables
+import graft.streaming.StreamOps
 import graft.functions.Det.dsum
 
 /** Non-parquet file sources: JSON-lines and CSV read paths with explicit
@@ -12,7 +13,7 @@ import graft.functions.Det.dsum
   * is the interchange format every ingest pipeline still meets).
   *
   * Each declared query round-trips the events table through the format
-  * once (written to scratch, mtime-cached per fixture like the streaming
+  * once (written to a scratch dir cached per fixture like the streaming
   * flush source) and computes its aggregate FROM THE ROUND-TRIPPED COPY,
   * so what the oracle (running on the original parquet) verifies is the
   * serializer/parser fidelity itself: timestamps to the microsecond
@@ -35,33 +36,32 @@ object FileSources {
     "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, " +
       "value DOUBLE, props STRING"
 
-  // (sfDir, fmt) -> (fixture mtime, scratch dir); rebuilt if the fixture
-  // is regenerated in place, deleted on JVM exit via StreamOps' hook
-  private val dirs =
-    scala.collection.concurrent.TrieMap.empty[(String, String), (Long, String)]
+  /** A scratch copy of the fixture, built once per sfDir by `write` into
+    * a `graft_src_<tag>` dir: shared across sessions, kept by
+    * StreamOps.reclaimScratch, deleted on JVM exit. */
+  private def scratchCopy(tag: String, sfDir: String)(
+      write: String => Unit): String =
+    StreamOps.cachedScratchDir(s"src_$tag", sfDir) {
+      val dir = StreamOps.newTempDir(s"graft_src_$tag").toString
+      write(dir)
+      dir
+    }
 
   /** events → fmt on scratch (once per fixture) → read back with the
     * explicit schema. Columns are selected in schema order before the
     * write because CSV-with-schema binds by position, not header name. */
   private def roundTrip(spark: SparkSession, sfDir: String,
       fmt: String): DataFrame = {
-    val srcMtime = new java.io.File(s"$sfDir/events.parquet").lastModified()
-    val key = (sfDir, fmt)
-    val cached = dirs.get(key).filter(_._1 == srcMtime)
-    val dirStr = cached.map(_._2).getOrElse(dirs.updateWith(key) { _ =>
-      Some((srcMtime, {
-        val dir = graft.streaming.StreamOps.newTempDir(s"graft_src_$fmt")
-        val w = Tables.events(spark, sfDir)
-          .select("event_id", "ts", "user_id", "event_type", "value", "props")
-          .write.mode("overwrite").option("timestampFormat", TsFmt)
-        fmt match {
-          case "json" => w.json(dir.toString)
-          case "csv"  => w.option("header", "true").csv(dir.toString)
-          case "orc"  => w.orc(dir.toString)
-        }
-        dir.toString
-      }))
-    }.get._2)
+    val dirStr = scratchCopy(fmt, sfDir) { dir =>
+      val w = Tables.events(spark, sfDir)
+        .select("event_id", "ts", "user_id", "event_type", "value", "props")
+        .write.mode("overwrite").option("timestampFormat", TsFmt)
+      fmt match {
+        case "json" => w.json(dir)
+        case "csv"  => w.option("header", "true").csv(dir)
+        case "orc"  => w.orc(dir)
+      }
+    }
     val r = spark.read.schema(StructType.fromDDL(EventsDdl))
       .option("timestampFormat", TsFmt)
     fmt match {
@@ -113,25 +113,17 @@ object FileSources {
   /** A deliberately dirty JSON-lines copy of events: every row whose
     * event_id is divisible by 97 is written as a truncated non-JSON
     * line. Cached like the clean round-trip dirs. */
-  private[graft] def dirtyJsonDir(spark: SparkSession, sfDir: String): String = {
-    val srcMtime = new java.io.File(s"$sfDir/events.parquet").lastModified()
-    val key = (sfDir, "dirty")
-    dirs.get(key).filter(_._1 == srcMtime).map(_._2).getOrElse(
-      dirs.updateWith(key) { _ =>
-        Some((srcMtime, {
-          val dir = graft.streaming.StreamOps.newTempDir("graft_src_dirty")
-          Tables.events(spark, sfDir)
-            .select(when(col("event_id") % 97 === 0, lit("{broken"))
-              .otherwise(to_json(
-                struct(col("event_id"), col("ts"), col("user_id"),
-                  col("event_type"), col("value"), col("props")),
-                java.util.Map.of("timestampFormat", TsFmt)))
-              .as("value"))
-            .write.mode("overwrite").text(dir.toString)
-          dir.toString
-        }))
-      }.get._2)
-  }
+  private[graft] def dirtyJsonDir(spark: SparkSession, sfDir: String): String =
+    scratchCopy("dirty", sfDir) { dir =>
+      Tables.events(spark, sfDir)
+        .select(when(col("event_id") % 97 === 0, lit("{broken"))
+          .otherwise(to_json(
+            struct(col("event_id"), col("ts"), col("user_id"),
+              col("event_type"), col("value"), col("props")),
+            java.util.Map.of("timestampFormat", TsFmt)))
+          .as("value"))
+        .write.mode("overwrite").text(dir)
+    }
 
   /** Corrupt-record handling (PERMISSIVE mode): parse the dirty JSON
     * with an explicit schema plus a `_corrupt_record` column — malformed
@@ -162,22 +154,15 @@ object FileSources {
     * null-filling each file's missing ones; the oracle reproduces the
     * split with a parity CASE over the original table. */
   def mergeSchemaAgg(spark: SparkSession, sfDir: String): DataFrame = {
-    val srcMtime = new java.io.File(s"$sfDir/events.parquet").lastModified()
-    val key = (sfDir, "evolve")
-    val dirStr = dirs.get(key).filter(_._1 == srcMtime).map(_._2).getOrElse(
-      dirs.updateWith(key) { _ =>
-        Some((srcMtime, {
-          val dir = graft.streaming.StreamOps.newTempDir("graft_src_evolve")
-          val ev = Tables.events(spark, sfDir)
-          ev.filter(col("event_id") % 2 === 0)
-            .select(col("event_id"), col("user_id"), col("event_type"))
-            .write.parquet(s"$dir/gen=0")
-          ev.filter(col("event_id") % 2 =!= 0)
-            .select(col("event_id"), col("ts"), col("value"))
-            .write.parquet(s"$dir/gen=1")
-          dir.toString
-        }))
-      }.get._2)
+    val dirStr = scratchCopy("evolve", sfDir) { dir =>
+      val ev = Tables.events(spark, sfDir)
+      ev.filter(col("event_id") % 2 === 0)
+        .select(col("event_id"), col("user_id"), col("event_type"))
+        .write.parquet(s"$dir/gen=0")
+      ev.filter(col("event_id") % 2 =!= 0)
+        .select(col("event_id"), col("ts"), col("value"))
+        .write.parquet(s"$dir/gen=1")
+    }
     spark.read.option("mergeSchema", "true").parquet(dirStr)
       .groupBy(coalesce(col("event_type"), lit("_newgen")).as("bucket"))
       .agg(count(lit(1)).as("n"),
@@ -203,21 +188,11 @@ object FileSources {
   }
 
   private[graft] def partitionedRead(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    val srcMtime = new java.io.File(s"$sfDir/events.parquet").lastModified()
-    val key = (sfDir, "parted")
-    val dirStr = dirs.get(key).filter(_._1 == srcMtime).map(_._2).getOrElse(
-      dirs.updateWith(key) { _ =>
-        Some((srcMtime, {
-          val dir = graft.streaming.StreamOps.newTempDir("graft_src_parted")
-          Tables.events(spark, sfDir)
-            .write.mode("overwrite").partitionBy("event_type")
-            .parquet(dir.toString)
-          dir.toString
-        }))
-      }.get._2)
-    spark.read.parquet(dirStr)
-  }
+      sfDir: String): DataFrame =
+    spark.read.parquet(scratchCopy("parted", sfDir) { dir =>
+      Tables.events(spark, sfDir)
+        .write.mode("overwrite").partitionBy("event_type").parquet(dir)
+    })
 
   /** Bucketed co-located join (e30): orders and customer are written
     * ONCE as bucketed tables (8 buckets on the join key, sorted within
@@ -236,22 +211,21 @@ object FileSources {
       sfDir: String): (String, String) = {
     val to = bucketedName("orders", sfDir)
     val tc = bucketedName("customer", sfDir)
-    val srcMtime = new java.io.File(s"$sfDir/orders.parquet").lastModified()
-    val key = (sfDir, "bucketed")
-    val fresh = dirs.get(key).exists(_._1 == srcMtime) &&
-      spark.catalog.tableExists(to) && spark.catalog.tableExists(tc)
-    if (!fresh) dirs.updateWith(key) { _ =>
+    // (re)register both tables over `dir`; also when a cached dir's
+    // tables are gone from the catalog
+    def save(dir: String): Unit = {
       spark.sql(s"DROP TABLE IF EXISTS $to")
       spark.sql(s"DROP TABLE IF EXISTS $tc")
-      val dir = graft.streaming.StreamOps.newTempDir("graft_src_bucketed")
       Tables.orders(spark, sfDir).write.mode("overwrite")
         .format("parquet").option("path", s"$dir/orders")
         .bucketBy(8, "o_custkey").sortBy("o_custkey").saveAsTable(to)
       Tables.customer(spark, sfDir).write.mode("overwrite")
         .format("parquet").option("path", s"$dir/customer")
         .bucketBy(8, "c_custkey").sortBy("c_custkey").saveAsTable(tc)
-      Some((srcMtime, dir.toString))
     }
+    val dir = scratchCopy("bucketed", sfDir)(save)
+    if (!(spark.catalog.tableExists(to) && spark.catalog.tableExists(tc)))
+      save(dir)
     (to, tc)
   }
 

@@ -112,7 +112,7 @@ trait StreamAggOps extends StreamRuntime {
     * scratch dir. */
   def streamSinkRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.functions.Det.dsum
-    val dirStr = cachedScratchDir("s33", sfDir, "events.parquet") {
+    val dirStr = cachedScratchDir("s33", sfDir) {
         val out = newTempDir("graft_s33_sink")
         val ev = eventsStreamWithFlush(spark, sfDir)
           .withWatermark("ts", "10 minutes")
@@ -256,7 +256,7 @@ trait StreamAggOps extends StreamRuntime {
     * produces different rows. */
   def streamTopN(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dirStr = orderedBatchDir("s18", sfDir, "events.parquet") {
+    val dirStr = orderedBatchDir("s18", sfDir) {
       val ev = graft.Tables.events(spark, sfDir)
         .select(col("event_type"), col("event_id"), col("value"))
       (0 until 3).map(i => ev.filter(col("event_id") % 3 === i))
@@ -542,7 +542,7 @@ trait StreamAggOps extends StreamRuntime {
     * limit / backpressure control does to a Kafka consumer) may never
     * change the answer, only the emission schedule. */
   def streamBoundedTrigger(spark: SparkSession, sfDir: String): DataFrame = {
-    val dirStr = orderedBatchDir("s23", sfDir, "events.parquet") {
+    val dirStr = orderedBatchDir("s23", sfDir) {
       val ev = graft.Tables.events(spark, sfDir)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"), col("props"))
@@ -597,7 +597,7 @@ trait StreamAggOps extends StreamRuntime {
     * pass over events. */
   def streamLateData(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dirStr = orderedBatchDir("s38", sfDir, "events.parquet") {
+    val dirStr = orderedBatchDir("s38", sfDir) {
       val ev = graft.Tables.events(spark, sfDir)
         .select($"ts", $"event_type", $"event_id")
       (0 until 3).map(i => ev.filter($"event_id" % 3 === i)

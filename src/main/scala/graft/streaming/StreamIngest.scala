@@ -33,7 +33,7 @@ trait StreamIngestOps extends StreamRuntime {
     * occupied bucket), and each incoming doc costs 4 point lookups. */
   def streamNearDup(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dirStr = orderedBatchDir("s24", sfDir, "documents.parquet") {
+    val dirStr = orderedBatchDir("s24", sfDir) {
       val bands = graft.operators.TextOps.lshBands(spark, sfDir)
         .select(concat_ws(":", col("band"), col("bh")).as("bucket"),
           col("doc_id"))
@@ -91,7 +91,7 @@ trait StreamIngestOps extends StreamRuntime {
     * nested-loops. */
   def streamEmbedNearDup(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dirStr = orderedBatchDir("s47", sfDir, "embeddings.parquet") {
+    val dirStr = orderedBatchDir("s47", sfDir) {
       val bands = graft.operators.VectorOps.bandCodes(spark, sfDir)
         .select(concat_ws(":", col("band"), col("code")).as("bucket"),
           col("vec_id"))
@@ -239,7 +239,7 @@ trait StreamIngestOps extends StreamRuntime {
     import spark.implicits._
     val DivCap = graft.operators.VectorOps.DivCap
     val e = graft.operators.VectorOps.embDouble(spark, sfDir)
-    val ckStr = cachedScratchDir("s48", sfDir, "embeddings.parquet") {
+    val ckStr = cachedScratchDir("s48", sfDir) {
       val in = newTempDir("graft_s48_in")
       val src = e.select($"vec_id", $"v")
       def half(i: Int) = src.filter(pmod($"vec_id", lit(2L)) === i)
@@ -306,7 +306,7 @@ trait StreamIngestOps extends StreamRuntime {
     import spark.implicits._
     val DivCap = graft.operators.VectorOps.DivCap
     val TombK = graft.operators.VectorOps.TombK
-    val ckStr = cachedScratchDir("s50", sfDir, "embeddings.parquet") {
+    val ckStr = cachedScratchDir("s50", sfDir) {
       val in = newTempDir("graft_s50_in")
       // the erasure list: the full pipeline's top-TombK served ids
       // (bounded collect — 5 rows), with their assigned cells
@@ -384,7 +384,7 @@ trait StreamIngestOps extends StreamRuntime {
     * path reads ≤ d·w rows and joins d rows per probed key. */
   def streamCountMin(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val ckStr = cachedScratchDir("s49", sfDir, "events.parquet") {
+    val ckStr = cachedScratchDir("s49", sfDir) {
       val in = newTempDir("graft_s49_in")
       val ev = graft.Tables.events(spark, sfDir)
         .select($"user_id", $"event_id")
@@ -415,7 +415,7 @@ trait StreamIngestOps extends StreamRuntime {
     * top-20 is a TakeOrdered over only the emitted scores. */
   def streamRollingAnomaly(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dirStr = orderedBatchDir("s30", sfDir, "events.parquet") {
+    val dirStr = orderedBatchDir("s30", sfDir) {
       val ev = graft.Tables.events(spark, sfDir)
         .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
           col("event_id"),
@@ -468,7 +468,7 @@ trait StreamIngestOps extends StreamRuntime {
     * only emitted points. */
   def streamCusum(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dirStr = orderedBatchDir("s31", sfDir, "events.parquet") {
+    val dirStr = orderedBatchDir("s31", sfDir) {
       val ev = graft.Tables.events(spark, sfDir)
         .select(col("user_id"), col("ts"),
           unix_micros(col("ts")).as("ts_us"), col("event_id"),
@@ -521,7 +521,7 @@ trait StreamIngestOps extends StreamRuntime {
     * user per batch, not per event. */
   def streamFunnel(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dirStr = orderedBatchDir("s36", sfDir, "events.parquet") {
+    val dirStr = orderedBatchDir("s36", sfDir) {
       val ev = graft.Tables.events(spark, sfDir)
         .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
           col("event_id"), col("event_type"))
@@ -567,7 +567,7 @@ trait StreamIngestOps extends StreamRuntime {
     * expression. */
   def streamAttribution(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dirStr = orderedBatchDir("s37", sfDir, "events.parquet") {
+    val dirStr = orderedBatchDir("s37", sfDir) {
       val ev = graft.Tables.events(spark, sfDir)
         .withColumn("kb",
           expr("try_cast(get_json_object(props, '$.k') AS BIGINT) % 4"))
@@ -619,7 +619,7 @@ trait StreamIngestOps extends StreamRuntime {
     * ingest shape of s24/s26. */
   def streamCdcDiff(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dirStr = orderedBatchDir("s39", sfDir, "documents.parquet") {
+    val dirStr = orderedBatchDir("s39", sfDir) {
       val (old, nw) = graft.operators.TextOps.snapshotSides(spark, sfDir)
       Seq(old.withColumn("side", lit("O")),
         nw.withColumn("side", lit("N")))
@@ -659,7 +659,7 @@ trait StreamIngestOps extends StreamRuntime {
   def streamNovelty(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val shingles = graft.operators.TextOps.distinctShingles(spark, sfDir)
-    val dirStr = orderedBatchDir("s26", sfDir, "documents.parquet") {
+    val dirStr = orderedBatchDir("s26", sfDir) {
       def side(parity: Int, tag: String) = shingles
         .filter(col("doc_id") % 2 === parity)
         .select(col("s").as("bucket"), lit(tag).as("side"), col("doc_id"))
@@ -705,7 +705,7 @@ trait StreamIngestOps extends StreamRuntime {
     * ≤ touched-terms rows per batch). */
   def streamInvertedIndex(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dirStr = orderedBatchDir("s29", sfDir, "documents.parquet") {
+    val dirStr = orderedBatchDir("s29", sfDir) {
       val tf = graft.operators.TextOps.docsWithToks(spark, sfDir)
         .select(col("doc_id"), explode(col("toks")).as("term"))
         .groupBy(col("term"), col("doc_id"))
@@ -781,7 +781,7 @@ trait StreamIngestOps extends StreamRuntime {
   def streamBinnedMedian(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val B = graft.operators.Events.MadBinCents
-    val ckStr = cachedScratchDir("s46", sfDir, "events.parquet") {
+    val ckStr = cachedScratchDir("s46", sfDir) {
       val in = newTempDir("graft_s46_in")
       val ev = graft.Tables.events(spark, sfDir)
         .select($"event_type", $"event_id",
@@ -838,7 +838,7 @@ trait StreamIngestOps extends StreamRuntime {
     * between the faces flips the hash. */
   def streamShardManifest(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val ckStr = cachedScratchDir("s51", sfDir, "documents.parquet") {
+    val ckStr = cachedScratchDir("s51", sfDir) {
       val in = newTempDir("graft_s51_in")
       val docs = graft.Tables.documents(spark, sfDir)
         .select($"doc_id", graft.operators.TextOps.shardOf.as("shard"),

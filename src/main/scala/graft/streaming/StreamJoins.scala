@@ -266,7 +266,7 @@ trait StreamJoinOps extends StreamRuntime {
     * rows are absent. */
   def streamFkChangelog(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dirStr = orderedBatchDir("s10", sfDir, "customer.parquet") {
+    val dirStr = orderedBatchDir("s10", sfDir) {
       val nation = graft.Tables.nation(spark, sfDir)
       val customer = graft.Tables.customer(spark, sfDir)
       def rightVer(nameExpr: org.apache.spark.sql.Column) = nation.select(
@@ -308,7 +308,7 @@ trait StreamJoinOps extends StreamRuntime {
     * the rows. Complements s14, which pins the snapshot-join algebra. */
   def streamTableUpdateJoin(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dirStr = orderedBatchDir("s15", sfDir, "events.parquet") {
+    val dirStr = orderedBatchDir("s15", sfDir) {
       val nation = graft.Tables.nation(spark, sfDir)
       val ev = graft.Tables.events(spark, sfDir).select(
         (col("user_id") % 25).as("nk"), lit("S").as("side"),
@@ -383,7 +383,7 @@ trait StreamJoinOps extends StreamRuntime {
     * unmatched probe all change the result. */
   def streamAsOfJoin(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dirStr = orderedBatchDir("s25", sfDir, "events.parquet") {
+    val dirStr = orderedBatchDir("s25", sfDir) {
       val ev = graft.Tables.events(spark, sfDir)
       def shape(tpe: String, tag: String) = ev
         .filter(col("event_type") === tpe)

@@ -85,16 +85,8 @@ trait StreamRuntime {
     val raw = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet")
       .parquet(sfDir)
-    normalizeTs(raw)
+    graft.Tables.normalizeTs(raw)
   }
-
-  /** Land `ts` on TIMESTAMP (LTZ) whatever the fixture's physical type
-    * is — delegates to [[graft.Tables.normalizeTs]], the single
-    * implementation of the two-generation contract (incl. its UTC
-    * session-timezone guard), so batch and stream reads can never
-    * drift. */
-  private def normalizeTs(df: DataFrame): DataFrame =
-    graft.Tables.normalizeTs(df)
 
   /** The events file stream plus one far-future "__flush" row in a
     * second file. A finite stream's watermark only reaches
@@ -122,7 +114,7 @@ trait StreamRuntime {
       catch { case _: Throwable => () })
   }
 
-  /** Dirs a [[cachedScratchDir]] cache still points at — these survive
+  /** Dirs [[cachedScratchDir]] has handed out — these survive
     * [[reclaimScratch]]; everything else tracked in [[tempDirs]] is
     * per-run scratch (terminated-stream checkpoints, sink staging)
     * that only the JVM-exit hook would otherwise reclaim. */
@@ -170,7 +162,7 @@ trait StreamRuntime {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$sfDir/events.parquet"
     val raw = spark.read.parquet(path)
-    val dirStr = cachedScratchDir("flush", sfDir, "events.parquet") {
+    val dirStr = cachedScratchDir("flush", sfDir) {
       val dir = newTempDir("graft_stream_flush")
       // One flush row PER event type: Catalyst pushes deterministic
       // event_type predicates below the EventTimeWatermark operator, so a
@@ -199,7 +191,7 @@ trait StreamRuntime {
     val stream = spark.readStream.schema(raw.schema)
       .option("pathGlobFilter", "*.parquet")
       .parquet(dirStr)
-    normalizeTs(stream)
+    graft.Tables.normalizeTs(stream)
   }
 
   /** Terminal progress of the most recent [[runAvailableNow]] run, by
@@ -369,38 +361,25 @@ trait StreamRuntime {
       .option("batchId", batchId.getOrElse(lastCommittedBatchId(ck)).toString)
       .load()
 
-  /** Fixture-derived scratch dirs, keyed by (tag, sfDir): the fixture's
-    * mtime at build time and the dir. The dirs derive purely from the
-    * fixture file, so they are shared across sessions and rebuilt if
-    * the file is regenerated in place; they are deleted on JVM exit. */
-  private val scratchDirs = scala.collection.concurrent
-    .TrieMap.empty[(String, String), (Long, String)]
-
-  /** Cache a derived scratch dir per (tag, sfDir, source-fixture mtime) —
-    * THE idiom for every fixture-derived scratch location (flush dirs,
-    * changelog dirs, checkpoints, sink output): rebuild iff the fixture
-    * was regenerated in place. `tag` names the query that owns the dir.
-    * NOTE: `updateWith`'s remapping function may in principle re-run
-    * under contention; Bench and Verify invoke queries single-threaded,
-    * and a re-run would only build a duplicate scratch dir (both
-    * tracked for exit cleanup), never corrupt one. */
-  private[graft] def cachedScratchDir(tag: String, sfDir: String,
-      srcFixture: String)(build: => String): String = {
-    val key = (tag, sfDir)
-    val srcMtime = new java.io.File(s"$sfDir/$srcFixture").lastModified()
-    val dir = scratchDirs.get(key).filter(_._1 == srcMtime).map(_._2)
-      .getOrElse(scratchDirs.updateWith(key) { _ =>
-        Some((srcMtime, build))
-      }.get._2)
-    pinnedDirs.add(dir) // survives reclaimScratch while this cache lives
+  /** A fixture-derived scratch dir (flush dirs, changelog dirs,
+    * checkpoints, sink output, file-format copies), built once per
+    * (tag, sfDir) and shared across sessions through
+    * [[graft.FixtureCache.shared]], which rebuilds it if the fixture is
+    * regenerated in place. `tag` names the query or source that owns
+    * the dir. The dir is pinned, so [[reclaimScratch]] keeps it while
+    * the cache may serve it; it is deleted on JVM exit. */
+  private[graft] def cachedScratchDir(tag: String, sfDir: String)(
+      build: => String): String = {
+    val dir = graft.FixtureCache.shared(sfDir, tag)(build)
+    pinnedDirs.add(dir)
     dir
   }
 
-  /** The dir [[cachedScratchDir]] holds for (tag, sfDir), if built this
-    * session — how specs find a query's checkpoint to read its store
+  /** The dir [[cachedScratchDir]] holds for (tag, sfDir), if built in
+    * this JVM — how specs find a query's checkpoint to read its store
     * out-of-band. */
   private[graft] def cachedDir(tag: String, sfDir: String): Option[String] =
-    scratchDirs.get((tag, sfDir)).map(_._2)
+    graft.FixtureCache.sharedIfBuilt[String](sfDir, tag)
 
   /** Write `df` as exactly ONE uncompressed parquet FILE at `dst` (not
     * a directory): coalesce(1) into a scratch dir, move the single part
@@ -436,10 +415,10 @@ trait StreamRuntime {
   /** Materialize `batches` as ONE parquet file each, mtime-ordered, so
     * [[changelogStream]] replays them as that exact micro-batch sequence
     * — the harness's stand-in for ordered Kafka topic offsets. Cached
-    * per (tag, sfDir, fixture mtime) by [[cachedScratchDir]]. */
-  private[graft] def orderedBatchDir(tag: String, sfDir: String,
-      srcFixture: String)(batches: => Seq[DataFrame]): String =
-    cachedScratchDir(tag, sfDir, srcFixture) {
+    * per (tag, sfDir) by [[cachedScratchDir]]. */
+  private[graft] def orderedBatchDir(tag: String, sfDir: String)(
+      batches: => Seq[DataFrame]): String =
+    cachedScratchDir(tag, sfDir) {
       val dir = newTempDir(s"graft_$tag")
       // each batch is its own Spark job — run them concurrently
       // (the scheduler interleaves them across the idle cores) and

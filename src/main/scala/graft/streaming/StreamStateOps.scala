@@ -40,7 +40,7 @@ trait StreamStateOps extends StreamRuntime {
   private[graft] def runForeachExactlyOnce(spark: SparkSession,
       sfDir: String): (DataFrame, ForeachEvidence) = {
     import spark.implicits._
-    val dirStr = orderedBatchDir("s41", sfDir, "events.parquet") {
+    val dirStr = orderedBatchDir("s41", sfDir) {
       val ev = graft.Tables.events(spark, sfDir)
         .select($"event_type", $"value", $"event_id")
       (0 until 3).map(i => ev.filter($"event_id" % 3 === i)
@@ -135,7 +135,7 @@ trait StreamStateOps extends StreamRuntime {
     import spark.implicits._
     // the changelog consumer is irrelevant here — the STORE is the
     // product (a real deployment tees this to Kafka/a sink)
-    val ckStr = cachedScratchDir("s42", sfDir, "events.parquet") {
+    val ckStr = cachedScratchDir("s42", sfDir) {
       foldIntoStore(eventsStream(spark, sfDir).as[EventRow]
         .groupByKey(_.user_id)
         .transformWithState(new LatestEventProcessor,
@@ -182,7 +182,7 @@ trait StreamStateOps extends StreamRuntime {
     val cut = to_timestamp(lit("2024-01-16 09:30:00"))
     // the s31 cents discipline: double→cents in each engine's round()
     val centsCol = expr("CAST(round(value * 100, 0) AS BIGINT)")
-    val ckStr = cachedScratchDir("s43", sfDir, "events.parquet") {
+    val ckStr = cachedScratchDir("s43", sfDir) {
       // the offline snapshot: batch per-user totals over the first half
       val snapshot = graft.Tables.events(spark, sfDir)
         .filter($"ts" < cut)
@@ -227,7 +227,7 @@ trait StreamStateOps extends StreamRuntime {
     import spark.implicits._
     val cut = to_timestamp(lit("2024-01-16 09:30:00"))
     val centsCol = expr("CAST(round(value * 100, 0) AS BIGINT)")
-    val ckStr = cachedScratchDir("s44", sfDir, "events.parquet") {
+    val ckStr = cachedScratchDir("s44", sfDir) {
       val in = newTempDir("graft_s44_in")
       val ck = newTempDir("graft_ckpt_s44")
       val ev = graft.Tables.events(spark, sfDir)
@@ -317,7 +317,7 @@ trait StreamStateOps extends StreamRuntime {
     * — checkpoint replay is O(state), not O(history). */
   def streamRestartRecovery(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val outStr = cachedScratchDir("s40", sfDir, "events.parquet") {
+    val outStr = cachedScratchDir("s40", sfDir) {
       val in = newTempDir("graft_s40_in")
       val out = newTempDir("graft_s40_out")
       val ck = newTempDir("graft_ckpt_s40")

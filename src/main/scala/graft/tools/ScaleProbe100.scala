@@ -135,7 +135,8 @@ object ScaleProbe100 {
     // s14/s28 down with a stopped SparkContext — and (b) its checkpoint
     // scratch on tmpfs (v08's disk-full). Dropping the references and
     // reclaiming unpinned scratch makes per-chunk footprint per-QUERY,
-    // not cumulative. Session caches a cachedScratchDir pins survive.
+    // not cumulative. Every dir cachedScratchDir pins survives: the
+    // stream scratch caches and FileSources' format copies alike.
     def scrub(): Unit = {
       spark.streams.resetTerminated()
       spark.catalog.listTables().collect()
