@@ -54,14 +54,14 @@ object Verify {
     // catalog, isolated SQLConf/temp views/UDFs. That is the
     // multi-tenant shape (one cluster, many analysts) AND the isolation
     // production concurrency requires: the streaming harness sizes
-    // state-store parallelism per query via session conf
-    // (runToMemory's shuffle-partitions / noDataMicroBatches set+
-    // restore), which is session-scoped by design — tenants sharing
-    // ONE session would bleed those into each other's query planning
-    // (observed: a complete-mode query's noDataBatch=false planned a
-    // concurrent append query without its watermark-close batch,
-    // silently dropping its final windows). The driver never sets the
-    // hook → sequential on the one declared session.
+    // state-store parallelism and picks the provider per query via
+    // session conf (runAvailableNow's shuffle-partitions / provider /
+    // no-data-batch set+restore), which is session-scoped by design —
+    // tenants sharing ONE session would bleed those into each other's
+    // query planning (observed: one query's disabled no-data batch
+    // planned a concurrent append query without its watermark-close
+    // batch, silently dropping its final windows). The driver never
+    // sets the hook → sequential on the one declared session.
     val par = sys.env.get("SPARK_GRAFT_PAR")
       .flatMap(_.trim.toIntOption).getOrElse(1)
     if (par <= 1) entries.foreach { case (n, f) => runOne(spark, n, f) }

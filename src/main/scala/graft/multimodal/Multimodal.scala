@@ -237,17 +237,12 @@ object Multimodal {
         .select($"bucket", lit(tag).as("side"), $"doc_id")
       Seq(side(0, "O"), side(1, "N"))
     }
-    val stream = StreamOps.changelogStream(spark, dirStr,
+    val events = StreamOps.changelogStream(spark, dirStr,
       "bucket STRING, side STRING, doc_id BIGINT")
       .as[BandEvent]
-      .groupByKey(_.bucket)
-      .transformWithState(new NearDupProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Update(),
-        org.apache.spark.sql.Encoders.product[BandMatch])
-      .toDF()
-    StreamOps.runToMemory(stream, "graft_m08", "update", Some(8),
-      noDataBatch = false, conf = StreamOps.RocksDb)
+    val stream = StreamOps.processed(events.groupByKey(_.bucket),
+      new NearDupProcessor)
+    StreamOps.runToMemory(stream, "graft_m08", "update")
       .groupBy($"new_doc")
       .agg(min($"dup_of").as("dup_of"),
         count(lit(1)).as("n_shared_frames"))

@@ -1521,6 +1521,8 @@ object VectorOps {
 
   private val cosSql =
     "list_dot_product(%s, %s) / (sqrt(list_dot_product(%s, %s)) * sqrt(list_dot_product(%s, %s)))"
+  /** The DuckDB cosine of list expressions `a` and `b` — the scoring
+    * formula the v-oracles and s34's oracle share. */
   private[graft] def cos(a: String, b: String): String =
     cosSql.format(a, b, a, a, b, b)
 
@@ -1580,10 +1582,6 @@ object VectorOps {
        |  FROM embeddings CROSS JOIN generate_series(1, 64) t(i) GROUP BY 1, 2),
        |cv AS (SELECT c_label, list(c ORDER BY i) AS cvv FROM cent GROUP BY 1),
        |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)""".stripMargin
-
-  /** The DuckDB cosine fragment, for oracle builders outside this
-    * module (s34 shares the index text AND the scoring formula). */
-  private[graft] def cosFragment(a: String, b: String): String = cos(a, b)
 
   /** The v07 IVF probe as a DuckDB CTE chain ending at
     * `ivfr(vec_id, cell, cos, rn)` — every probed candidate ranked by

@@ -230,13 +230,10 @@ trait StreamAggOps extends StreamRuntime {
         (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 4))
           * 10000).cast("long").as("v4"))
       .as[SessIn]
-    val stream = ev.groupByKey(_.user_id)
-      .transformWithState(new TimerSessionProcessor(gapUs),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Update(),
-        org.apache.spark.sql.Encoders.product[SessOut])
-      .toDF()
-    runToMemory(stream, "graft_s32", "update", Some(8), conf = RocksDb)
+    val stream = processed(ev.groupByKey(_.user_id),
+      new TimerSessionProcessor(gapUs),
+      org.apache.spark.sql.streaming.TimeMode.EventTime())
+    runToMemory(stream, "graft_s32", "update")
       .select($"user_id",
         timestamp_micros($"start_us").as("s_start"),
         timestamp_micros($"end_us" + gapUs).as("s_end"),
@@ -261,17 +258,10 @@ trait StreamAggOps extends StreamRuntime {
         .select(col("event_type"), col("event_id"), col("value"))
       (0 until 3).map(i => ev.filter(col("event_id") % 3 === i))
     }
-    val stream = changelogStream(spark, dirStr,
-      "event_type STRING, event_id BIGINT, value DOUBLE")
-      .as[TopNEvent]
-      .groupByKey(_.event_type)
-      .transformWithState(new TopNProcessor(5),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update(),
-        org.apache.spark.sql.Encoders.product[TopNRow])
-      .toDF()
-    val all = runToMemory(stream, "graft_s18", "update", Some(8),
-      noDataBatch = false, conf = RocksDb)
+    val events = changelogStream(spark, dirStr,
+      "event_type STRING, event_id BIGINT, value DOUBLE").as[TopNEvent]
+    val stream = processed(events.groupByKey(_.event_type), new TopNProcessor(5))
+    val all = runToMemory(stream, "graft_s18", "update")
     // compact the emitted changelog to each key's latest version (the
     // result table is ≤ keys × N × batches rows — trivially small)
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("event_type"))
@@ -659,7 +649,7 @@ trait StreamAggOps extends StreamRuntime {
     val assigned = stream
       .withColumn("m", array_max(array(scored: _*)))
       .select($"vec_id", (-$"m.nl").as("cell"), round($"m.c", 6).as("ccos"))
-    runToMemory(assigned, "graft_s34", "append", noDataBatch = false)
+    runToMemory(assigned, "graft_s34", "append")
       .orderBy($"vec_id")
   }
 

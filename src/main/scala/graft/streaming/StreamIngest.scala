@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 
 /** The INGEST-FACE seam of [[StreamOps]]: the streaming twins of the
   * batch pillars — near-dup (text/embedding), novelty, inverted index,
@@ -44,17 +43,11 @@ trait StreamIngestOps extends StreamRuntime {
         bands.filter(col("doc_id") % 2 === 1)
           .select(col("bucket"), side("N"), col("doc_id")))
     }
-    val stream = changelogStream(spark, dirStr,
+    val events = changelogStream(spark, dirStr,
       "bucket STRING, side STRING, doc_id BIGINT")
       .as[BandEvent]
-      .groupByKey(_.bucket)
-      .transformWithState(new NearDupProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update(),
-        org.apache.spark.sql.Encoders.product[BandMatch])
-      .toDF()
-    runToMemory(stream, "graft_s24", "update", Some(8),
-      noDataBatch = false, conf = RocksDb)
+    val stream = processed(events.groupByKey(_.bucket), new NearDupProcessor)
+    runToMemory(stream, "graft_s24", "update")
       .groupBy(col("new_doc"))
       .agg(min(col("dup_of")).as("dup_of"),
         count(lit(1)).as("matched_bands"))
@@ -102,17 +95,11 @@ trait StreamIngestOps extends StreamRuntime {
         bands.filter(col("vec_id") % 2 === 1)
           .select(col("bucket"), side("N"), col("vec_id").as("doc_id")))
     }
-    val stream = changelogStream(spark, dirStr,
+    val events = changelogStream(spark, dirStr,
       "bucket STRING, side STRING, doc_id BIGINT")
       .as[BandEvent]
-      .groupByKey(_.bucket)
-      .transformWithState(new NearDupProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update(),
-        org.apache.spark.sql.Encoders.product[BandMatch])
-      .toDF()
-    val cand = runToMemory(stream, "graft_s47", "update", Some(8),
-      noDataBatch = false, conf = RocksDb)
+    val stream = processed(events.groupByKey(_.bucket), new NearDupProcessor)
+    val cand = runToMemory(stream, "graft_s47", "update")
       .select(col("dup_of").as("d1"), col("new_doc").as("d2"))
       .distinct()
     // exact-cosine verify — batch enrichment over the streamed
@@ -244,16 +231,11 @@ trait StreamIngestOps extends StreamRuntime {
       val src = e.select($"vec_id", $"v")
       def half(i: Int) = src.filter(pmod($"vec_id", lit(2L)) === i)
       (0 to 1).foreach(i => writeChangelogFile(half(i), in, i))
-      foldIntoStore(serveIngestProjection(spark, sfDir,
+      foldIntoStore(processed(serveIngestProjection(spark, sfDir,
           changelogStream(spark, in.toString, "vec_id BIGINT, v ARRAY<DOUBLE>"))
         .select($"cell".as("event_type"), $"vec_id".as("event_id"), $"value")
         .as[TopNEvent]
-        .groupByKey(_.event_type)
-        .transformWithState(new TopNProcessor(DivCap),
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Update(),
-          org.apache.spark.sql.Encoders.product[TopNRow])
-        .toDF(), "graft_s48")
+        .groupByKey(_.event_type), new TopNProcessor(DivCap)), "graft_s48")
     }
     serveTopKFromStore(spark, sfDir, ckStr)
   }
@@ -340,17 +322,12 @@ trait StreamIngestOps extends StreamRuntime {
         src.join(scoredBatch.filter($"cell".isin(tombCells: _*))
           .select($"vec_id"), "vec_id")
           .withColumn("side", lit("I")), in, 2)
-      foldIntoStore(serveIngestProjection(spark, sfDir,
+      foldIntoStore(processed(serveIngestProjection(spark, sfDir,
           changelogStream(spark, in.toString,
             "vec_id BIGINT, v ARRAY<DOUBLE>, side STRING"))
         .select($"cell", $"side", $"vec_id", $"value")
         .as[TombEvent]
-        .groupByKey(_.cell)
-        .transformWithState(new TombstoneIndexProcessor(DivCap),
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Update(),
-          org.apache.spark.sql.Encoders.product[TopNRow])
-        .toDF(), "graft_s50")
+        .groupByKey(_.cell), new TombstoneIndexProcessor(DivCap)), "graft_s50")
     }
     serveTopKFromStore(spark, sfDir, ckStr)
   }
@@ -427,18 +404,12 @@ trait StreamIngestOps extends StreamRuntime {
         .toInstant(java.time.ZoneOffset.UTC).toEpochMilli * 1000L
       Seq(ev.filter(col("ts_us") < cutUs), ev.filter(col("ts_us") >= cutUs))
     }
-    val stream = changelogStream(spark, dirStr,
+    val events = changelogStream(spark, dirStr,
       "user_id BIGINT, ts_us BIGINT, event_id BIGINT, cents BIGINT, " +
         "value DOUBLE")
       .as[AnomalyEvent]
-      .groupByKey(_.user_id)
-      .transformWithState(new RollingAnomalyProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update(),
-        org.apache.spark.sql.Encoders.product[AnomalyScore])
-      .toDF()
-    runToMemory(stream, "graft_s30", "update", Some(8),
-      noDataBatch = false, conf = RocksDb)
+    val stream = processed(events.groupByKey(_.user_id), new RollingAnomalyProcessor)
+    runToMemory(stream, "graft_s30", "update")
       .filter($"den" > 0)
       .select($"event_id", $"user_id",
         timestamp_micros($"ts_us").as("ts"),
@@ -479,18 +450,12 @@ trait StreamIngestOps extends StreamRuntime {
           col("event_id"), col("cents"))
       Seq(side(col("ts") < cut, "B"), side(col("ts") >= cut, "M"))
     }
-    val stream = changelogStream(spark, dirStr,
+    val events = changelogStream(spark, dirStr,
       "user_id BIGINT, side STRING, ts_us BIGINT, event_id BIGINT, " +
         "cents BIGINT")
       .as[CusumEvent]
-      .groupByKey(_.user_id)
-      .transformWithState(new CusumProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update(),
-        org.apache.spark.sql.Encoders.product[CusumPoint])
-      .toDF()
-    val pts = runToMemory(stream, "graft_s31", "update", Some(8),
-      noDataBatch = false, conf = RocksDb)
+    val stream = processed(events.groupByKey(_.user_id), new CusumProcessor)
+    val pts = runToMemory(stream, "graft_s31", "update")
     val byUser = org.apache.spark.sql.expressions.Window
       .partitionBy($"user_id")
     pts
@@ -503,6 +468,18 @@ trait StreamIngestOps extends StreamRuntime {
         timestamp_micros($"ts_us").as("cp_ts"),
         $"event_id".as("cp_event_id"))
       .orderBy($"user_id")
+  }
+
+  /** `ev` split by its `ts_us` column into three time-ordered batches
+    * at 2024-01-11 and 2024-01-21 00:00 UTC — s36's and s37's
+    * micro-batch schedule. */
+  private def dayThirds(ev: DataFrame): Seq[DataFrame] = {
+    def cutUs(day: Int): Long = java.time.LocalDateTime
+      .of(2024, 1, day, 0, 0)
+      .toInstant(java.time.ZoneOffset.UTC).toEpochMilli * 1000L
+    Seq(ev.filter(col("ts_us") < cutUs(11)),
+      ev.filter(col("ts_us") >= cutUs(11) && col("ts_us") < cutUs(21)),
+      ev.filter(col("ts_us") >= cutUs(21)))
   }
 
   /** s36: streaming ordered-funnel tracking — the ingest face of e44:
@@ -525,26 +502,15 @@ trait StreamIngestOps extends StreamRuntime {
       val ev = graft.Tables.events(spark, sfDir)
         .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
           col("event_id"), col("event_type"))
-      // three time-partitioned batches: funnel ordering must cross the
-      // boundaries via state, never via reordering
-      def cutUs(day: Int): Long = java.time.LocalDateTime
-        .of(2024, 1, day, 0, 0)
-        .toInstant(java.time.ZoneOffset.UTC).toEpochMilli * 1000L
-      Seq(ev.filter(col("ts_us") < cutUs(11)),
-        ev.filter(col("ts_us") >= cutUs(11) && col("ts_us") < cutUs(21)),
-        ev.filter(col("ts_us") >= cutUs(21)))
+      // funnel ordering must cross the batch boundaries via state,
+      // never via reordering
+      dayThirds(ev)
     }
-    val stream = changelogStream(spark, dirStr,
+    val events = changelogStream(spark, dirStr,
       "user_id BIGINT, ts_us BIGINT, event_id BIGINT, event_type STRING")
       .as[FunnelEvent]
-      .groupByKey(_.user_id)
-      .transformWithState(new FunnelProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update(),
-        org.apache.spark.sql.Encoders.product[FunnelDepth])
-      .toDF()
-    val depths = runToMemory(stream, "graft_s36", "update", Some(8),
-      noDataBatch = false, conf = RocksDb)
+    val stream = processed(events.groupByKey(_.user_id), new FunnelProcessor)
+    val depths = runToMemory(stream, "graft_s36", "update")
     graft.operators.Events.funnelReduce(
       depths.groupBy($"user_id").agg(max($"stage").as("stage")))
   }
@@ -579,25 +545,14 @@ trait StreamIngestOps extends StreamRuntime {
           when(col("event_type") === "purchase", col("value"))
             .otherwise(0.0).as("value"))
         .filter(col("event_type").isin("click", "purchase"))
-      def cutUs(day: Int): Long = java.time.LocalDateTime
-        .of(2024, 1, day, 0, 0)
-        .toInstant(java.time.ZoneOffset.UTC).toEpochMilli * 1000L
-      Seq(ev.filter(col("ts_us") < cutUs(11)),
-        ev.filter(col("ts_us") >= cutUs(11) && col("ts_us") < cutUs(21)),
-        ev.filter(col("ts_us") >= cutUs(21)))
+      dayThirds(ev)
     }
-    val stream = changelogStream(spark, dirStr,
+    val events = changelogStream(spark, dirStr,
       "user_id BIGINT, ts_us BIGINT, event_id BIGINT, event_type STRING, " +
         "channel STRING, value DOUBLE")
       .as[AttribEvent]
-      .groupByKey(_.user_id)
-      .transformWithState(new AttributionProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update(),
-        org.apache.spark.sql.Encoders.product[AttribHit])
-      .toDF()
-    val hits = runToMemory(stream, "graft_s37", "update", Some(8),
-      noDataBatch = false, conf = RocksDb)
+    val stream = processed(events.groupByKey(_.user_id), new AttributionProcessor)
+    val hits = runToMemory(stream, "graft_s37", "update")
     graft.operators.Events.attributionReduce(
       hits.select($"channel",
         when($"lag_s" >= 0, $"lag_s").as("lag_s"), $"value"))
@@ -625,17 +580,11 @@ trait StreamIngestOps extends StreamRuntime {
         nw.withColumn("side", lit("N")))
         .map(_.select(col("k"), col("side"), col("h"), col("chars")))
     }
-    val stream = changelogStream(spark, dirStr,
+    val events = changelogStream(spark, dirStr,
       "k BIGINT, side STRING, h STRING, chars BIGINT")
       .as[SnapEvent]
-      .groupByKey(_.k)
-      .transformWithState(new CdcProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update(),
-        org.apache.spark.sql.Encoders.product[CdcEmit])
-      .toDF()
-    val hits = runToMemory(stream, "graft_s39", "update", Some(8),
-      noDataBatch = false, conf = RocksDb)
+    val stream = processed(events.groupByKey(_.k), new CdcProcessor)
+    val hits = runToMemory(stream, "graft_s39", "update")
     graft.operators.TextOps.snapshotDiffReduce(
       hits.select($"k", $"status", $"new_chars", $"old_chars"))
   }
@@ -665,17 +614,11 @@ trait StreamIngestOps extends StreamRuntime {
         .select(col("s").as("bucket"), lit(tag).as("side"), col("doc_id"))
       Seq(side(0, "O"), side(1, "N"))
     }
-    val stream = changelogStream(spark, dirStr,
+    val events = changelogStream(spark, dirStr,
       "bucket STRING, side STRING, doc_id BIGINT")
       .as[BandEvent]
-      .groupByKey(_.bucket)
-      .transformWithState(new NearDupProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update(),
-        org.apache.spark.sql.Encoders.product[BandMatch])
-      .toDF()
-    val seen = runToMemory(stream, "graft_s26", "update", Some(8),
-      noDataBatch = false, conf = RocksDb)
+    val stream = processed(events.groupByKey(_.bucket), new NearDupProcessor)
+    val seen = runToMemory(stream, "graft_s26", "update")
       .groupBy(col("new_doc").as("doc_id"))
       .agg(count(lit(1)).as("n_seen"))
     shingles.filter(col("doc_id") % 2 === 1)
@@ -713,17 +656,11 @@ trait StreamIngestOps extends StreamRuntime {
       Seq(tf.filter(col("doc_id") % 2 === 0), tf.filter(col("doc_id") % 2 === 1))
         .map(_.select(col("term"), col("doc_id"), col("tf")))
     }
-    val stream = changelogStream(spark, dirStr,
+    val events = changelogStream(spark, dirStr,
       "term STRING, doc_id BIGINT, tf BIGINT")
       .as[TermDocTf]
-      .groupByKey(_.term)
-      .transformWithState(new IndexStatsProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update(),
-        org.apache.spark.sql.Encoders.product[TermStats])
-      .toDF()
-    val emitted = runToMemory(stream, "graft_s29", "update", Some(8),
-      noDataBatch = false, conf = RocksDb)
+    val stream = processed(events.groupByKey(_.term), new IndexStatsProcessor)
+    val emitted = runToMemory(stream, "graft_s29", "update")
     // latest emission per term: df is monotone across batches
     emitted.groupBy(col("term"))
       .agg(max(struct(col("df"), col("tf_total"))).as("m"))
@@ -741,14 +678,9 @@ trait StreamIngestOps extends StreamRuntime {
       name: String, schemaDdl: String)(
       shape: DataFrame => DataFrame): String = {
     import spark.implicits._
-    foldIntoStore(shape(changelogStream(spark, in.toString, schemaDdl))
+    foldIntoStore(processed(shape(changelogStream(spark, in.toString, schemaDdl))
       .as[BinDelta]
-      .groupByKey(_.event_type)
-      .transformWithState(new BinCountProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update(),
-        org.apache.spark.sql.Encoders.product[BinDelta])
-      .toDF(), name)
+      .groupByKey(_.event_type), new BinCountProcessor), name)
   }
 
   /** The matching serving read: BinCountProcessor's flattened MapState
@@ -847,15 +779,10 @@ trait StreamIngestOps extends StreamRuntime {
       def third(i: Int) = docs.filter(pmod($"doc_id", lit(3L)) === i)
         .select($"shard", $"toks", $"bytes")
       (0 to 2).foreach(i => writeChangelogFile(third(i), in, i))
-      foldIntoStore(changelogStream(spark, in.toString,
+      foldIntoStore(processed(changelogStream(spark, in.toString,
           "shard BIGINT, toks BIGINT, bytes BIGINT")
         .as[ShardDelta]
-        .groupByKey(_.shard)
-        .transformWithState(new ShardStatsProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Update(),
-          org.apache.spark.sql.Encoders.product[ShardDelta])
-        .toDF(), "graft_s51")
+        .groupByKey(_.shard), new ShardStatsProcessor), "graft_s51")
     }
     val cells = readState(spark, ckStr, "cell")
       .select($"key.value".as("shard"), $"value.n_docs",

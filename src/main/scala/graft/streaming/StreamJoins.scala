@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 
 /** The JOIN seam of [[StreamOps]]: stream-stream windowed joins
   * (inner/left/full/semi), stream-static enrichment (dim/range),
@@ -129,7 +128,7 @@ trait StreamJoinOps extends StreamRuntime {
     * streaming inputs of either side. */
   def tableTableFkJoin(left: DataFrame, leftKey: String, leftFk: String,
       leftVal: String, right: DataFrame, rightKey: String,
-      rightVal: String): Dataset[FkJoined] = {
+      rightVal: String): DataFrame = {
     import left.sparkSession.implicits._
     // transformWithState needs the StateStoreCoordinator even on batch
     // inputs, and only the StreamingQueryManager registers it: touch it
@@ -148,12 +147,7 @@ trait StreamJoinOps extends StreamRuntime {
       lit("R").as("side"), lit(-1L).as("left_key"),
       lit(null).cast("string").as("left_val"),
       col(rightVal).cast("string").as("right_val")).as[FkEvent]
-    l.unionByName(r)
-      .groupByKey(_.fk)
-      .transformWithState(new FkJoinProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update(),
-        org.apache.spark.sql.Encoders.product[FkJoined])
+    processed(l.unionByName(r).groupByKey(_.fk), new FkJoinProcessor)
   }
 
   /** Streaming windowed stream-stream join (append mode; inner joins
@@ -178,7 +172,6 @@ trait StreamJoinOps extends StreamRuntime {
       graft.Tables.customer(spark, sfDir), "c_custkey", "c_nationkey", "c_name",
       graft.Tables.nation(spark, sfDir).withColumn("n_nationkey",
         col("n_nationkey").cast("long")), "n_nationkey", "n_name")
-      .toDF()
       .orderBy(col("left_key"))
   }
 
@@ -281,17 +274,11 @@ trait StreamJoinOps extends StreamRuntime {
       Seq(rightVer(concat(lit("OLD_"), col("n_name"))), lefts,
           rightVer(col("n_name")))
     }
-    val stream = changelogStream(spark, dirStr,
+    val events = changelogStream(spark, dirStr,
       "fk BIGINT, side STRING, left_key BIGINT, left_val STRING, right_val STRING")
       .as[FkEvent]
-      .groupByKey(_.fk)
-      .transformWithState(new FkJoinProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update(),
-        org.apache.spark.sql.Encoders.product[FkJoined])
-      .toDF()
-    runToMemory(stream, "graft_s10", "update", Some(8),
-      noDataBatch = false, conf = RocksDb)
+    val stream = processed(events.groupByKey(_.fk), new FkJoinProcessor)
+    runToMemory(stream, "graft_s10", "update")
       .orderBy(col("left_key"), col("right_val"))
   }
 
@@ -323,18 +310,12 @@ trait StreamJoinOps extends StreamRuntime {
           tableVer(col("n_name")),
           ev.filter(col("event_id") % 2 =!= 0))
     }
-    val stream = changelogStream(spark, dirStr,
+    val events = changelogStream(spark, dirStr,
       "nk BIGINT, side STRING, event_id BIGINT, user_id BIGINT, " +
         "event_type STRING, dim_name STRING")
       .as[StEvent]
-      .groupByKey(_.nk)
-      .transformWithState(new StreamTableJoinProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update(),
-        org.apache.spark.sql.Encoders.product[StJoined])
-      .toDF()
-    runToMemory(stream, "graft_s15", "update", Some(8),
-      noDataBatch = false, conf = RocksDb)
+    val stream = processed(events.groupByKey(_.nk), new StreamTableJoinProcessor)
+    runToMemory(stream, "graft_s15", "update")
       .orderBy(col("event_id"))
   }
 
@@ -392,18 +373,12 @@ trait StreamJoinOps extends StreamRuntime {
           col("value"))
       Seq(shape("view", "Q"), shape("purchase", "T"))
     }
-    val stream = changelogStream(spark, dirStr,
+    val events = changelogStream(spark, dirStr,
       "user_id BIGINT, side STRING, ts_us BIGINT, event_id BIGINT, " +
         "value DOUBLE")
       .as[AsOfEvent]
-      .groupByKey(_.user_id)
-      .transformWithState(new AsOfJoinProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update(),
-        org.apache.spark.sql.Encoders.product[AsOfJoined])
-      .toDF()
-    runToMemory(stream, "graft_s25", "update", Some(8),
-        noDataBatch = false, conf = RocksDb)
+    val stream = processed(events.groupByKey(_.user_id), new AsOfJoinProcessor)
+    runToMemory(stream, "graft_s25", "update")
       .select($"trade_id", $"user_id",
         timestamp_micros($"trade_ts_us").as("trade_ts"),
         timestamp_micros($"quote_ts_us").as("quote_ts"),

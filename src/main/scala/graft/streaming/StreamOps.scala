@@ -167,7 +167,7 @@ object StreamOps
     // centroid round(c, 6) is the v09 Lloyd determinism contract
     "s34_stream_ivf_assign" -> {
       val V = graft.operators.VectorOps
-      val c = V.cosFragment("e.v", "cvr.cvv")
+      val c = V.cos("e.v", "cvr.cvv")
       s"""WITH ${V.ivfCentCte},
          |cvr AS (SELECT c_label, list(round(c, 6) ORDER BY i) AS cvv
          |  FROM cent GROUP BY 1),

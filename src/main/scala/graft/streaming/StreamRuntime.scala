@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.{DataFrame, Encoders, KeyValueGroupedDataset, Row, SparkSession}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StatefulProcessor, TimeMode}
+import scala.reflect.runtime.universe.TypeTag
 import org.apache.spark.sql.functions._
 
 /** The streaming RUNTIME seam every s-query runs on: the sources (the
@@ -88,15 +89,7 @@ trait StreamRuntime {
     graft.Tables.normalizeTs(raw)
   }
 
-  /** The events file stream plus one far-future "__flush" row in a
-    * second file. A finite stream's watermark only reaches
-    * max(seen ts) − delay, so outer-join null padding and final window
-    * emission for the tail of the data would stay locked in the state
-    * store; the flush row advances the watermark past every real
-    * window. It must pass through the `withWatermark` operator (which
-    * tracks max event time) and be filtered AFTER it — which is how the
-    * consumers below are structured. In production this is the role of
-    * periodic broker heartbeats / idle-source timeouts. */
+  /** Delete `p` and everything under it, if it exists. */
   private[graft] def deleteRecursively(p: java.nio.file.Path): Unit = {
     import scala.jdk.CollectionConverters._
     if (java.nio.file.Files.exists(p)) {
@@ -158,6 +151,15 @@ trait StreamRuntime {
     dir
   }
 
+  /** The events file stream plus one far-future "__flush" row in a
+    * second file. A finite stream's watermark only reaches
+    * max(seen ts) − delay, so outer-join null padding and final window
+    * emission for the tail of the data would stay locked in the state
+    * store; the flush row advances the watermark past every real
+    * window. It must pass through the `withWatermark` operator (which
+    * tracks max event time) and be filtered AFTER it — which is how the
+    * consumers below are structured. In production this is the role of
+    * periodic broker heartbeats / idle-source timeouts. */
   def eventsStreamWithFlush(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$sfDir/events.parquet"
@@ -205,17 +207,38 @@ trait StreamRuntime {
 
   private[graft] val ShufflePartitions = "spark.sql.shuffle.partitions"
 
-  /** transformWithState requires the RocksDB state store provider.
-    * Changelog checkpointing goes with it: per commit, upload only the
-    * batch's changelog instead of a full RocksDB snapshot — the
-    * documented production setting for frequent-commit workloads, and
-    * measured ~5% off the s-series fixed overhead here (snapshots still
-    * happen, just in the background maintenance pass). */
+  /** The RocksDB state store provider, which transformWithState
+    * requires: [[runAvailableNow]] sets it for every plan that has a
+    * `TransformWithState` node ([[hasTransformWithState]]); other runs
+    * that want it (s33, s40) pass it as conf. Changelog checkpointing
+    * goes with it: per commit, upload only the batch's changelog instead
+    * of a full RocksDB snapshot — the documented production setting for
+    * frequent-commit workloads, and measured ~5% off the s-series fixed
+    * overhead here (snapshots still happen, just in the background
+    * maintenance pass). */
   private[graft] val RocksDb: Seq[(String, String)] = Seq(
     "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
       "true")
+
+  /** Whether `df`'s plan runs a transformWithState operator — the fact
+    * [[runAvailableNow]] picks the state store provider from and
+    * [[runToMemory]] sizes the store by. */
+  private def hasTransformWithState(df: DataFrame): Boolean =
+    df.queryExecution.logical.exists(_.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.TransformWithState])
+
+  /** `grouped.transformWithState(processor)` in `timeMode` (default: no
+    * timers) with Update output and the product encoder of `U`, as a
+    * DataFrame — the one spelling every transformWithState query uses
+    * (s43's initial-state overload aside). */
+  private[graft] def processed[K, V, U <: Product: TypeTag](
+      grouped: KeyValueGroupedDataset[K, V],
+      processor: StatefulProcessor[K, V, U],
+      timeMode: TimeMode = TimeMode.None()): DataFrame =
+    grouped.transformWithState(processor, timeMode, OutputMode.Update())(
+      Encoders.product[U]).toDF()
 
   /** Set each of `pairs` on the session for the duration of `body`, then
     * put every key back as it was — its previous session value, or unset
@@ -251,11 +274,12 @@ trait StreamRuntime {
     * everything available (including the watermark-close no-data batch
     * that emits final windows / outer-join padding) and terminate — one
     * less idle-detection round trip than processAllAvailable + stop.
-    * The caller picks the sink and output mode (`sink`) and the session
-    * conf the run needs (`conf`, scoped by [[withConf]]); the checkpoint
-    * is a fresh scratch dir unless a restart passes its own. Records the
-    * terminal progress in [[lastProgressByName]] and returns its batchId
-    * (−1 if no batch ran).
+    * The caller picks the sink and output mode (`sink`) and any session
+    * conf the run needs beyond the state store provider (`conf`, scoped
+    * by [[withConf]]); a plan with a transformWithState operator gets
+    * [[RocksDb]] here. The checkpoint is a fresh scratch dir unless a
+    * restart passes its own. Records the terminal progress in
+    * [[lastProgressByName]] and returns its batchId (−1 if no batch ran).
     *
     * Callers whose ORACLE encodes the micro-batch schedule (s38: the
     * two-watermark late filter lags exactly one batch per file trigger)
@@ -269,7 +293,8 @@ trait StreamRuntime {
       assertLastBatchId: Option[Long] = None)(
       sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Long = {
     val ck = checkpoint.getOrElse(newTempDir(s"graft_ckpt_$name"))
-    val last = withConf(df.sparkSession, conf: _*) {
+    val store = if (hasTransformWithState(df)) RocksDb else Nil
+    val last = withConf(df.sparkSession, store ++ conf: _*) {
       val q = sink(df.writeStream.queryName(name))
         .option("checkpointLocation", ck.toString)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -295,35 +320,30 @@ trait StreamRuntime {
     * high session `shuffle.partitions` (tuned for batch) means that many
     * state-store instances per micro-batch — pure overhead at local
     * fixture scale. The run caps the stateful parallelism (the knob a
-    * Kafka Streams app would call num.stream.threads). Most fixture
-    * queries keep tiny per-batch state (≤150 keys), so 2 stores saturate
-    * a local run; queries that push the full event volume THROUGH the
-    * store per batch (the transformWithState changelogs) pass a higher
-    * `partitions` — match store parallelism to per-batch state traffic,
-    * not to key count. `conf` adds the caller's own pairs ([[RocksDb]]
-    * for transformWithState). */
+    * Kafka Streams app would call num.stream.threads) by what the plan
+    * does: a transformWithState plan pushes the full event volume THROUGH
+    * its store every batch and gets min(8, cores) stores; any other plan
+    * keeps tiny per-batch state (≤150 keys) and gets min(2, cores). Match
+    * store parallelism to per-batch state traffic, not to key count.
+    *
+    * `noDataBatch = false` skips the trailing no-data batch. Spark runs
+    * one only when a stateful operator asks for it: an Append or Update
+    * operator whose eviction watermark has advanced, or a processing-time
+    * transformWithState (never a Complete-mode aggregation). So the
+    * switch matters only for a watermarked plan whose no-data batch
+    * emits nothing and only evicts state: s03's dedup, s05's inner join
+    * and s27's semi join pass it. */
   def runToMemory(df: DataFrame, name: String, mode: String,
-      partitions: Option[Int] = None,
       noDataBatch: Boolean = true,
-      assertLastBatchId: Option[Long] = None,
-      conf: Seq[(String, String)] = Nil): DataFrame = {
+      assertLastBatchId: Option[Long] = None): DataFrame = {
     val spark = df.sparkSession
     spark.catalog.dropTempView(name)
-    val n = math.min(partitions.getOrElse(2),
+    val stores = math.min(if (hasTransformWithState(df)) 8 else 2,
       spark.sparkContext.defaultParallelism)
-    // Complete mode re-emits the whole result every batch and never
-    // waits on a watermark close, so the trailing no-data batch is one
-    // pure-overhead state-store round trip; append/update queries NEED
-    // it (final windows / outer-join padding emit there) — EXCEPT the
-    // TimeMode.None transformWithState pipelines, which have no
-    // watermark and no timers to fire, so their callers pass
-    // noDataBatch = false and skip the same overhead.
     val noData =
-      if (mode == "complete" || !noDataBatch)
-        Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
-      else Nil
-    runAvailableNow(df, name,
-      conf ++ ((ShufflePartitions -> n.toString) +: noData),
+      if (noDataBatch) Nil
+      else Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+    runAvailableNow(df, name, (ShufflePartitions -> stores.toString) +: noData,
       assertLastBatchId = assertLastBatchId)(
       _.format("memory").outputMode(mode))
     spark.table(name)
@@ -340,8 +360,7 @@ trait StreamRuntime {
       checkpoint: Option[java.nio.file.Path] = None,
       conf: Seq[(String, String)] = Nil): String = {
     val ck = checkpoint.getOrElse(newTempDir(s"graft_ckpt_$name"))
-    runAvailableNow(df, name,
-      ((ShufflePartitions -> "8") +: RocksDb) ++ conf, Some(ck))(
+    runAvailableNow(df, name, (ShufflePartitions -> "8") +: conf, Some(ck))(
       _.format("noop").outputMode("update"))
     ck.toString
   }

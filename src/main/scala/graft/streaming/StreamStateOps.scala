@@ -136,13 +136,8 @@ trait StreamStateOps extends StreamRuntime {
     // the changelog consumer is irrelevant here — the STORE is the
     // product (a real deployment tees this to Kafka/a sink)
     val ckStr = cachedScratchDir("s42", sfDir) {
-      foldIntoStore(eventsStream(spark, sfDir).as[EventRow]
-        .groupByKey(_.user_id)
-        .transformWithState(new LatestEventProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Update(),
-          org.apache.spark.sql.Encoders.product[LatestEvent])
-        .toDF(), "graft_s42")
+      foldIntoStore(processed(eventsStream(spark, sfDir).as[EventRow]
+        .groupByKey(_.user_id), new LatestEventProcessor), "graft_s42")
     }
     // the Interactive Query: read the named state variable from the
     // last committed batch's store, with no streaming query running
@@ -244,15 +239,9 @@ trait StreamStateOps extends StreamRuntime {
         Some(ck),
         Seq("spark.sql.streaming.stateStore.encodingFormat" -> "avro"))
       writeChangelogFile(half($"ts" < cut), in, 0)
-      runLeg(src.transformWithState(new CountV1Processor,       // v1 era
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update(),
-        org.apache.spark.sql.Encoders.product[UserCounts]).toDF())
+      runLeg(processed(src, new CountV1Processor))       // v1 era
       writeChangelogFile(half($"ts" >= cut), in, 1)
-      runLeg(src.transformWithState(new CountV2Processor,       // upgrade
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update(),
-        org.apache.spark.sql.Encoders.product[UserCountsV2]).toDF())
+      runLeg(processed(src, new CountV2Processor))       // upgrade
       ck.toString
     }
     readState(spark, ckStr, "totals")

@@ -13,17 +13,7 @@ import java.nio.file.{Files, Paths}
   */
 object OracleDump {
   def main(args: Array[String]): Unit = {
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = graft.SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = graft.Verify.oracleJson(graft.SparkEntry.oracleSql)
     Files.writeString(Paths.get(args(0)), json)
     println(s"wrote ${graft.SparkEntry.oracleSql.size} oracles to ${args(0)}")
   }

@@ -8,7 +8,8 @@ import scala.jdk.CollectionConverters._
   * (VERDICT r8 item 8): the table is derived from `SparkEntry.queries`
   * plus a source scan, so it cannot drift from the code. Collision-
   * guarded: a query name registered in more than one `queries` map (or
-  * none) is a hard error, as is an oracle without a query.
+  * none) is a hard error, as is an oracle without a query or an impl
+  * whose `def` is missing from, or repeated across, its package.
   *
   * Usage: runMain graft.tools.QueryIndex   (writes docs/QUERIES.md)
   */
@@ -84,15 +85,42 @@ object QueryIndex {
       sys.exit(1)
     }
 
-    // impl def site: `def <fn>(` in the registration's file
-    def defSite(site: Site): String = {
-      if (site.impl == "(inline)") return s"${site.file}:${site.line}"
-      val fn = site.impl.split('.').last
-      val lines = Files.readAllLines(repo.resolve(site.file)).asScala
-      lines.zipWithIndex
-        .collectFirst { case (l, i) if l.matches(s".*\\bdef $fn[\\[( ].*") =>
-          s"${site.file}:${i + 1}" }
-        .getOrElse(s"${site.file}:${site.line}")
+    // impl def site: `def <fn>` in the registration's file, else in
+    // another file of its package directory (the registering objects
+    // mix in trait files such as TextCoreOps or StreamAggs). A def found
+    // in none of them, or in more than one, is a hard error like a
+    // collision.
+    def defSite(site: Site): Either[String, String] =
+      if (site.impl == "(inline)") Right(s"${site.file}:${site.line}")
+      else {
+        val fn = site.impl.split('.').last
+        val own = repo.resolve(site.file)
+        def defLine(f: Path): Option[String] =
+          Files.readAllLines(f).asScala.zipWithIndex.collectFirst {
+            case (l, i) if l.matches(s".*\\bdef $fn[\\[( ].*") =>
+              s"${repo.relativize(f)}:${i + 1}"
+          }
+        lazy val siblings = {
+          val listing = Files.list(own.getParent)
+          try listing.iterator().asScala
+            .filter(f => f.toString.endsWith(".scala") && f != own)
+            .toSeq.sorted.flatMap(defLine)
+          finally listing.close()
+        }
+        defLine(own).map(Right(_)).getOrElse(siblings match {
+          case Seq(one) => Right(one)
+          case Seq()    => Left(s"${site.impl}: no `def $fn` in " +
+            s"${repo.relativize(own.getParent)}")
+          case many     => Left(s"${site.impl}: `def $fn` in " +
+            s"${many.size} files (${many.mkString(", ")})")
+        })
+      }
+    val implSite = queries.map(q => q -> defSite(registrations(q).head)).toMap
+    val defErrors = implSite.collect { case (q, Left(e)) => s"$q: $e" }
+    if (defErrors.nonEmpty) {
+      defErrors.toSeq.sorted
+        .foreach(e => System.err.println(s"[query-index] ERROR $e"))
+      sys.exit(1)
     }
 
     // ---- spec coverage: test CLASSES naming the query or its impl fn --
@@ -171,7 +199,7 @@ object QueryIndex {
     queries.toSeq.sorted.foreach { q =>
       val site = registrations(q).head
       val o = if (oracles(q)) "✓" else "rows-only"
-      sb ++= s"| $q | `${defSite(site)}` (`${site.impl}`) " +
+      sb ++= s"| $q | `${implSite(q).merge}` (`${site.impl}`) " +
         s"| `${site.file}:${site.line}` | $o " +
         s"| ${specsOf(q, site.impl)} | ${probeOf(q)} |\n"
     }

@@ -43,22 +43,12 @@ object ScaleProbe {
     // file inside a directory would not match (0-row stream).
     if (!new java.io.File(s"$dir/events.parquet").isFile) {
       val src = graft.Tables.events(spark, base)
-      val tmp = s"$dir/events_tmp"
       val off = src.agg(max(col("event_id"))).head.getLong(0) + 1L
-      (0 until 10).map(i =>
-          src.withColumn("event_id", col("event_id") + lit(i * off)))
-        .reduce(_ unionAll _)
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
-        .iterator()
-      val f = Iterator.continually(part).takeWhile(_.hasNext)
-        .map(_.next()).find(_.toString.endsWith(".parquet")).get
-      java.nio.file.Files.deleteIfExists(
+      graft.streaming.StreamOps.writeSingleFile(
+        (0 until 10).map(i =>
+            src.withColumn("event_id", col("event_id") + lit(i * off)))
+          .reduce(_ unionAll _),
         java.nio.file.Paths.get(s"$dir/events.parquet"))
-      java.nio.file.Files.move(f,
-        java.nio.file.Paths.get(s"$dir/events.parquet"))
-      graft.streaming.StreamOps.deleteRecursively(
-        java.nio.file.Paths.get(tmp))
     }
     // relational dims pass through unchanged (the probed ops don't
     // replicate them)

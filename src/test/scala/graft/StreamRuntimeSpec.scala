@@ -4,8 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the streaming-run seam: [[graft.streaming.StreamRuntime]] is the
   * one place that starts a stream, replays a changelog dir, reads a
-  * state store or caches a scratch dir, and its [[withConf]] leaves the
-  * session conf exactly as it found it. */
+  * state store or caches a scratch dir, it picks each run's state store
+  * from the plan, and its [[withConf]] leaves the session conf exactly
+  * as it found it. */
 class StreamRuntimeSpec extends AnyFunSuite {
   import graft.streaming.StreamOps
   lazy val spark = TestSession.spark
@@ -21,6 +22,30 @@ class StreamRuntimeSpec extends AnyFunSuite {
       }
     Seq("def withShufflePartitions", "def withRocksDb", "def withAvroState",
       "graft.stream.partitions").foreach { gone =>
+      assert(MainSources.containing(gone).isEmpty, s"$gone is back")
+    }
+  }
+
+  test("the plan picks the state store: transformWithState gets RocksDB and 8 stores, others 2") {
+    import scala.jdk.CollectionConverters._
+    val cores = spark.sparkContext.defaultParallelism
+    def store(name: String): (Long, Seq[Int], Boolean) = {
+      val p = StreamOps.lastProgressByName(name)
+      (p.batchId, p.stateOperators.map(_.numShufflePartitions.toInt).toSeq,
+        p.stateOperators.exists(_.customMetrics.keySet.asScala
+          .exists(_.startsWith("rocksdb"))))
+    }
+    StreamOps.streamTopN(spark, sf).collect()         // s18, transformWithState
+    assert(store("graft_s18") == ((2L, Seq(math.min(8, cores)), true)))
+    StreamOps.streamTumbling(spark, sf).collect()     // s01, Complete aggregation
+    assert(store("graft_s01") == ((0L, Seq(math.min(2, cores)), false)))
+  }
+
+  test("no caller repeats the state store choice the plan makes") {
+    val seam = "graft/streaming/StreamRuntime.scala"
+    val noData = MainSources.containing("noDataMicroBatches").filterNot(_ == seam)
+    assert(noData.isEmpty, s"noDataMicroBatches outside $seam: $noData")
+    Seq("conf = RocksDb", "StreamOps.RocksDb", "Some(8),").foreach { gone =>
       assert(MainSources.containing(gone).isEmpty, s"$gone is back")
     }
   }
