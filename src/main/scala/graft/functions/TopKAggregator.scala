@@ -34,24 +34,11 @@ class TopKAggregator(k: Int)
 
   override def zero: Seq[ScoredNeighbor] = Nil
 
-  override def reduce(buf: Seq[ScoredNeighbor], v: ScoredNeighbor): Seq[ScoredNeighbor] = {
-    // insert-sorted, truncate at k: buffers stay tiny (k ≤ ~100), so
-    // an O(k) list insert beats heap bookkeeping after serde round trips
-    val (pre, post) = buf.span(better(_, v))
-    val merged = pre ++ (v +: post)
-    if (merged.lengthCompare(k) > 0) merged.take(k) else merged
-  }
+  override def reduce(buf: Seq[ScoredNeighbor], v: ScoredNeighbor): Seq[ScoredNeighbor] =
+    TopKBuffer.insert(buf, v, k)(better)
 
-  override def merge(a: Seq[ScoredNeighbor], b: Seq[ScoredNeighbor]): Seq[ScoredNeighbor] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[ScoredNeighbor]
-    var (x, y) = (a, b)
-    while (out.length < k && (x.nonEmpty || y.nonEmpty)) {
-      if (y.isEmpty || (x.nonEmpty && better(x.head, y.head))) {
-        out += x.head; x = x.tail
-      } else { out += y.head; y = y.tail }
-    }
-    out.toSeq
-  }
+  override def merge(a: Seq[ScoredNeighbor], b: Seq[ScoredNeighbor]): Seq[ScoredNeighbor] =
+    TopKBuffer.merge(a, b, k)(better)
 
   override def finish(b: Seq[ScoredNeighbor]): Seq[ScoredNeighbor] = b
 
@@ -62,3 +49,30 @@ class TopKAggregator(k: Int)
 }
 
 case class ScoredNeighbor(cos: Double, vec_id: Long, label: Int)
+
+/** The sorted, at-most-k buffer behind [[TopKAggregator]],
+  * [[TopValAggregator]] and s18's [[graft.streaming.TopNProcessor]]:
+  * best entry first under `better`, a strict total order, so the
+  * buffer is deterministic for any input and any merge order. */
+object TopKBuffer {
+  /** `buf` with `x` inserted in order, truncated at k. Buffers stay tiny
+    * (k ≤ ~100), so an O(k) list insert beats heap bookkeeping after
+    * serde round trips. */
+  def insert[T](buf: Seq[T], x: T, k: Int)(better: (T, T) => Boolean): Seq[T] = {
+    val (pre, post) = buf.span(better(_, x))
+    val merged = pre ++ (x +: post)
+    if (merged.lengthCompare(k) > 0) merged.take(k) else merged
+  }
+
+  /** The k best of two buffers: one merge pass over both heads. */
+  def merge[T](a: Seq[T], b: Seq[T], k: Int)(better: (T, T) => Boolean): Seq[T] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[T]
+    var (x, y) = (a, b)
+    while (out.length < k && (x.nonEmpty || y.nonEmpty)) {
+      if (y.isEmpty || (x.nonEmpty && better(x.head, y.head))) {
+        out += x.head; x = x.tail
+      } else { out += y.head; y = y.tail }
+    }
+    out.toSeq
+  }
+}

@@ -37,22 +37,11 @@ class TopValAggregator(k: Int)
 
   override def zero: Seq[ValCount] = Nil
 
-  override def reduce(buf: Seq[ValCount], x: ValCount): Seq[ValCount] = {
-    val (pre, post) = buf.span(better(_, x))
-    val merged = pre ++ (x +: post)
-    if (merged.lengthCompare(k) > 0) merged.take(k) else merged
-  }
+  override def reduce(buf: Seq[ValCount], x: ValCount): Seq[ValCount] =
+    TopKBuffer.insert(buf, x, k)(better)
 
-  override def merge(a: Seq[ValCount], b: Seq[ValCount]): Seq[ValCount] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[ValCount]
-    var (x, y) = (a, b)
-    while (out.length < k && (x.nonEmpty || y.nonEmpty)) {
-      if (y.isEmpty || (x.nonEmpty && better(x.head, y.head))) {
-        out += x.head; x = x.tail
-      } else { out += y.head; y = y.tail }
-    }
-    out.toSeq
-  }
+  override def merge(a: Seq[ValCount], b: Seq[ValCount]): Seq[ValCount] =
+    TopKBuffer.merge(a, b, k)(better)
 
   override def finish(b: Seq[ValCount]): Seq[ValCount] = b
 

@@ -1866,13 +1866,6 @@ object Events {
        |FROM r WHERE rn = 1 ORDER BY user_id""".stripMargin
 
   val oracles: Map[String, String] = Map(
-    // per-user RFM collapse, epoch-µs recency floor-div, ntile(4) over
-    // (metric, user_id) total orders — the same rank both engines
-    // compute; monetary is exact integer cents; CASTs keep DuckDB's
-    // HUGEINT sums off the schema
-    // $1-bin counts -> bin cumsum -> intra-bin interpolation floored
-    // to the cent, twice (values, then deviations); all operands
-    // non-negative so DuckDB's // agrees with Det.fdiv
     // type-1 inverse-CDF read-off at rank max(1, ceil(N*p/100)); the
     // Spark side computes the identical rank distributively (DistRank)
     "e55_exact_percentiles" ->
@@ -1895,6 +1888,9 @@ object Events {
     // serves both faces verbatim (the e41/e57 discipline) — DuckDB's
     // sums are HUGEINT already, exact truth for either width
     "e58_gini_decimal" -> giniOracle,
+    // $1-bin counts -> bin cumsum -> intra-bin interpolation floored
+    // to the cent, twice (values, then deviations); all operands
+    // non-negative so DuckDB's // agrees with Det.fdiv
     "e54_binned_mad_outliers" ->
       s"""WITH j AS (SELECT event_type,
         |    CAST(round(value * 100, 0) AS BIGINT) AS c FROM events),
@@ -1980,6 +1976,10 @@ object Events {
          |  ${D.r4("n_conv * total_users", "n_users * total_conv")} AS lift,
          |  ${D.r4("cum_conv", "total_conv")} AS cum_gain
          |FROM c ORDER BY decile""".stripMargin,
+    // per-user RFM collapse, epoch-µs recency floor-div, ntile(4) over
+    // (metric, user_id) total orders — the same rank both engines
+    // compute; monetary is exact integer cents; CASTs keep DuckDB's
+    // HUGEINT sums off the schema
     "e50_rfm_segments" ->
       s"""WITH per AS (SELECT user_id, max(ts) AS last_ts, count(*) AS freq,
          |    CAST(sum(CASE WHEN event_type = 'purchase'

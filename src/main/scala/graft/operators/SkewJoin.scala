@@ -16,6 +16,10 @@ import org.apache.spark.sql.functions._
   * types AQE won't split). */
 object SkewJoin {
 
+  /** How many times the ideal per-task share the hottest key may hold
+    * before [[shouldSalt]] salts the join. */
+  val StragglerFactor = 2.0
+
   /** Equi-join `big ⋈ small` on `bigKey === smallKey`, salting the big
     * side by `hash(idCol) % saltFactor` and exploding the small side
     * across every salt value. Result equals the unsalted join. */
@@ -47,17 +51,17 @@ object SkewJoin {
   }
 
   /** The straggler test: salt iff the hottest key exceeds
-    * `stragglerFactor` × the ideal per-task share at
+    * [[StragglerFactor]] × the ideal per-task share at
     * `targetParallelism` reducers. This subsumes both skew shapes q26
     * surfaces — a single dominant key (max/mean ratio ≫ 1) and a
     * balanced-but-tiny key domain (|keys| < reducers, each key a
     * straggler). A well-distributed key (max·P ≪ total) keeps the
     * plain one-exchange join: salting it would only pay the ×salt
     * replication of the small side for nothing. */
-  def shouldSalt(maxCnt: Long, totalRows: Long, targetParallelism: Int,
-      stragglerFactor: Double = 2.0): Boolean =
+  def shouldSalt(maxCnt: Long, totalRows: Long,
+      targetParallelism: Int): Boolean =
     totalRows > 0 &&
-      maxCnt.toDouble * targetParallelism > stragglerFactor * totalRows
+      maxCnt.toDouble * targetParallelism > StragglerFactor * totalRows
 
   /** Statistics-driven join: measure the big side's key distribution
     * (the q26 profiler's count table) and pick the salted or the plain

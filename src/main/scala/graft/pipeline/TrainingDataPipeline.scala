@@ -24,6 +24,13 @@ import graft.operators.{TextOps, VectorOps}
   */
 object TrainingDataPipeline {
 
+  /** The quality floor a curated document must reach (d27/d40). */
+  val MinQuality = 0.5
+
+  /** The repetition gate: d40 drops a train doc whose d18 dup-3gram
+    * fraction exceeds this. */
+  val MaxDupFrac = 0.5
+
   /** Returns the curated corpus: one row per surviving document with
     * token statistics attached.
     *
@@ -45,8 +52,7 @@ object TrainingDataPipeline {
     * the near-dup drop list stays a join (it needs the LSH pair graph
     * — session-cached, broadcast). d27 1.0 s → ~0.5 s at sf0.1; d40
     * inherits the same savings. */
-  def curate(spark: SparkSession, sfDir: String,
-      minQuality: Double = 0.5): DataFrame = {
+  def curate(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val dropNear = TextOps.dupClusters(spark, sfDir)
       .filter($"doc_id" =!= $"cluster_id")
@@ -60,7 +66,7 @@ object TrainingDataPipeline {
         $"quality", $"norm_md5", $"norm_hash")
       .withColumn("norm_min", min($"doc_id").over(wNorm))
       .withColumn("exact_min", min($"doc_id").over(wExact))
-      .filter($"quality" >= minQuality &&
+      .filter($"quality" >= MinQuality &&
         $"doc_id" === $"norm_min" && $"doc_id" === $"exact_min")
       .join(broadcast(dropNear), Seq("doc_id"), "left_anti")
       .select($"doc_id", $"lang", $"source", $"n_chars",
@@ -100,17 +106,16 @@ object TrainingDataPipeline {
     * hash predicate, the two gates are broadcast anti-joins against
     * small drop-lists, and packing's window runs shard-parallel over
     * whatever survives. */
-  def curateAndPack(spark: SparkSession, sfDir: String,
-      minQuality: Double = 0.5, maxDupFrac: Double = 0.5): DataFrame = {
+  def curateAndPack(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val trainIds = TextOps.withSampleSplit(Tables.documents(spark, sfDir))
       .filter($"split" === "train").select($"doc_id")
     // repetition DROP LIST = docs whose d18 dup-3gram fraction exceeds
-    // maxDupFrac: d18 itself ([[TextOps.repetition]] — per-doc explode →
+    // MaxDupFrac: d18 itself ([[TextOps.repetition]] — per-doc explode →
     // hash-agg of the 3-grams and of the top 2-gram, joined on doc_id),
     // filtered, so the gate and d18 can never disagree.
     val dropRepetitive = TextOps.repetition(spark, sfDir)
-      .filter($"dup_3gram_frac" > maxDupFrac)
+      .filter($"dup_3gram_frac" > MaxDupFrac)
       .select($"doc_id")
     // contamination DROP LIST = train docs with ≥1 shared shingle —
     // exactly d15's hit set (its n_ngrams/ratio columns exist only for
@@ -123,7 +128,7 @@ object TrainingDataPipeline {
           splitDocs.filter($"split" === "test"))
         .select($"h").distinct()), "h")
       .select($"doc_id").distinct()
-    val survivors = curate(spark, sfDir, minQuality)
+    val survivors = curate(spark, sfDir)
       .join(trainIds, Seq("doc_id"), "left_semi")
       .join(broadcast(dropRepetitive), Seq("doc_id"), "left_anti")
       .join(broadcast(dropContaminated), Seq("doc_id"), "left_anti")

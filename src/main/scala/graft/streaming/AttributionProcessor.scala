@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** Streaming last-touch attribution — the ingest face of the e47 batch
   * query (the e44/s36 pairing): events arrive in time-partitioned
@@ -79,19 +78,15 @@ object AttribMachine {
 }
 
 class AttributionProcessor
-    extends StatefulProcessor[Long, AttribEvent, AttribHit] {
+    extends ValueFold[Long, AttribEvent, LastClick, AttribHit] {
 
-  @transient private var st: ValueState[LastClick] = _
+  protected def stateName = "last_click"
+  protected def stateEncoder = Encoders.product[LastClick]
+  protected def zero(key: Long): LastClick = null
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[LastClick](
-      "last_click", Encoders.product[LastClick], TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[AttribEvent],
-      timers: TimerValues): Iterator[AttribHit] = {
-    val (last, hits) = AttribMachine.fold(
-      if (st.exists()) st.get() else null, rows.toArray.toIndexedSeq)
-    if (last != null) st.update(last)
-    hits.iterator
+  protected def fold(key: Long, s0: LastClick,
+      rows: Iterator[AttribEvent]): (LastClick, Iterator[AttribHit]) = {
+    val (last, hits) = AttribMachine.fold(s0, rows.toArray.toIndexedSeq)
+    (last, hits.iterator)
   }
 }

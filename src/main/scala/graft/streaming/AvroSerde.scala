@@ -49,7 +49,9 @@ object AvroSerde {
       user_id: java.lang.Long, event_type: String,
       value: java.lang.Double, props: String)
 
-  private def micros(ts: java.sql.Timestamp): Long = {
+  /** `ts` as epoch microseconds — the wire's `timestamp-micros` value,
+    * and the one Timestamp→µs conversion the streaming code uses. */
+  private[graft] def micros(ts: java.sql.Timestamp): Long = {
     val i = ts.toInstant
     i.getEpochSecond * 1000000L + i.getNano / 1000L
   }

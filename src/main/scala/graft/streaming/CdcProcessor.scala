@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** Streaming change-data-capture against a keyed snapshot — the ingest
   * face of the d49 batch diff: the OLD snapshot loads each key's
@@ -32,31 +31,29 @@ case class CdcEmit(k: Long, status: String, new_chars: Long,
 case class SnapState(h: String, chars: Long)
 
 class CdcProcessor
-    extends StatefulProcessor[Long, SnapEvent, CdcEmit] {
+    extends ValueFold[Long, SnapEvent, SnapState, CdcEmit] {
 
-  @transient private var st: ValueState[SnapState] = _
+  protected def stateName = "snap"
+  protected def stateEncoder = Encoders.product[SnapState]
+  protected def zero(key: Long): SnapState = null
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[SnapState](
-      "snap", Encoders.product[SnapState], TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[SnapEvent],
-      timers: TimerValues): Iterator[CdcEmit] = {
+  protected def fold(key: Long, s0: SnapState,
+      rows: Iterator[SnapEvent]): (SnapState, Iterator[CdcEmit]) = {
+    var s = s0
     val out = Seq.newBuilder[CdcEmit]
     // "O" before "N" within a batch mirrors the side-partitioned
     // delivery (the two sides arrive in separate batches anyway) —
     // note 'O' > 'N' in ASCII, hence the reversed ordering
     rows.toArray.sortBy(_.side)(Ordering[String].reverse).foreach { e =>
       e.side match {
-        case "O" => st.update(SnapState(e.h, e.chars))
+        case "O" => s = SnapState(e.h, e.chars)
         case _ =>
-          val s = if (st.exists()) st.get() else null
           if (s == null) out += CdcEmit(key, "added", e.chars, 0L)
           else if (s.h == e.h)
             out += CdcEmit(key, "unchanged", e.chars, s.chars)
           else out += CdcEmit(key, "changed", e.chars, s.chars)
       }
     }
-    out.result().iterator
+    (s, out.result().iterator)
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** Streaming CUSUM mean-shift monitor — the PROSPECTIVE face of the e41
   * batch changepoint scan: a baseline period fixes each key's reference
@@ -38,18 +37,16 @@ case class CusumPoint(user_id: Long, ts_us: Long, event_id: Long,
 case class CusumState(n0: Long, s0: Long, c: Long)
 
 class CusumProcessor
-    extends StatefulProcessor[Long, CusumEvent, CusumPoint] {
+    extends ValueFold[Long, CusumEvent, CusumState, CusumPoint] {
 
-  @transient private var st: ValueState[CusumState] = _
+  protected def stateName = "cusum"
+  protected def stateEncoder = Encoders.product[CusumState]
+  protected def zero(key: Long) = CusumState(0L, 0L, 0L)
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[CusumState](
-      "cusum", Encoders.product[CusumState], TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[CusumEvent],
-      timers: TimerValues): Iterator[CusumPoint] = {
+  protected def fold(key: Long, s0: CusumState,
+      rows: Iterator[CusumEvent]): (CusumState, Iterator[CusumPoint]) = {
     val out = scala.collection.mutable.ArrayBuffer[CusumPoint]()
-    var s = if (st.exists()) st.get() else CusumState(0L, 0L, 0L)
+    var s = s0
     rows.toArray.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
       if (e.side == "B") {
         s = s.copy(n0 = s.n0 + 1, s0 = s.s0 + e.cents)
@@ -59,7 +56,6 @@ class CusumProcessor
         out += CusumPoint(key, e.ts_us, e.event_id, c, s.n0)
       }
     }
-    st.update(s)
-    out.iterator
+    (s, out.iterator)
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** Streaming ordered-funnel state machine — the ingest face of the e44
   * batch funnel (the same pairing as e39/s30 and e41/s31): events
@@ -68,20 +67,15 @@ object FunnelMachine {
 }
 
 class FunnelProcessor
-    extends StatefulProcessor[Long, FunnelEvent, FunnelDepth] {
+    extends ValueFold[Long, FunnelEvent, FunnelState, FunnelDepth] {
 
-  @transient private var st: ValueState[FunnelState] = _
+  protected def stateName = "funnel"
+  protected def stateEncoder = Encoders.product[FunnelState]
+  protected def zero(key: Long) = FunnelMachine.zero
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[FunnelState](
-      "funnel", Encoders.product[FunnelState], TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[FunnelEvent],
-      timers: TimerValues): Iterator[FunnelDepth] = {
-    val s = FunnelMachine.fold(
-      if (st.exists()) st.get() else FunnelMachine.zero,
-      rows.toArray.toIndexedSeq)
-    st.update(s)
-    Iterator.single(FunnelDepth(key, FunnelMachine.stage(s)))
+  protected def fold(key: Long, s0: FunnelState,
+      rows: Iterator[FunnelEvent]): (FunnelState, Iterator[FunnelDepth]) = {
+    val s = FunnelMachine.fold(s0, rows.toArray.toIndexedSeq)
+    (s, Iterator.single(FunnelDepth(key, FunnelMachine.stage(s))))
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** Incremental inverted-index statistics — the streaming face of the
   * d37 batch build: per-term document frequency and total term
@@ -22,23 +21,18 @@ case class TermDocTf(term: String, doc_id: Long, tf: Long)
 case class TermStats(term: String, df: Long, tf_total: Long)
 
 class IndexStatsProcessor
-    extends StatefulProcessor[String, TermDocTf, TermStats] {
+    extends ValueFold[String, TermDocTf, TermStats, TermStats] {
 
-  @transient private var stats: ValueState[TermStats] = _
+  protected def stateName = "stats"
+  protected def stateEncoder = Encoders.product[TermStats]
+  protected def zero(key: String) = TermStats(key, 0L, 0L)
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    stats = getHandle.getValueState[TermStats](
-      "stats", Encoders.product[TermStats], TTLConfig.NONE)
-
-  override def handleInputRows(key: String, rows: Iterator[TermDocTf],
-      timers: TimerValues): Iterator[TermStats] = {
+  protected def fold(key: String, prev: TermStats,
+      rows: Iterator[TermDocTf]): (TermStats, Iterator[TermStats]) = {
     var df = 0L
     var tf = 0L
     rows.foreach { r => df += 1L; tf += r.tf }
-    val prev =
-      if (stats.exists()) stats.get() else TermStats(key, 0L, 0L)
     val next = TermStats(key, prev.df + df, prev.tf_total + tf)
-    stats.update(next)
-    Iterator.single(next)
+    (next, Iterator.single(next))
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessorWithInitialState, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{StatefulProcessorWithInitialState, TimerValues}
 
 /** Per-user running (count, exact-cents sum) — a KTable aggregate with
   * the WARM-START path: the Kafka Streams changelog-restore /
@@ -24,55 +24,35 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessorWithInitialS
 case class UserDelta(user_id: Long, cents: Long)
 case class UserCounts(user_id: Long, n_events: Long, cents: Long)
 
+/** Per-user running (count, cents) totals under the `totals` state
+  * variable — the fold s43's bootstrap run and s44's version 1 share. */
+trait UserTotalsFold extends ValueFold[Long, UserDelta, UserCounts, UserCounts] {
+  protected def stateName = "totals"
+  protected def stateEncoder = Encoders.product[UserCounts]
+  protected def zero(key: Long) = UserCounts(key, 0L, 0L)
+
+  protected def fold(key: Long, prev: UserCounts,
+      rows: Iterator[UserDelta]): (UserCounts, Iterator[UserCounts]) = {
+    val cur = rows.foldLeft(prev)((c, r) =>
+      UserCounts(key, c.n_events + 1L, c.cents + r.cents))
+    (cur, Iterator.single(cur))
+  }
+}
+
 class CountBootstrapProcessor
     extends StatefulProcessorWithInitialState[
-      Long, UserDelta, UserCounts, UserCounts] {
-
-  @transient private var totals: ValueState[UserCounts] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    totals = getHandle.getValueState[UserCounts](
-      "totals", Encoders.product[UserCounts], TTLConfig.NONE)
+      Long, UserDelta, UserCounts, UserCounts] with UserTotalsFold {
 
   /** Batch-0 snapshot load: one state write per snapshot key, no
     * emission — the changelog restore is not itself an update. */
   override def handleInitialState(key: Long, initialState: UserCounts,
       timers: TimerValues): Unit =
-    totals.update(initialState)
-
-  override def handleInputRows(key: Long, rows: Iterator[UserDelta],
-      timers: TimerValues): Iterator[UserCounts] = {
-    var cur =
-      if (totals.exists()) totals.get() else UserCounts(key, 0L, 0L)
-    rows.foreach(r =>
-      cur = UserCounts(key, cur.n_events + 1L, cur.cents + r.cents))
-    totals.update(cur)
-    Iterator.single(cur)
-  }
+    valueState.update(initialState)
 }
 
 /** s44's VERSION 1 — the processor a deployment ran before the upgrade:
   * plain per-user (count, cents) totals, cold start. */
-class CountV1Processor
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      Long, UserDelta, UserCounts] {
-
-  @transient private var totals: ValueState[UserCounts] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    totals = getHandle.getValueState[UserCounts](
-      "totals", Encoders.product[UserCounts], TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[UserDelta],
-      timers: TimerValues): Iterator[UserCounts] = {
-    var cur =
-      if (totals.exists()) totals.get() else UserCounts(key, 0L, 0L)
-    rows.foreach(r =>
-      cur = UserCounts(key, cur.n_events + 1L, cur.cents + r.cents))
-    totals.update(cur)
-    Iterator.single(cur)
-  }
-}
+class CountV1Processor extends UserTotalsFold
 
 /** s44's VERSION 2 state: the upgrade adds `cents_new` — revenue since
   * the upgrade — as an Option so pre-upgrade rows read back as None
@@ -86,24 +66,17 @@ case class UserCountsV2(user_id: Long, n_events: Long, cents: Long,
   * cents_new = None, and the fold starts the new metric from zero
   * while counts/cents continue uninterrupted. */
 class CountV2Processor
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      Long, UserDelta, UserCountsV2] {
+    extends ValueFold[Long, UserDelta, UserCountsV2, UserCountsV2] {
 
-  @transient private var totals: ValueState[UserCountsV2] = _
+  protected def stateName = "totals"
+  protected def stateEncoder = Encoders.product[UserCountsV2]
+  protected def zero(key: Long) = UserCountsV2(key, 0L, 0L, None)
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    totals = getHandle.getValueState[UserCountsV2](
-      "totals", Encoders.product[UserCountsV2], TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[UserDelta],
-      timers: TimerValues): Iterator[UserCountsV2] = {
-    var cur = if (totals.exists()) totals.get()
-      else UserCountsV2(key, 0L, 0L, None)
-    rows.foreach { r =>
-      cur = UserCountsV2(key, cur.n_events + 1L, cur.cents + r.cents,
-        Some(cur.cents_new.getOrElse(0L) + r.cents))
-    }
-    totals.update(cur)
-    Iterator.single(cur)
+  protected def fold(key: Long, prev: UserCountsV2,
+      rows: Iterator[UserDelta]): (UserCountsV2, Iterator[UserCountsV2]) = {
+    val cur = rows.foldLeft(prev)((c, r) =>
+      UserCountsV2(key, c.n_events + 1L, c.cents + r.cents,
+        Some(c.cents_new.getOrElse(0L) + r.cents)))
+    (cur, Iterator.single(cur))
   }
 }

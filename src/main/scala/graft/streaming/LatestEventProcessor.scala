@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** KTable materialization on Spark 4's `transformWithState` API — the
   * successor to `flatMapGroupsWithState` with named state variables and
@@ -18,30 +17,21 @@ case class LatestEvent(user_id: Long, event_id: Long, ts_us: Long,
     event_type: String, value: Double)
 
 class LatestEventProcessor
-    extends StatefulProcessor[Long, EventRow, LatestEvent] {
+    extends ValueFold[Long, EventRow, LatestEvent, LatestEvent] {
 
-  @transient private var latest: ValueState[LatestEvent] = _
+  protected def stateName = "latest"
+  protected def stateEncoder = Encoders.product[LatestEvent]
+  protected def zero(key: Long): LatestEvent = null
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    latest = getHandle.getValueState[LatestEvent](
-      "latest", Encoders.product[LatestEvent], TTLConfig.NONE)
-
-  private def micros(r: EventRow): Long =
-    r.ts.getTime * 1000L + (r.ts.getNanos % 1000000) / 1000L
-
-  override def handleInputRows(key: Long, rows: Iterator[EventRow],
-      timers: TimerValues): Iterator[LatestEvent] = {
-    var cur = if (latest.exists()) latest.get() else null
+  protected def fold(key: Long, prev: LatestEvent,
+      rows: Iterator[EventRow]): (LatestEvent, Iterator[LatestEvent]) = {
+    var cur = prev
     rows.foreach { r =>
-      val tsUs = micros(r)
+      val tsUs = AvroSerde.micros(r.ts)
       if (cur == null || tsUs > cur.ts_us ||
           (tsUs == cur.ts_us && r.event_id > cur.event_id))
         cur = LatestEvent(key, r.event_id, tsUs, r.event_type, r.value)
     }
-    if (cur == null) Iterator.empty
-    else {
-      latest.update(cur)
-      Iterator.single(cur)
-    }
+    (cur, Option(cur).iterator)
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** Streaming rolling z-score anomaly detection — the ingest face of the
   * e39 batch query: every event is scored against the
@@ -47,20 +46,17 @@ object RollingAnomalyProcessor {
 }
 
 class RollingAnomalyProcessor
-    extends StatefulProcessor[Long, AnomalyEvent, AnomalyScore] {
+    extends ValueFold[Long, AnomalyEvent, AnomalyRing, AnomalyScore] {
   import RollingAnomalyProcessor.W
 
-  @transient private var ring: ValueState[AnomalyRing] = _
+  protected def stateName = "ring"
+  protected def stateEncoder = Encoders.product[AnomalyRing]
+  protected def zero(key: Long) = AnomalyRing(Seq.empty)
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    ring = getHandle.getValueState[AnomalyRing](
-      "ring", Encoders.product[AnomalyRing], TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[AnomalyEvent],
-      timers: TimerValues): Iterator[AnomalyScore] = {
+  protected def fold(key: Long, ring: AnomalyRing,
+      rows: Iterator[AnomalyEvent]): (AnomalyRing, Iterator[AnomalyScore]) = {
     val out = scala.collection.mutable.ArrayBuffer[AnomalyScore]()
-    val vals = scala.collection.mutable.ArrayDeque.from(
-      if (ring.exists()) ring.get().vals else Seq.empty[Long])
+    val vals = scala.collection.mutable.ArrayDeque.from(ring.vals)
     // running Σx / Σx² maintained with the entering/leaving element —
     // O(1) per event instead of an O(W) rescan on the hot path
     var sx = 0L; var sxx = 0L
@@ -75,7 +71,6 @@ class RollingAnomalyProcessor
         sx -= old; sxx -= old * old
       }
     }
-    ring.update(AnomalyRing(vals.toSeq))
-    out.iterator
+    (AnomalyRing(vals.toSeq), out.iterator)
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** s51's state: the per-shard manifest counters (docs, tokens, bytes)
   * of the training-output sharding step — d57's manifest cells as
@@ -20,22 +19,15 @@ case class ShardDelta(shard: Long, toks: Long, bytes: Long)
 case class ShardCell(n_docs: Long, n_tokens: Long, n_bytes: Long)
 
 class ShardStatsProcessor
-    extends StatefulProcessor[Long, ShardDelta, ShardDelta] {
+    extends ValueFold[Long, ShardDelta, ShardCell, ShardDelta] {
 
-  @transient private var cell: ValueState[ShardCell] = _
+  protected def stateName = "cell"
+  protected def stateEncoder = Encoders.product[ShardCell]
+  protected def zero(key: Long) = ShardCell(0L, 0L, 0L)
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    cell = getHandle.getValueState[ShardCell](
-      "cell", Encoders.product[ShardCell], TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[ShardDelta],
-      timers: TimerValues): Iterator[ShardDelta] = {
-    var acc = if (cell.exists()) cell.get() else ShardCell(0L, 0L, 0L)
-    rows.foreach { r =>
-      acc = ShardCell(acc.n_docs + 1L, acc.n_tokens + r.toks,
-        acc.n_bytes + r.bytes)
-    }
-    cell.update(acc)
-    Iterator.empty
-  }
+  protected def fold(key: Long, acc: ShardCell,
+      rows: Iterator[ShardDelta]): (ShardCell, Iterator[ShardDelta]) =
+    (rows.foldLeft(acc) { (c, r) =>
+      ShardCell(c.n_docs + 1L, c.n_tokens + r.toks, c.n_bytes + r.bytes)
+    }, Iterator.empty)
 }

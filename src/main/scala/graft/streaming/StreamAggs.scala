@@ -38,10 +38,7 @@ trait StreamAggOps extends StreamRuntime {
     import events.sparkSession.implicits._
     val gapUs = gapMs * 1000L
 
-    // java.sql.Timestamp keeps microseconds in the nanos field;
     // session bounds must stay µs-exact to match batch session_window
-    def toMicros(t: Timestamp): Long =
-      t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
     def fromMicros(us: Long): Timestamp = {
       val t = new Timestamp(us / 1000L)
       t.setNanos(((us % 1000000L) * 1000L).toInt)
@@ -51,7 +48,7 @@ trait StreamAggOps extends StreamRuntime {
     def fn(userId: Long, rows: Iterator[EventRow],
         state: GroupState[List[(Long, Long, Long)]]): Iterator[SessionOut] = {
       // state: open sessions as (startUs, lastUs, count)
-      val sorted = rows.map(r => toMicros(r.ts)).toSeq.sorted
+      val sorted = rows.map(r => AvroSerde.micros(r.ts)).toSeq.sorted
       var sessions = state.getOption.getOrElse(Nil)
       for (t <- sorted) {
         sessions = sessions match {

@@ -114,49 +114,6 @@ trait StreamIngestOps extends StreamRuntime {
       .orderBy($"d1", $"d2")
   }
 
-  /** The s48 serving checkpoint for `sfDir`, if built this session —
-    * exposed so StateBoundSpec can read the index store out-of-band. */
-  private[graft] def serveCheckpoint(sfDir: String): Option[String] =
-    cachedDir("s48", sfDir)
-
-  /** s48: the STREAMING SERVING capstone — v30's ingest face (r10
-    * verdict item 7). The production retrieval loop is ingest → index
-    * update → serve; v30 serves a STATIC index. This query closes the
-    * loop as two phases over the same corpus:
-    *
-    * PHASE 1 (ingest/index update): the embeddings arrive as two
-    * mtime-ordered micro-batches. In-stream, each vector is (a)
-    * en-PRE-filtered against the documents table (v25's
-    * filter-before-rank discipline, a stream-static join), (b)
-    * assigned its IVF cell by argmax against the broadcast
-    * 6-dp-rounded centroid model — s34's streaming-assignment shape —
-    * and (c) scored against the query vector (same `graft_cosine`,
-    * same round-6 as v30's candidate stage). Per cell, a
-    * [[TopNProcessor]] (s18's bounded leaderboard, n = DivCap) folds
-    * the scored vectors into ValueState: the state IS the serving
-    * index — per-cell top-DivCap, updated as batches land, never a
-    * corpus log (StateBoundSpec pins rows == occupied cells).
-    *
-    * PHASE 2 (serve): the store is read OUT-OF-BAND at the last
-    * committed batchId (the s42/s43 interactive-query discipline — no
-    * streaming query running), the query's DivProbe nearest cells
-    * select which per-cell buffers serve, and v30's stages 4–5 run on
-    * the ≤ DivProbe·DivCap surviving rows: ServeTau near-dup
-    * suppression (broadcast-fed NL over a config-bounded pair matrix)
-    * and the final top-5.
-    *
-    * The oracle IS v30's oracle — [[graft.operators.VectorOps
-    * .retrievalPipelineSql]], shared verbatim — so the hash asserts
-    * the full loop: a lost batch, a mis-assigned cell, a buffer that
-    * evicted the wrong candidate, a stale-batchId read, or a drifted
-    * suppression all surface as the served top-5 diverging from the
-    * batch truth.
-    *
-    * Scale design: per-batch work is one pass over ARRIVING vectors
-    * (codegen'd argmax over k broadcast centroids + one bounded fold);
-    * state is cells × DivCap rows — config-bounded, not corpus-bounded;
-    * the serve path touches DivProbe buffers and a ≤ 12-row tail. The
-    * corpus is never rescanned after ingest. */
   /** The s48/s50 ingest-side projection over a raw vector stream
     * (`vec_id`, `v`, plus any extra columns, which ride through): en
     * PRE-filter (stream-static broadcast join, v25's discipline),
@@ -222,6 +179,44 @@ trait StreamIngestOps extends StreamRuntime {
       .select($"vec_id", $"cell", $"cos")
   }
 
+  /** s48: the STREAMING SERVING capstone — v30's ingest face (r10
+    * verdict item 7). The production retrieval loop is ingest → index
+    * update → serve; v30 serves a STATIC index. This query closes the
+    * loop as two phases over the same corpus:
+    *
+    * PHASE 1 (ingest/index update): the embeddings arrive as two
+    * mtime-ordered micro-batches. In-stream, each vector is (a)
+    * en-PRE-filtered against the documents table (v25's
+    * filter-before-rank discipline, a stream-static join), (b)
+    * assigned its IVF cell by argmax against the broadcast
+    * 6-dp-rounded centroid model — s34's streaming-assignment shape —
+    * and (c) scored against the query vector (same `graft_cosine`,
+    * same round-6 as v30's candidate stage). Per cell, a
+    * [[TopNProcessor]] (s18's bounded leaderboard, n = DivCap) folds
+    * the scored vectors into ValueState: the state IS the serving
+    * index — per-cell top-DivCap, updated as batches land, never a
+    * corpus log (StateBoundSpec pins rows == occupied cells).
+    *
+    * PHASE 2 (serve): the store is read OUT-OF-BAND at the last
+    * committed batchId (the s42/s43 interactive-query discipline — no
+    * streaming query running), the query's DivProbe nearest cells
+    * select which per-cell buffers serve, and v30's stages 4–5 run on
+    * the ≤ DivProbe·DivCap surviving rows: ServeTau near-dup
+    * suppression (broadcast-fed NL over a config-bounded pair matrix)
+    * and the final top-5.
+    *
+    * The oracle IS v30's oracle — [[graft.operators.VectorOps
+    * .retrievalPipelineSql]], shared verbatim — so the hash asserts
+    * the full loop: a lost batch, a mis-assigned cell, a buffer that
+    * evicted the wrong candidate, a stale-batchId read, or a drifted
+    * suppression all surface as the served top-5 diverging from the
+    * batch truth.
+    *
+    * Scale design: per-batch work is one pass over ARRIVING vectors
+    * (codegen'd argmax over k broadcast centroids + one bounded fold);
+    * state is cells × DivCap rows — config-bounded, not corpus-bounded;
+    * the serve path touches DivProbe buffers and a ≤ 12-row tail. The
+    * corpus is never rescanned after ingest. */
   def streamServeTopK(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val DivCap = graft.operators.VectorOps.DivCap
@@ -239,12 +234,6 @@ trait StreamIngestOps extends StreamRuntime {
     }
     serveTopKFromStore(spark, sfDir, ckStr)
   }
-
-  /** The s50 serving checkpoint for `sfDir`, if built this session —
-    * exposed so StateBoundSpec can read the index + tombstone stores
-    * out-of-band. */
-  private[graft] def tombCheckpoint(sfDir: String): Option[String] =
-    cachedDir("s50", sfDir)
 
   /** s50: INDEX DELETION / TOMBSTONE MAINTENANCE — the one production
     * seam s48's insert-only serving index leaves open (r11 verdict
@@ -331,12 +320,6 @@ trait StreamIngestOps extends StreamRuntime {
     }
     serveTopKFromStore(spark, sfDir, ckStr)
   }
-
-  /** The s49 CMS checkpoint for `sfDir`, if built this session —
-    * exposed so StateBoundSpec can read the sketch store
-    * out-of-band. */
-  private[graft] def cmsCheckpoint(sfDir: String): Option[String] =
-    cachedDir("s49", sfDir)
 
   /** s49: STREAMING COUNT-MIN — x05's ingest face, completing the
     * sketch-family symmetry (x01 batch ↔ x03 merge ↔ this for
@@ -747,12 +730,6 @@ trait StreamIngestOps extends StreamRuntime {
           lit(100L)).as("approx_median"))
       .orderBy($"event_type")
   }
-
-  /** The s51 shard-manifest checkpoint for `sfDir`, if built this
-    * session — exposed so StateBoundSpec can read the cell store
-    * out-of-band. */
-  private[graft] def shardCheckpoint(sfDir: String): Option[String] =
-    cachedDir("s51", sfDir)
 
   /** s51: STREAMING SHARD-MANIFEST ingest — d57's training-output
     * manifest as a running fold, the shape a continuous-crawl writer

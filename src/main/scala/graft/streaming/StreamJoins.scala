@@ -9,24 +9,53 @@ import org.apache.spark.sql.functions._
   * changelog join, and the streaming as-of join. */
 trait StreamJoinOps extends StreamRuntime {
 
+  /** The view→purchase join the s05/s06/s13/s27 variants share: `views`
+    * and `purchases` (already filtered and watermarked — where each
+    * variant applies its watermark is part of its semantics) projected
+    * to their join columns, then joined as `joinType` on the same user
+    * with purchase_ts in [view_ts, view_ts + Δ]. */
+  private def viewPurchase(views: DataFrame, purchases: DataFrame,
+      joinWindow: String, joinType: String): DataFrame =
+    views.select(col("event_id").as("view_id"), col("user_id"),
+        col("ts").as("view_ts"))
+      .join(purchases.select(col("event_id").as("purchase_id"),
+          col("user_id").as("p_user"), col("ts").as("purchase_ts"),
+          col("value").as("purchase_value")),
+        col("user_id") === col("p_user") &&
+          col("purchase_ts") >= col("view_ts") &&
+          col("purchase_ts") <= col("view_ts") + expr(s"INTERVAL $joinWindow"),
+        joinType)
+
+  /** Views and purchases each watermarked AFTER its event-type filter —
+    * the inner and semi joins' sides. */
+  private def viewPurchaseFiltered(events: DataFrame, joinWindow: String,
+      joinType: String): DataFrame = {
+    def side(eventType: String) =
+      events.filter(col("event_type") === eventType)
+        .withWatermark("ts", joinWindow)
+    viewPurchase(side("view"), side("purchase"), joinWindow, joinType)
+  }
+
+  /** Views and purchases filtered AFTER one shared watermark, so a
+    * flush row advances it before the filters drop it — the left and
+    * outer joins' sides. The `ts < flushBound` conjunct references the
+    * event-time column, so predicate pushdown cannot move it below the
+    * EventTimeWatermark operator (the event_type conjunct CAN be pushed
+    * to the scan — harmless, since sentinels exist per type). */
+  private def viewPurchaseFlushed(events: DataFrame, joinWindow: String,
+      watermark: String, joinType: String): DataFrame = {
+    val wm = events.withWatermark("ts", watermark)
+    def side(eventType: String) =
+      wm.filter(col("event_type") === eventType && col("ts") < flushBound)
+    viewPurchase(side("view"), side("purchase"), joinWindow, joinType)
+  }
+
   /** Windowed stream-stream inner join (KStream⋈KStream with
     * JoinWindows): purchase within [view_ts, view_ts + Δ]. */
-  def viewPurchaseJoin(events: DataFrame, joinWindow: String): DataFrame = {
-    val views = events.filter(col("event_type") === "view")
-      .withWatermark("ts", joinWindow)
-      .select(col("event_id").as("view_id"), col("user_id"),
-        col("ts").as("view_ts"))
-    val purchases = events.filter(col("event_type") === "purchase")
-      .withWatermark("ts", joinWindow)
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-        col("ts").as("purchase_ts"), col("value").as("purchase_value"))
-    views.join(purchases,
-      col("user_id") === col("p_user") &&
-        col("purchase_ts") >= col("view_ts") &&
-        col("purchase_ts") <= col("view_ts") + expr(s"INTERVAL $joinWindow"))
+  def viewPurchaseJoin(events: DataFrame, joinWindow: String): DataFrame =
+    viewPurchaseFiltered(events, joinWindow, "inner")
       .select(col("view_id"), col("purchase_id"), col("user_id"),
         round(col("purchase_value"), 2).as("purchase_value"))
-  }
 
   /** Windowed stream-stream LEFT SEMI join — the streaming EXISTS:
     * each view emits ONCE if any purchase lands in its window, never
@@ -36,21 +65,8 @@ trait StreamJoinOps extends StreamRuntime {
     * are strictly smaller than the inner join's (s05). Matched rows
     * emit as soon as the match arrives — no watermark-close dependence
     * — while the watermark still bounds both sides' buffers. */
-  def viewPurchaseSemiJoin(events: DataFrame, joinWindow: String): DataFrame = {
-    val views = events.filter(col("event_type") === "view")
-      .withWatermark("ts", joinWindow)
-      .select(col("event_id").as("view_id"), col("user_id"),
-        col("ts").as("view_ts"))
-    val purchases = events.filter(col("event_type") === "purchase")
-      .withWatermark("ts", joinWindow)
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-        col("ts").as("purchase_ts"))
-    views.join(purchases,
-      col("user_id") === col("p_user") &&
-        col("purchase_ts") >= col("view_ts") &&
-        col("purchase_ts") <= col("view_ts") + expr(s"INTERVAL $joinWindow"),
-      "left_semi")
-  }
+  def viewPurchaseSemiJoin(events: DataFrame, joinWindow: String): DataFrame =
+    viewPurchaseFiltered(events, joinWindow, "left_semi")
 
   /** s27: the semi join driven as a true stream against the EXISTS
     * oracle. Semi-join rows emit when the match arrives, never at
@@ -70,28 +86,10 @@ trait StreamJoinOps extends StreamRuntime {
     * event-type filters so a flush/heartbeat row can advance it (see
     * [[eventsStreamWithFlush]]). */
   def viewPurchaseLeftJoin(events: DataFrame, joinWindow: String,
-      watermark: String): DataFrame = {
-    val wm = events.withWatermark("ts", watermark)
-    // drops flush sentinels AFTER they advance the watermark: this
-    // conjunct references the event-time column, so predicate pushdown
-    // cannot move it below the EventTimeWatermark operator (the
-    // event_type conjunct CAN be pushed to the scan — harmless, since
-    // sentinels exist per type)
-    val realRows = col("ts") < flushBound
-    val views = wm.filter(col("event_type") === "view" && realRows)
-      .select(col("event_id").as("view_id"), col("user_id"),
-        col("ts").as("view_ts"))
-    val purchases = wm.filter(col("event_type") === "purchase" && realRows)
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-        col("ts").as("purchase_ts"), col("value").as("purchase_value"))
-    views.join(purchases,
-      col("user_id") === col("p_user") &&
-        col("purchase_ts") >= col("view_ts") &&
-        col("purchase_ts") <= col("view_ts") + expr(s"INTERVAL $joinWindow"),
-      "left_outer")
+      watermark: String): DataFrame =
+    viewPurchaseFlushed(events, joinWindow, watermark, "left_outer")
       .select(col("view_id"), col("purchase_id"), col("user_id"),
         round(col("purchase_value"), 2).as("purchase_value"))
-  }
 
   /** Windowed stream-stream FULL OUTER join (KStream.outerJoin with
     * JoinWindows): every view AND every purchase row is emitted —
@@ -101,24 +99,11 @@ trait StreamJoinOps extends StreamRuntime {
     * watermark, so state size is bounded by rows within the join window
     * regardless of stream length. */
   def viewPurchaseOuterJoin(events: DataFrame, joinWindow: String,
-      watermark: String): DataFrame = {
-    val wm = events.withWatermark("ts", watermark)
-    val realRows = col("ts") < flushBound
-    val views = wm.filter(col("event_type") === "view" && realRows)
-      .select(col("event_id").as("view_id"), col("user_id"),
-        col("ts").as("view_ts"))
-    val purchases = wm.filter(col("event_type") === "purchase" && realRows)
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-        col("ts").as("purchase_ts"), col("value").as("purchase_value"))
-    views.join(purchases,
-      col("user_id") === col("p_user") &&
-        col("purchase_ts") >= col("view_ts") &&
-        col("purchase_ts") <= col("view_ts") + expr(s"INTERVAL $joinWindow"),
-      "full_outer")
+      watermark: String): DataFrame =
+    viewPurchaseFlushed(events, joinWindow, watermark, "full_outer")
       .select(col("view_id"), col("purchase_id"),
         coalesce(col("user_id"), col("p_user")).as("user_id"),
         round(col("purchase_value"), 2).as("purchase_value"))
-  }
 
   /** KTable ⋈ KTable FK join with changelog semantics (see
     * [[FkJoinProcessor]]): both changelog streams merge into one stream

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** KStream ⋈ KTable against a CONTINUOUSLY-UPDATING table — the half of
   * Kafka Streams' `stream.join(table)` that a snapshot join (s14) can't
@@ -35,22 +34,21 @@ case class StJoined(event_id: Long, user_id: Long, event_type: String,
     dim_name: String)
 
 class StreamTableJoinProcessor
-    extends StatefulProcessor[Long, StEvent, StJoined] {
+    extends ValueFold[Long, StEvent, String, StJoined] {
 
-  @transient private var dim: ValueState[String] = _
+  protected def stateName = "dim"
+  protected def stateEncoder = Encoders.STRING
+  protected def zero(key: Long): String = null
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    dim = getHandle.getValueState[String](
-      "dim", Encoders.STRING, TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[StEvent],
-      timers: TimerValues): Iterator[StJoined] = {
+  protected def fold(key: Long, dim0: String,
+      rows: Iterator[StEvent]): (String, Iterator[StJoined]) = {
+    var dim = dim0
     val out = scala.collection.mutable.ArrayBuffer[StJoined]()
     rows.foreach { e =>
-      if (e.side == "T") dim.update(e.dim_name)
-      else if (dim.exists())
-        out += StJoined(e.event_id, e.user_id, e.event_type, dim.get())
+      if (e.side == "T") dim = e.dim_name
+      else if (dim != null)
+        out += StJoined(e.event_id, e.user_id, e.event_type, dim)
     }
-    out.iterator
+    (dim, out.iterator)
   }
 }

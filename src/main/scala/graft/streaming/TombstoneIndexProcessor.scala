@@ -52,7 +52,7 @@ class TombstoneIndexProcessor(n: Int)
   override def handleInputRows(key: String, rows: Iterator[TombEvent],
       timers: TimerValues): Iterator[TopNRow] = {
     val prev = if (buf.exists()) buf.get() else TopNBuf(Nil, Nil, 0L)
-    var top = prev.ids.zip(prev.vals).toList
+    var top = prev.ids.zip(prev.vals)
     rows.foreach { e =>
       if (e.side == "D") {
         tomb.updateValue(e.vec_id, true)

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import graft.functions.TopKBuffer
 
 /** Streaming grouped top-N — the continuously-maintained leaderboard a
   * Kafka Streams app keeps in a per-key store: for each key the N best
@@ -35,34 +35,26 @@ object TopNProcessor {
     * order-insensitive (the top-n under a total order is a commutative
     * monoid fold) — TopKProps pins that property against arbitrary
     * batch splits and orderings. */
-  def fold(top: List[(Long, Double)], rows: IterableOnce[(Long, Double)],
-      n: Int): List[(Long, Double)] =
-    rows.iterator.foldLeft(top) { (acc, e) =>
-      // sorted insert + trim: O(n) per row, buffer stays at ≤ n entries
-      val (beats, rest) = acc.span(better(_, e))
-      val ins = beats ::: e :: rest
-      if (ins.lengthCompare(n) > 0) ins.init else ins
-    }
+  def fold(top: Seq[(Long, Double)], rows: IterableOnce[(Long, Double)],
+      n: Int): Seq[(Long, Double)] =
+    rows.iterator.foldLeft(top)(TopKBuffer.insert(_, _, n)(better))
 }
 
 class TopNProcessor(n: Int)
-    extends StatefulProcessor[String, TopNEvent, TopNRow] {
+    extends ValueFold[String, TopNEvent, TopNBuf, TopNRow] {
 
-  @transient private var buf: ValueState[TopNBuf] = _
+  protected def stateName = "topn"
+  protected def stateEncoder = Encoders.product[TopNBuf]
+  protected def zero(key: String) = TopNBuf(Nil, Nil, 0L)
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    buf = getHandle.getValueState[TopNBuf]("topn",
-      Encoders.product[TopNBuf], TTLConfig.NONE)
-
-  override def handleInputRows(key: String, rows: Iterator[TopNEvent],
-      timers: TimerValues): Iterator[TopNRow] = {
-    val prev = if (buf.exists()) buf.get() else TopNBuf(Nil, Nil, 0L)
-    val top = TopNProcessor.fold(prev.ids.zip(prev.vals).toList,
+  protected def fold(key: String, prev: TopNBuf,
+      rows: Iterator[TopNEvent]): (TopNBuf, Iterator[TopNRow]) = {
+    val top = TopNProcessor.fold(prev.ids.zip(prev.vals),
       rows.map(e => (e.event_id, e.value)), n)
     val ver = prev.ver + 1
-    buf.update(TopNBuf(top.map(_._1), top.map(_._2), ver))
-    top.iterator.zipWithIndex.map { case ((id, v), i) =>
-      TopNRow(key, ver, i + 1L, id, v)
-    }
+    (TopNBuf(top.map(_._1), top.map(_._2), ver),
+      top.iterator.zipWithIndex.map { case ((id, v), i) =>
+        TopNRow(key, ver, i + 1L, id, v)
+      })
   }
 }

@@ -3315,7 +3315,7 @@ class TrainingDataPipelineSpec extends org.scalatest.funsuite.AnyFunSuite {
   test("curation pipeline composes quality gate + exact/near dedup") {
     import spark.implicits._
     val all = Tables.documents(spark, sf).count()
-    val curated = TrainingDataPipeline.curate(spark, sf, minQuality = 0.5)
+    val curated = TrainingDataPipeline.curate(spark, sf)
     val n = curated.count()
     assert(n > 0 && n <= all)
     // survivors are unique and pass the gate
@@ -4864,7 +4864,7 @@ class StateBoundSpec extends org.scalatest.funsuite.AnyFunSuite {
     val occupied = e.filter($"vec_id" =!= 0).join(allowed, "vec_id")
       .withColumn("m", array_max(array(scored: _*)))
       .select((-$"m.nl").as("cell")).distinct().count()
-    val ck = StreamOps.serveCheckpoint(sf)
+    val ck = StreamOps.cachedDir("s48", sf)
       .getOrElse(fail("no s48 checkpoint recorded"))
     val got = StreamOps.readState(spark, ck, "topn").count()
     assert(got == occupied,
@@ -4875,7 +4875,7 @@ class StateBoundSpec extends org.scalatest.funsuite.AnyFunSuite {
   test("s49 CMS state rows == occupied cells, hard-capped at d*w") {
     import spark.implicits._
     StreamOps.streamCountMin(spark, sf).collect()
-    val ck = StreamOps.cmsCheckpoint(sf)
+    val ck = StreamOps.cachedDir("s49", sf)
       .getOrElse(fail("no s49 checkpoint recorded"))
     val got = StreamOps.readState(spark, ck, "bins").count()
     // occupied (r, b) cells recomputed batch-side with the same exprs
@@ -4905,7 +4905,7 @@ class StateBoundSpec extends org.scalatest.funsuite.AnyFunSuite {
       s"erased ids served: ${servedIds & tombIds}")
     assert(servedIds != full.map(_.getLong(0)).toSet,
       "deletion left the served top-5 unchanged — not load-bearing")
-    val ck = StreamOps.tombCheckpoint(sf)
+    val ck = StreamOps.cachedDir("s50", sf)
       .getOrElse(fail("no s50 checkpoint recorded"))
     def stateVar(name: String) = StreamOps.readState(spark, ck, name)
     // buffers: one ValueState row per occupied cell, each ≤ DivCap
@@ -4994,7 +4994,7 @@ class StateBoundSpec extends org.scalatest.funsuite.AnyFunSuite {
   test("s51 state rows == occupied shards, hard-capped at ShardN") {
     import spark.implicits._
     val served = StreamOps.streamShardManifest(spark, sf).collect()
-    val ck = StreamOps.shardCheckpoint(sf)
+    val ck = StreamOps.cachedDir("s51", sf)
       .getOrElse(fail("no s51 checkpoint recorded"))
     val got = StreamOps.readState(spark, ck, "cell").count()
     // one ValueState cell per OCCUPIED shard — the hardest-capped

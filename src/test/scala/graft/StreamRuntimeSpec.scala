@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * one place that starts a stream, replays a changelog dir, reads a
   * state store or caches a scratch dir, it picks each run's state store
   * from the plan, and its [[withConf]] leaves the session conf exactly
-  * as it found it. */
+  * as it found it. Inside those runs, [[graft.streaming.ValueFold]] is
+  * the one place a single-ValueState processor's state plumbing lives. */
 class StreamRuntimeSpec extends AnyFunSuite {
   import graft.streaming.StreamOps
   lazy val spark = TestSession.spark
@@ -48,6 +49,20 @@ class StreamRuntimeSpec extends AnyFunSuite {
     Seq("conf = RocksDb", "StreamOps.RocksDb", "Some(8),").foreach { gone =>
       assert(MainSources.containing(gone).isEmpty, s"$gone is back")
     }
+  }
+
+  test("ValueFold holds the one-ValueState plumbing; only the processors it cannot express call getValueState") {
+    // NearDup: primitive Long state; AsOfJoin, FkJoin, TombstoneIndex:
+    // two state variables; SessionCount, TimerSession: timers;
+    // TtlCount: a TTL
+    assert(MainSources.containing("getValueState[") == Seq(
+      "graft/streaming/AsOfJoinProcessor.scala",
+      "graft/streaming/FkJoinProcessor.scala",
+      "graft/streaming/NearDupProcessor.scala",
+      "graft/streaming/TimerProcessors.scala",
+      "graft/streaming/TimerSessionProcessor.scala",
+      "graft/streaming/TombstoneIndexProcessor.scala",
+      "graft/streaming/ValueFold.scala"))
   }
 
   test("withConf restores set keys and leaves unset keys unset, also on a throw") {
