@@ -40,9 +40,20 @@ object Tables {
     *    TIMESTAMP_NTZ → cast to LTZ, which under the engine-wide UTC
     *    session timezone is value-preserving (the oracle reads the
     *    same file as a naive timestamp, so wall-clock values agree). */
-  def events(s: SparkSession, d: String): DataFrame = {
+  def events(s: SparkSession, d: String): DataFrame =
+    normalizeTs(rawEvents(s, d)._1)
+
+  /** The events fixture as stored (`ts` not yet normalized) and its
+    * path: the one read of that file, for [[events]] and the streaming
+    * sources. `nanosAsLong` must stay set for the LIFETIME of any query
+    * over it — the parquet reader consults it at every micro-batch, not
+    * just at schema inference — so it is never restored; it only affects
+    * nanos-annotated columns, which exist solely in this fixture. */
+  private[graft] def rawEvents(s: SparkSession, d: String)
+      : (DataFrame, String) = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(table(s, d, "events"))
+    val path = s"$d/events.parquet"
+    (s.read.parquet(path), path)
   }
 
   /** The single implementation of the two-generation `ts` contract —

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.{FixtureCache, Tables}
 import graft.functions.Det
 import graft.functions.Det.r4
+import org.apache.spark.sql.graft.VectorExpressions.sortedIsect
 
 /** TextOps seam 2/5: the NEAR-DUP family — MinHash signatures + LSH
   * banding (d06), SimHash (d07/d19), exact n-gram Jaccard PPJoin
@@ -425,7 +426,6 @@ trait TextLshOps extends TextCoreOps {
 
   private def pairsFromByDoc(spark: SparkSession, byDoc: DataFrame): DataFrame = {
     import spark.implicits._
-    org.apache.spark.sql.graft.VectorExpressions.register(spark)
     val t = JaccT
     val prefix = byDoc.select($"doc_id", $"n",
         posexplode($"pref").as(Seq("r0", "x")))
@@ -449,8 +449,7 @@ trait TextLshOps extends TextCoreOps {
     cand
       .join(byDoc.select($"doc_id".as("d1"), $"hs".as("h1"), $"n".as("n1")), "d1")
       .join(byDoc.select($"doc_id".as("d2"), $"hs".as("h2"), $"n".as("n2")), "d2")
-      .withColumn("common",
-        call_function("graft_sorted_isect", $"h1", $"h2").cast("long"))
+      .withColumn("common", sortedIsect($"h1", $"h2").cast("long"))
       .select($"d1", $"d2",
         round($"common" / ($"n1" + $"n2" - $"common").cast("double"), 4)
           .as("jaccard"))
@@ -818,7 +817,6 @@ trait TextLshOps extends TextCoreOps {
     * ADDS a candidate pair, which exact verify then rejects). */
   def containmentDups(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    org.apache.spark.sql.graft.VectorExpressions.register(spark)
     // r14 replan (third iteration — each measured by the 100× probe):
     // the r12 shape OOM'd twice on a corpus-sized localCheckpoint; the
     // r13 shape survived but measured 143.6×/668 s, because this

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{FixtureCache, Tables}
 import graft.functions.Det
-import org.apache.spark.sql.graft.VectorExpressions
+import org.apache.spark.sql.graft.VectorExpressions.{cosine, dot, lshBands, norm}
 
 /** Embedding / similarity-search operators over `embeddings`
   * (Array[Float], dim 64): brute-force cosine top-k, kNN-join
@@ -43,11 +43,9 @@ object VectorOps {
     while (i < a.length) { s += a(i) * b(i); i += 1 }; s
   }
 
-  private[graft] def embDouble(spark: SparkSession, sfDir: String): DataFrame = {
-    VectorExpressions.register(spark)
+  private[graft] def embDouble(spark: SparkSession, sfDir: String): DataFrame =
     Tables.embeddings(spark, sfDir)
       .withColumn("v", col("embedding").cast("array<double>"))
-  }
 
   /** Brute-force cosine top-20 against the vec_id=0 query vector. */
   def cosineTopK(spark: SparkSession, sfDir: String): DataFrame = {
@@ -57,7 +55,7 @@ object VectorOps {
     e.filter($"vec_id" =!= 0)
       .crossJoin(broadcast(q))
       .select($"vec_id",
-        round(call_function("graft_cosine", $"v", $"qv"), 6).as("cos"))
+        round(cosine($"v", $"qv"), 6).as("cos"))
       .orderBy(desc("cos"), $"vec_id")
       .limit(20)
   }
@@ -105,7 +103,7 @@ object VectorOps {
       .crossJoin(broadcast(q))
       .filter($"vec_id" =!= $"q_id")
       .select($"q_id", $"vec_id", $"label",
-        round(call_function("graft_cosine", $"v", $"qv"), 6).as("cos"))
+        round(cosine($"v", $"qv"), 6).as("cos"))
     val topk = udaf(new graft.functions.TopKAggregator(5),
       org.apache.spark.sql.Encoders.product[graft.functions.ScoredNeighbor])
     val top5 = scored
@@ -151,7 +149,7 @@ object VectorOps {
       .select($"vec_id", $"label", $"v")
       .crossJoin(broadcast(q))
       .select($"q_id", $"vec_id", $"label",
-        round(call_function("graft_cosine", $"v", $"qv"), 6).as("cos"))
+        round(cosine($"v", $"qv"), 6).as("cos"))
     val topk = udaf(new graft.functions.TopKAggregator(3),
       org.apache.spark.sql.Encoders.product[graft.functions.ScoredNeighbor])
     scored.groupBy($"q_id")
@@ -188,7 +186,7 @@ object VectorOps {
         .as("cv"))
     val w = Window.partitionBy($"vec_id").orderBy(desc("cos"), $"c_label")
     e.crossJoin(broadcast(cent))
-      .withColumn("cos", call_function("graft_cosine", $"v", $"cv"))
+      .withColumn("cos", cosine($"v", $"cv"))
       .withColumn("rn", row_number().over(w))
       .filter($"rn" === 1)
       .groupBy($"label", $"c_label".as("predicted"))
@@ -209,7 +207,7 @@ object VectorOps {
     val a = embDouble(spark, sfDir).select($"vec_id".as("d1"), $"v".as("v1"))
     val b = embDouble(spark, sfDir).select($"vec_id".as("d2"), $"v".as("v2"))
     a.join(b, $"d1" < $"d2")
-      .withColumn("cos", call_function("graft_cosine", $"v1", $"v2"))
+      .withColumn("cos", cosine($"v1", $"v2"))
       .filter($"cos" >= 0.4)
       .select($"d1", $"d2", round($"cos", 6).as("cos"))
       .orderBy($"d1", $"d2")
@@ -285,7 +283,7 @@ object VectorOps {
     import spark.implicits._
     embDouble(spark, sfDir)
       .select($"vec_id",
-        posexplode(call_function("graft_lsh_bands", $"v")).as(Seq("band", "code")))
+        posexplode(lshBands($"v")).as(Seq("band", "code")))
   }
 
   /** v08/v10 bucket sub-block size — see [[lshNearDup]]'s cap note. */
@@ -306,8 +304,7 @@ object VectorOps {
     // the distinct here.
     val bands = embDouble(spark, sfDir)
       .select($"vec_id", $"v",
-        posexplode(call_function("graft_lsh_bands", $"v"))
-          .as(Seq("band", "code")))
+        posexplode(lshBands($"v")).as(Seq("band", "code")))
       .withColumn("blk", Det.fdiv(
         row_number().over(Window.partitionBy($"band", $"code")
           .orderBy($"vec_id")).cast("long") - lit(1L), lit(LshBlk)))
@@ -315,7 +312,7 @@ object VectorOps {
       .join(bands.as("b"),
         $"a.band" === $"b.band" && $"a.code" === $"b.code" &&
           $"a.blk" === $"b.blk" && $"a.vec_id" < $"b.vec_id")
-      .withColumn("cos", call_function("graft_cosine", $"a.v", $"b.v"))
+      .withColumn("cos", cosine($"a.v", $"b.v"))
       .filter($"cos" >= 0.4)
       .select($"a.vec_id".as("d1"), $"b.vec_id".as("d2"),
         round($"cos", 6).as("cos"))
@@ -379,7 +376,7 @@ object VectorOps {
     val ho = evalCap.fold(hoAll)(c => hoAll.orderBy($"eval_id").limit(c))
     train.crossJoin(broadcast(ho))
       .select($"t_id",
-        struct(round(call_function("graft_cosine", $"v", $"hv"), 6).as("cos"),
+        struct(round(cosine($"v", $"hv"), 6).as("cos"),
           (-$"eval_id").as("neg_eval")).as("sc"))
       .groupBy($"t_id").agg(max($"sc").as("m"))
       .select($"t_id".as("doc_id"),
@@ -403,7 +400,7 @@ object VectorOps {
     e.filter($"vec_id" =!= 0)
       .join(broadcast(q), $"bucket" === $"q_bucket")
       .select($"vec_id", $"bucket",
-        round(call_function("graft_cosine", $"v", $"qv"), 6).as("cos"))
+        round(cosine($"v", $"qv"), 6).as("cos"))
       .orderBy(desc("cos"), $"vec_id")
       .limit(10)
   }
@@ -449,7 +446,7 @@ object VectorOps {
       .filter($"vec_id" =!= 0)
       .crossJoin(broadcast(q))
       .select($"vec_id", $"cell",
-        round(call_function("graft_cosine", $"v", $"qv"), 6).as("cos"))
+        round(cosine($"v", $"qv"), 6).as("cos"))
       .orderBy(desc("cos"), $"vec_id")
       .limit(10)
   }
@@ -473,7 +470,7 @@ object VectorOps {
     // bound: one (vec_id, v, cell) row per embedding
     val assigned = FixtureCache.checkpointed(spark, sfDir, "ivf_assigned") {
       e.crossJoin(broadcast(cent))
-        .withColumn("cos", call_function("graft_cosine", $"v", $"cv"))
+        .withColumn("cos", cosine($"v", $"cv"))
         .withColumn("rn", row_number().over(wAssign))
         .filter($"rn" === 1)
         .select($"vec_id", $"v", $"c_label".as("cell"))
@@ -482,7 +479,7 @@ object VectorOps {
       .select($"v".as("qv"))
     // the query's 2 nearest cells
     val qCells = cent.crossJoin(broadcast(q))
-      .withColumn("qcos", call_function("graft_cosine", $"cv", $"qv"))
+      .withColumn("qcos", cosine($"cv", $"qv"))
       .orderBy(desc("qcos"), $"c_label")
       .limit(2)
       .select($"c_label".as("probe_cell"))
@@ -562,8 +559,8 @@ object VectorOps {
     for (_ <- 1 to KmIters) {
       val distCols = cents.map { case (cl, c) =>
         val cc = c.map(x => x * x).sum
-        struct((lit(cc) - lit(2.0) * call_function("graft_dot", $"v", typedlit(c)))
-          .as("d"), lit(cl).as("cl"))
+        struct((lit(cc) - lit(2.0) * dot($"v", typedlit(c))).as("d"),
+          lit(cl).as("cl"))
       }
       assigned = e
         .withColumn("m", array_min(array(distCols: _*)))
@@ -618,8 +615,8 @@ object VectorOps {
     val dCols = cents.map { case (cl, c) =>
       val cc = c.map(x => x * x).sum
       struct(round(sqrt(greatest(
-        lit(cc) - lit(2.0) * call_function("graft_dot", $"v", typedlit(c))
-          + call_function("graft_dot", $"v", $"v"), lit(0.0))), 6).as("d"),
+        lit(cc) - lit(2.0) * dot($"v", typedlit(c)) + dot($"v", $"v"),
+        lit(0.0))), 6).as("d"),
         lit(cl).as("cl"))
     }
     assigned
@@ -752,8 +749,7 @@ object VectorOps {
     val structs = cs.keys.filter(_._1 == s).map(_._2).toSeq.sorted.map { cl =>
       val c = cs((s, cl))
       val cc = c.map(x => x * x).sum
-      struct((lit(cc) - lit(2.0) *
-        call_function("graft_dot", vs, typedlit(c.toSeq))).as("d"),
+      struct((lit(cc) - lit(2.0) * dot(vs, typedlit(c.toSeq))).as("d"),
         lit(cl).as("cl"))
     }
     array_min(array(structs: _*)).getField("cl")
@@ -825,7 +821,7 @@ object VectorOps {
     embDouble(spark, sfDir)
       .select($"vec_id",
         size($"v").cast("long").as("dim"),
-        round(call_function("graft_norm", $"v"), 6).as("norm"),
+        round(norm($"v"), 6).as("norm"),
         round(expr("aggregate(v, 0D, (s, x) -> s + x)") / size($"v"), 6)
           .as("mean"),
         round(array_min($"v"), 6).as("mn"),
@@ -891,8 +887,7 @@ object VectorOps {
       .select($"vec_id".as("cl"), $"v".as("cv"))
     val assigned = e.crossJoin(broadcast(seeds))
       .select($"vec_id", struct(
-        (call_function("graft_dot", $"cv", $"cv") - lit(2.0) *
-          call_function("graft_dot", $"v", $"cv")).as("d"),
+        (dot($"cv", $"cv") - lit(2.0) * dot($"v", $"cv")).as("d"),
         $"cl", $"v").as("s"))
       .groupBy($"vec_id").agg(min($"s").as("m"))
       .select($"vec_id", $"m.v".as("v"), $"m.cl".as("cl"))
@@ -903,7 +898,7 @@ object VectorOps {
     blocked.as("a").join(blocked.as("b"),
         $"a.cl" === $"b.cl" && $"a.blk" === $"b.blk" &&
           $"a.vec_id" < $"b.vec_id")
-      .withColumn("cos", call_function("graft_cosine", $"a.v", $"b.v"))
+      .withColumn("cos", cosine($"a.v", $"b.v"))
       .filter($"cos" >= SemTau)
       .select($"a.cl".as("cluster"), $"a.vec_id".as("keep_id"),
         $"b.vec_id".as("drop_id"), $"cos")
@@ -941,8 +936,7 @@ object VectorOps {
     val cand = e.filter($"vec_id" =!= 0)
       .crossJoin(broadcast(q))
       .select($"vec_id", $"v",
-        round(call_function("graft_cosine", $"v", $"qv") * lit(1e6))
-          .cast("long").as("rel"))
+        round(cosine($"v", $"qv") * lit(1e6)).cast("long").as("rel"))
       .orderBy(desc("rel"), $"vec_id")
       .limit(30)
       .localCheckpoint()
@@ -950,8 +944,7 @@ object VectorOps {
       .crossJoin(broadcast(cand.select($"vec_id".as("b_id"), $"v".as("bv"))))
       .filter($"a_id" =!= $"b_id")
       .select($"a_id", $"b_id",
-        round(call_function("graft_cosine", $"av", $"bv") * lit(1e6))
-          .cast("long").as("sim"))
+        round(cosine($"av", $"bv") * lit(1e6)).cast("long").as("sim"))
     val rels = cand.select($"vec_id", $"rel").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val simMap = sims.collect()
@@ -1004,7 +997,7 @@ object VectorOps {
     e.crossJoin(broadcast(seedVec))
       .filter($"vec_id" =!= $"seed_id")
       .select($"seed_id", $"seed_score", $"vec_id".as("neighbor_id"),
-        round(call_function("graft_cosine", $"v", $"sv"), 6).as("cos"))
+        round(cosine($"v", $"sv"), 6).as("cos"))
       .orderBy(desc("cos"), $"neighbor_id")
       .limit(10)
   }
@@ -1037,7 +1030,7 @@ object VectorOps {
     val tr = e.filter($"vec_id" =!= 0)
       .crossJoin(broadcast(qt))
       .select($"vec_id",
-        round(call_function("graft_cosine", $"vt", $"qvt"), 6).as("cos"))
+        round(cosine($"vt", $"qvt"), 6).as("cos"))
       .orderBy(desc("cos"), $"vec_id")
       .limit(10)
       .withColumn("tr_rank",
@@ -1151,8 +1144,7 @@ object VectorOps {
       .join(broadcast(qCells), $"cell" === $"probe_cell")
       .filter($"vec_id" =!= 0)
       .crossJoin(broadcast(q))
-      .withColumn("cos",
-        round(call_function("graft_cosine", $"v", $"qv"), 6))
+      .withColumn("cos", round(cosine($"v", $"qv"), 6))
       .filter($"cos" >= RangeTau)
       .select($"vec_id", $"cell", $"cos")
       .orderBy(desc("cos"), $"vec_id")
@@ -1217,7 +1209,7 @@ object VectorOps {
       .join(allowed, Seq("vec_id"), "left_semi")
       .crossJoin(broadcast(q))
       .select($"vec_id", $"cell",
-        round(call_function("graft_cosine", $"v", $"qv"), 6).as("cos"))
+        round(cosine($"v", $"qv"), 6).as("cos"))
       .orderBy(desc("cos"), $"vec_id")
       .limit(10)
   }
@@ -1237,7 +1229,7 @@ object VectorOps {
       q: DataFrame): DataFrame = {
     import spark.implicits._
     labelCentroids(spark, sfDir).crossJoin(broadcast(q))
-      .withColumn("qcos", call_function("graft_cosine", $"cv", $"qv"))
+      .withColumn("qcos", cosine($"cv", $"qv"))
       .withColumn("cell_rank",
         row_number().over(Window.orderBy(desc("qcos"), $"c_label")))
       .filter($"cell_rank" <= n)
@@ -1270,7 +1262,7 @@ object VectorOps {
       .filter($"vec_id" =!= 0)
       .crossJoin(broadcast(q))
       .select($"vec_id", $"cell",
-        round(call_function("graft_cosine", $"v", $"qv"), 6).as("cos"))
+        round(cosine($"v", $"qv"), 6).as("cos"))
       .withColumn("cell_rank", row_number().over(
         Window.partitionBy($"cell").orderBy(desc("cos"), $"vec_id"))
         .cast("long"))
@@ -1345,7 +1337,7 @@ object VectorOps {
       .join(allowed, Seq("vec_id"), "left_semi")
       .crossJoin(broadcast(q))
       .select($"vec_id", $"cell", $"v",
-        round(call_function("graft_cosine", $"v", $"qv"), 6).as("cos"))
+        round(cosine($"v", $"qv"), 6).as("cos"))
     val ranked = cand
       .withColumn("cell_rank", row_number().over(
         Window.partitionBy($"cell").orderBy(desc("cos"), $"vec_id")))
@@ -1357,8 +1349,7 @@ object VectorOps {
     // broadcast-fed NL join, never a CartesianProduct (PlanAuditSpec)
     val sup = ranked.as("a")
       .join(broadcast(ranked.as("b")), col("a.r") < col("b.r"))
-      .filter(call_function("graft_cosine", col("a.v"), col("b.v"))
-        >= ServeTau)
+      .filter(cosine(col("a.v"), col("b.v")) >= ServeTau)
       .select(col("b.vec_id").as("vec_id")).distinct()
     (ranked, sup)
   }
@@ -1388,7 +1379,7 @@ object VectorOps {
       .filter($"vec_id" =!= 0)
       .crossJoin(broadcast(q))
       .select($"vec_id", $"cell_rank",
-        round(call_function("graft_cosine", $"v", $"qv"), 6).as("cos"))
+        round(cosine($"v", $"qv"), 6).as("cos"))
     val exact = cosineTopK(spark, sfDir)
       .withColumn("ex_rank",
         row_number().over(Window.orderBy(desc("cos"), $"vec_id")))
@@ -1444,7 +1435,7 @@ object VectorOps {
       .join(e.select($"vec_id".as("d1"), $"v".as("v1")), "d1")
       .join(e.select($"vec_id".as("d2"), $"v".as("v2")), "d2")
       .select($"d1", $"d2", $"est_jaccard",
-        round(call_function("graft_cosine", $"v1", $"v2"), 6).as("cos"))
+        round(cosine($"v1", $"v2"), 6).as("cos"))
       .withColumn("agree", $"cos" >= CrossModalTau)
       .orderBy($"d1", $"d2")
   }
@@ -1509,12 +1500,12 @@ object VectorOps {
     val cand = e.filter($"vec_id" =!= 0)
       .crossJoin(broadcast(q))
       .select($"vec_id", $"v", $"refv",
-        call_function("graft_dot", $"qv", $"qqv").cast("long").as("qdot"))
+        dot($"qv", $"qqv").cast("long").as("qdot"))
       .orderBy(desc("qdot"), $"vec_id")
       .limit(50)
     cand
       .select($"vec_id", $"qdot",
-        round(call_function("graft_cosine", $"v", $"refv"), 6).as("cos"))
+        round(cosine($"v", $"refv"), 6).as("cos"))
       .orderBy(desc("cos"), $"vec_id")
       .limit(10)
   }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.VectorExpressions.cosine
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
 
@@ -634,14 +635,13 @@ trait StreamAggOps extends StreamRuntime {
   def streamIvfAssign(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val cents = graft.operators.VectorOps.labelCentroidsRounded(spark, sfDir)
-    val schema = spark.read.parquet(s"$sfDir/embeddings.parquet").schema
+    val schema = graft.Tables.embeddings(spark, sfDir).schema
     val stream = spark.readStream.schema(schema)
       .option("pathGlobFilter", "embeddings.parquet")
       .parquet(sfDir)
       .withColumn("v", col("embedding").cast("array<double>"))
     val scored = cents.map { case (cl, c) =>
-      struct(call_function("graft_cosine", $"v", typedlit(c)).as("c"),
-        lit(-cl).as("nl"))
+      struct(cosine($"v", typedlit(c)).as("c"), lit(-cl).as("nl"))
     }
     val assigned = stream
       .withColumn("m", array_max(array(scored: _*)))

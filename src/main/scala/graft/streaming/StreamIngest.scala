@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.VectorExpressions.cosine
 
 /** The INGEST-FACE seam of [[StreamOps]]: the streaming twins of the
   * batch pillars — near-dup (text/embedding), novelty, inverted index,
@@ -108,7 +109,7 @@ trait StreamIngestOps extends StreamRuntime {
     cand
       .join(e.select(col("vec_id").as("d1"), col("v").as("v1")), "d1")
       .join(e.select(col("vec_id").as("d2"), col("v").as("v2")), "d2")
-      .withColumn("cos", call_function("graft_cosine", $"v1", $"v2"))
+      .withColumn("cos", cosine($"v1", $"v2"))
       .filter($"cos" >= 0.4)
       .select($"d1", $"d2", round($"cos", 6).as("cos"))
       .orderBy($"d1", $"d2")
@@ -132,15 +133,13 @@ trait StreamIngestOps extends StreamRuntime {
     val allowed = graft.Tables.documents(spark, sfDir)
       .filter($"lang" === "en").select($"doc_id".as("vec_id"))
     val scored = cents.map { case (cl, c) =>
-      struct(call_function("graft_cosine", $"v", typedlit(c)).as("c"),
-        lit(-cl).as("nl"))
+      struct(cosine($"v", typedlit(c)).as("c"), lit(-cl).as("nl"))
     }
     raw.filter($"vec_id" =!= 0)
       .join(broadcast(allowed), "vec_id") // stream-static PRE-filter
       .withColumn("m", array_max(array(scored: _*)))
       .withColumn("cell", (-$"m.nl").cast("string"))
-      .withColumn("value",
-        round(call_function("graft_cosine", $"v", typedlit(qv)), 6))
+      .withColumn("value", round(cosine($"v", typedlit(qv)), 6))
   }
 
   /** The s48/s50 SERVE phase: per-cell buffers out of a `topn`-shaped
@@ -170,8 +169,7 @@ trait StreamIngestOps extends StreamRuntime {
           .orderBy(desc("cos"), $"vec_id")).cast("long"))
     val sup = ranked.as("a")
       .join(broadcast(ranked.as("b")), col("a.r") < col("b.r"))
-      .filter(call_function("graft_cosine", col("a.v"), col("b.v"))
-        >= ServeTau)
+      .filter(cosine(col("a.v"), col("b.v")) >= ServeTau)
       .select(col("b.vec_id").as("vec_id")).distinct()
     ranked.join(sup, Seq("vec_id"), "left_anti")
       .orderBy($"r")

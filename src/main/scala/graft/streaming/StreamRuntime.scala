@@ -70,18 +70,10 @@ trait StreamRuntime {
         .load())
 
   /** File-source stand-in for the Kafka source, with the same ns→µs
-    * timestamp normalization as the batch path.
-    *
-    * `nanosAsLong` must stay set for the LIFETIME of any streaming query
-    * built here — the parquet reader consults it at every micro-batch
-    * (INT64 TIMESTAMP(NANOS) is otherwise an illegal type), not just at
-    * schema-inference time — so it is deliberately not restored after
-    * the build. It only affects nanos-annotated columns, which exist
-    * solely in the events fixture. */
+    * timestamp normalization as the batch path
+    * ([[graft.Tables.rawEvents]] reads the fixture). */
   def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val path = s"$sfDir/events.parquet"
-    val schema = spark.read.parquet(path).schema
+    val schema = graft.Tables.rawEvents(spark, sfDir)._1.schema
     // the file source needs a directory; scope it to the events file
     val raw = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet")
@@ -161,9 +153,7 @@ trait StreamRuntime {
     * consumers below are structured. In production this is the role of
     * periodic broker heartbeats / idle-source timeouts. */
   def eventsStreamWithFlush(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val path = s"$sfDir/events.parquet"
-    val raw = spark.read.parquet(path)
+    val (raw, path) = graft.Tables.rawEvents(spark, sfDir)
     val dirStr = cachedScratchDir("flush", sfDir) {
       val dir = newTempDir("graft_stream_flush")
       // One flush row PER event type: Catalyst pushes deterministic

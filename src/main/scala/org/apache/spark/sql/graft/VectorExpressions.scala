@@ -1,7 +1,7 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -304,9 +304,21 @@ object VectorExpressions {
     }
   }
 
+  /** Typed Column constructors: how DataFrame code calls these
+    * expressions. Each builds its case class directly, so a query writes
+    * no session state and resolves no name. SQL reaches the same classes
+    * by name through [[GraftExtensions]]. */
+  def dot(a: Column, b: Column): Column =
+    column(DotProduct(expression(a), expression(b)))
+  def cosine(a: Column, b: Column): Column =
+    column(CosineSimilarity(expression(a), expression(b)))
+  def norm(a: Column): Column = column(L2Norm(expression(a)))
+  def sortedIsect(a: Column, b: Column): Column =
+    column(SortedIntersectSize(expression(a), expression(b)))
+  def lshBands(v: Column): Column = column(LshBandCodes(expression(v)))
+
   /** Every `graft_*` SQL function — name, expression class (for the
-    * injected `ExpressionInfo`), builder — read by both registration
-    * paths: [[register]] and [[GraftExtensions]]. */
+    * injected `ExpressionInfo`), builder — read by [[GraftExtensions]]. */
   private[graft] val builders
       : Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = Seq(
     ("graft_dot", classOf[DotProduct], es => DotProduct(es(0), es(1))),
@@ -317,13 +329,6 @@ object VectorExpressions {
       es => SortedIntersectSize(es(0), es(1))),
     ("graft_lsh_bands", classOf[LshBandCodes], es => LshBandCodes(es.head)),
   )
-
-  /** Imperative registration for an existing session (tests, Verify). */
-  def register(spark: SparkSession): Unit =
-    builders.foreach { case (name, _, b) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, b, "built-in")
-    }
 }
 
 /** `withExtensions(new GraftExtensions)` on a session builder — the

@@ -2137,24 +2137,47 @@ class VectorExpressionsSpec extends AnyFunSuite {
 
   test("graft_dot/graft_cosine/graft_norm match hand values and HOF equivalents") {
     import spark.implicits._
-    org.apache.spark.sql.graft.VectorExpressions.register(spark)
+    import org.apache.spark.sql.{Column, DataFrame}
+    import org.apache.spark.sql.graft.VectorExpressions
+    // each typed constructor next to its SQL name, which this session
+    // resolves through GraftExtensions: the two faces must agree exactly
+    def typedAndSql(df: DataFrame): Array[org.apache.spark.sql.Row] = {
+      val faces: Seq[(Column, String)] = Seq(
+        VectorExpressions.dot($"a", $"b") -> "graft_dot(a, b)",
+        VectorExpressions.cosine($"a", $"b") -> "graft_cosine(a, b)",
+        VectorExpressions.norm($"a") -> "graft_norm(a)",
+        VectorExpressions.sortedIsect($"x", $"y") -> "graft_sorted_isect(x, y)",
+        VectorExpressions.lshBands($"w") -> "graft_lsh_bands(w)")
+      val rows = df.select(
+        faces.flatMap { case (c, sql) => Seq(c, expr(sql)) }: _*).collect()
+      for (r <- rows; i <- faces.indices)
+        assert(r.get(2 * i) == r.get(2 * i + 1), faces(i)._2)
+      rows
+    }
+    def w(k: Int): Array[Double] = Array.tabulate(64)(g => math.sin(g * 7 + k))
     val df = Seq(
-      (Array(1.0, 2.0, 3.0), Array(4.0, 5.0, 6.0)),
-      (Array(1.0, 0.0, 0.0), Array(0.0, 1.0, 0.0)),
-      (Array(2.0, 0.0, 0.0), Array(2.0, 0.0, 0.0))
-    ).toDF("a", "b")
-    val got = df.select(
-      call_function("graft_dot", $"a", $"b").as("dot"),
-      call_function("graft_cosine", $"a", $"b").as("cos"),
-      call_function("graft_norm", $"a").as("norm")).collect()
+      (Array(1.0, 2.0, 3.0), Array(4.0, 5.0, 6.0), Array(1L, 2L, 3L),
+        Array(2L, 3L, 9L), w(0)),
+      (Array(1.0, 0.0, 0.0), Array(0.0, 1.0, 0.0), Array(5L), Array(6L), w(1)),
+      (Array(2.0, 0.0, 0.0), Array(2.0, 0.0, 0.0), Array.empty[Long],
+        Array(1L), w(2))
+    ).toDF("a", "b", "x", "y", "w")
+    val got = typedAndSql(df)
     assert(got(0).getDouble(0) == 32.0)
-    assert(math.abs(got(1).getDouble(1)) < 1e-12)        // orthogonal
-    assert(math.abs(got(2).getDouble(1) - 1.0) < 1e-12)  // identical
-    assert(math.abs(got(0).getDouble(2) - math.sqrt(14.0)) < 1e-12)
-    // HOF equivalence on float arrays (the implicit-cast path)
-    val f = Seq((Array(1.0f, 2.0f), Array(3.0f, 4.0f))).toDF("a", "b")
+    assert(math.abs(got(1).getDouble(2)) < 1e-12)        // orthogonal
+    assert(math.abs(got(2).getDouble(2) - 1.0) < 1e-12)  // identical
+    assert(math.abs(got(0).getDouble(4) - math.sqrt(14.0)) < 1e-12)
+    assert(got.map(_.getInt(6)).toSeq == Seq(2, 0, 0))   // |x ∩ y|
+    assert(got.forall(_.getSeq[Long](8).size == 8))      // one code per band
+    // float arrays take the implicit-cast path in both faces
+    val f = Seq((Array(1.0f, 2.0f), Array(3.0f, 4.0f), Array(1, 2),
+      Array(2, 3), w(0).map(_.toFloat))).toDF("a", "b", "x", "y", "w")
+    val Array(fr) = typedAndSql(f)
+    assert(fr.getDouble(0) == 11.0)
+    assert(fr.getInt(6) == 1)
+    // HOF equivalence on float arrays
     val Array(r) = f.select(
-      call_function("graft_dot", $"a", $"b").as("d1"),
+      VectorExpressions.dot($"a", $"b").as("d1"),
       expr("aggregate(zip_with(a, b, (x, y) -> cast(x as double) * cast(y as double)), 0D, (s, x) -> s + x)").as("d2"))
       .collect()
     assert(math.abs(r.getDouble(0) - r.getDouble(1)) < 1e-9)
@@ -2975,12 +2998,13 @@ class SuppressPairingSpec extends org.scalatest.funsuite.AnyFunSuite {
   * session is built with
   * spark.sql.extensions=org.apache.spark.sql.graft.GraftExtensions
   * (see [[TestSession]]), so plain SQL must resolve the graft_*
-  * functions WITHOUT any imperative register() call. A fresh
-  * `newSession()` proves the injection is session-independent. */
+  * functions by name — nothing else writes them into a function
+  * registry. A fresh `newSession()` proves the injection is
+  * session-independent. */
 class ExtensionsInjectionSpec extends org.scalatest.funsuite.AnyFunSuite {
   test("spark.sql.extensions injection registers graft_* for SQL") {
-    // newSession(): clean function registry, no register() ever ran on
-    // it — only the injected extensions can resolve these
+    // newSession(): clean function registry — only the injected
+    // extensions can resolve these
     val fresh = TestSession.spark.newSession()
     val row = fresh.sql(
       """SELECT graft_cosine(array(1D, 0D), array(1D, 0D)) AS c,
@@ -3555,7 +3579,6 @@ class LshRecallSpec extends org.scalatest.funsuite.AnyFunSuite {
     // all-pairs scan in disguise.)
     import spark.implicits._
     import org.apache.spark.sql.functions.call_function
-    org.apache.spark.sql.graft.VectorExpressions.register(spark)
     val rnd = new scala.util.Random(42)
     val dim = 64
     def unit(): Array[Double] = {
@@ -3936,7 +3959,6 @@ class SessionCacheSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   test("each session gets its own cached pair table; hits stay per-session") {
     val s2 = spark.newSession()
-    org.apache.spark.sql.graft.VectorExpressions.register(s2)
     // the cache lives at the lshPairs layer (minhashLsh wraps it in a
     // fresh orderBy per call, so instance identity is asserted on the
     // cached layer, answer equality on the public one)

@@ -51,6 +51,19 @@ class StreamRuntimeSpec extends AnyFunSuite {
     }
   }
 
+  test("graft_* expressions are called through typed constructors; Tables alone reads events with nanosAsLong") {
+    // a DataFrame that calls an expression by name depends on some
+    // earlier code having written that name into the session
+    val seam = "org/apache/spark/sql/graft/VectorExpressions.scala"
+    assert(MainSources.containing("call_function(\"graft_").isEmpty)
+    assert(MainSources.containing("VectorExpressions.register").isEmpty)
+    Seq("functionRegistry", "injectFunction").foreach { needle =>
+      val hits = MainSources.containing(needle).filterNot(_ == seam)
+      assert(hits.isEmpty, s"$needle outside $seam: $hits")
+    }
+    assert(MainSources.containing("nanosAsLong") == Seq("graft/Tables.scala"))
+  }
+
   test("ValueFold holds the one-ValueState plumbing; only the processors it cannot express call getValueState") {
     // NearDup: primitive Long state; AsOfJoin, FkJoin, TombstoneIndex:
     // two state variables; SessionCount, TimerSession: timers;
