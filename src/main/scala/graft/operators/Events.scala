@@ -8,10 +8,17 @@ import graft.functions.Det
 import graft.functions.Det.{dec4, dsum, davg}
 
 /** Stream-shaped operators over the `events` table, expressed in batch
-  * form so the DuckDB oracle can check them. The same logical shapes run
-  * under Structured Streaming in [[graft.streaming.StreamOps]] — the
-  * batch/stream pairing mirrors how a Kafka-Streams-style changelog
-  * pipeline is re-expressed Spark-first.
+  * form so the DuckDB oracle can check them. Where a batch query and a
+  * streaming query in [[graft.streaming.StreamOps]] declare the same
+  * contract, the transform lives here once, as a seam over an
+  * events-shaped frame (`tumblingDailyOf`, `hoppingHourlyOf`,
+  * `sessionWindowsOf`, `dynamicSessionsOf`, `viewPurchase`,
+  * `cogroupActivityOf`, `cusumChangepointOf`), and so does the oracle:
+  * the batch face applies the seam to [[Tables.events]] and orders;
+  * the stream face applies it to its watermarked stream, orders after
+  * the run, and registers this object's oracle text. One declarative
+  * query, run as a batch or incrementally — the Spark-first answer to a
+  * Kafka-Streams-style KStream/KTable pipeline.
   *
   * Scale design: all event aggregations key on (window, type) or
   * user_id, which are high-cardinality enough to parallelize and are
@@ -46,34 +53,50 @@ object Events {
   /** Tumbling 1-day event-time windows (epoch/UTC-aligned). */
   def tumblingDaily(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    Tables.events(spark, sfDir)
-      .groupBy(window($"ts", "1 day").as("w"), $"event_type")
+    tumblingDailyOf(Tables.events(spark, sfDir))
+      .orderBy($"w_start", $"event_type")
+  }
+
+  /** e02's daily (window, type) count + [[Det.dsum]] over an
+    * events-shaped frame (ts, event_type, value), unordered — the one
+    * transform of the tumbling contract. Its stream faces (s01, the
+    * s33 sink round trip, the s40 restart plan) apply it to their
+    * watermarked streams and declare e02's oracle. */
+  private[graft] def tumblingDailyOf(ev: DataFrame): DataFrame = {
+    import ev.sparkSession.implicits._
+    ev.groupBy(window($"ts", "1 day").as("w"), $"event_type")
       .agg(count(lit(1)).as("n"), dsum($"value").as("sum_value"))
       .select($"w.start".as("w_start"), $"event_type", $"n", $"sum_value")
-      .orderBy($"w_start", $"event_type")
   }
 
   /** Hopping windows: 1-hour size, 30-min slide — each event lands in
     * exactly 2 windows. */
   def hoppingHourly(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    Tables.events(spark, sfDir)
-      .groupBy(window($"ts", "1 hour", "30 minutes").as("w"), $"event_type")
+    hoppingHourlyOf(Tables.events(spark, sfDir))
+      .orderBy($"w_start", $"event_type")
+  }
+
+  /** e03's hopping count over an events-shaped frame, unordered; s04
+    * applies it to its watermarked stream. */
+  private[graft] def hoppingHourlyOf(ev: DataFrame): DataFrame = {
+    import ev.sparkSession.implicits._
+    ev.groupBy(window($"ts", "1 hour", "30 minutes").as("w"), $"event_type")
       .agg(count(lit(1)).as("n"))
       .select($"w.start".as("w_start"), $"event_type", $"n")
-      .orderBy($"w_start", $"event_type")
   }
 
   /** Session windows with a 2-hour inactivity gap, per user. */
   def sessionWindows(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    Tables.events(spark, sfDir)
-      .groupBy(session_window($"ts", "2 hours").as("w"), $"user_id")
-      .agg(count(lit(1)).as("n_events"), dsum($"value").as("sum_value"))
-      .select($"user_id", $"w.start".as("s_start"), $"w.end".as("s_end"),
-        $"n_events", $"sum_value")
+    sessionWindowsOf(Tables.events(spark, sfDir))
       .orderBy($"user_id", $"s_start")
   }
+
+  /** e04's session aggregation over an events-shaped frame, unordered;
+    * s09 applies it to its flush-closed stream. */
+  private[graft] def sessionWindowsOf(ev: DataFrame): DataFrame =
+    sessionsOf(ev, lit("2 hours"))
 
   /** e33: DYNAMIC-GAP sessionization — the gap depends on the event
     * itself (`session_window(ts, gapExpr)`): an error closes its
@@ -90,15 +113,28 @@ object Events {
     * ordering (a fixed gap degenerates to e04's lag() form). */
   def dynamicSessions(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val gap = when($"event_type" === "error", "5 minutes")
+    dynamicSessionsOf(Tables.events(spark, sfDir))
+      .orderBy($"user_id", $"s_start")
+  }
+
+  /** e33's sessions, gap CASE included, over an events-shaped frame,
+    * unordered; s28 applies it to its flush-closed stream. */
+  private[graft] def dynamicSessionsOf(ev: DataFrame): DataFrame = {
+    import ev.sparkSession.implicits._
+    sessionsOf(ev, when($"event_type" === "error", "5 minutes")
       .when($"event_type" === "purchase", "30 minutes")
-      .otherwise("2 hours")
-    Tables.events(spark, sfDir)
-      .groupBy(session_window($"ts", gap).as("w"), $"user_id")
+      .otherwise("2 hours"))
+  }
+
+  /** Per-user session windows of inactivity `gap` (a constant or a
+    * per-event expression) with count + [[Det.dsum]] — e04's and e33's
+    * shared shape. */
+  private def sessionsOf(ev: DataFrame, gap: Column): DataFrame = {
+    import ev.sparkSession.implicits._
+    ev.groupBy(session_window($"ts", gap).as("w"), $"user_id")
       .agg(count(lit(1)).as("n_events"), dsum($"value").as("sum_value"))
       .select($"user_id", $"w.start".as("s_start"), $"w.end".as("s_end"),
         $"n_events", $"sum_value")
-      .orderBy($"user_id", $"s_start")
   }
 
   /** e34: gap-fill / LOCF (last observation carried forward) — the
@@ -182,17 +218,35 @@ object Events {
   def viewToPurchase(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.events(spark, sfDir)
-    val v = e.filter($"event_type" === "view")
-      .select($"event_id".as("view_id"), $"user_id", $"ts".as("view_ts"))
-    val p = e.filter($"event_type" === "purchase")
-      .select($"event_id".as("purchase_id"), $"user_id".as("p_user"),
-        $"ts".as("purchase_ts"), $"value".as("purchase_value"))
-    v.join(p, $"user_id" === $"p_user" &&
-        $"purchase_ts" >= $"view_ts" &&
-        $"purchase_ts" <= $"view_ts" + expr("INTERVAL 60 MINUTES"))
+    viewPurchase(e.filter($"event_type" === "view"),
+        e.filter($"event_type" === "purchase"), "inner")
       .select($"view_id", $"purchase_id", $"user_id",
         round($"purchase_value", 2).as("purchase_value"))
       .orderBy($"view_id", $"purchase_id")
+  }
+
+  /** The view→purchase join window: a purchase matches a view of the
+    * same user when it lands in [view_ts, view_ts + this]. */
+  private[graft] val ViewPurchaseWindow = "60 minutes"
+
+  /** e06's interval join over `views` and `purchases` (events-shaped
+    * frames, already filtered to their type), projected to their join
+    * columns and joined as `joinType` on the same user within
+    * [[ViewPurchaseWindow]]. The stream faces (s05's inner, s06's left,
+    * s13's full outer, s27's semi join) pass sides that they watermark
+    * themselves — where each variant applies its watermark is part of
+    * its semantics. */
+  private[graft] def viewPurchase(views: DataFrame, purchases: DataFrame,
+      joinType: String): DataFrame = {
+    import views.sparkSession.implicits._
+    views.select($"event_id".as("view_id"), $"user_id", $"ts".as("view_ts"))
+      .join(purchases.select($"event_id".as("purchase_id"),
+          $"user_id".as("p_user"), $"ts".as("purchase_ts"),
+          $"value".as("purchase_value")),
+        $"user_id" === $"p_user" &&
+          $"purchase_ts" >= $"view_ts" &&
+          $"purchase_ts" <= $"view_ts" + expr(s"INTERVAL $ViewPurchaseWindow"),
+        joinType)
   }
 
   // e38 query pattern: a fixed V-shape (down-ramp then up-ramp),
@@ -482,8 +536,14 @@ object Events {
     * a naive port would write pays three shuffles plus a 3-way join. */
   def cogroupActivity(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
+    cogroupActivityOf(Tables.events(spark, sfDir)).orderBy($"user_id")
+  }
+
+  /** e19's DSL cogroup over an events-shaped frame, unordered; s12
+    * applies it to the event stream. */
+  private[graft] def cogroupActivityOf(ev: DataFrame): DataFrame = {
+    import ev.sparkSession.implicits._
     import graft.api.GraftStreams
-    val ev = Tables.events(spark, sfDir)
     def branch(tpe: String, cols: (String, org.apache.spark.sql.Column)*) =
       GraftStreams.stream(
         ev.filter($"event_type" === tpe)
@@ -497,7 +557,6 @@ object Events {
         count($"c_ts").as("n_clicks"),
         count($"p_ts").as("n_purchases"),
         dsum($"p_value").as("purchase_value"))
-      .orderBy($"user_id")
   }
 
   /** Ten deterministic 36-hour "promo" intervals (start 06:00, every

@@ -1646,17 +1646,20 @@ object VectorOps {
 
   /** Unrolled power-iteration CTE chain for v20's oracle — one
     * (multiply, renormalize) round per [[PcaIters]], mirroring the
-    * Scala loop's integer ops exactly (HUGEINT ≡ BigInt). */
+    * Scala loop's integer ops exactly (HUGEINT ≡ BigInt). Each round's
+    * max |w| is a window over its own aggregate, so a round reads the
+    * previous one once: DuckDB inlines CTEs, and two reads per round
+    * would expand `amat` 2^PcaIters times. */
   private def pcaIterCtes: String = {
     val F = graft.functions.Det.sql
     (1 to PcaIters).map { i =>
       val pv = if (i == 1) "v0" else s"v${i - 1}"
-      s"""w$i AS (SELECT a.j AS j, sum(a.a * v.v) AS w
+      s"""w$i AS (SELECT a.j AS j, sum(a.a * v.v) AS w,
+         |    max(abs(sum(a.a * v.v))) OVER () AS mw
          |  FROM amat a JOIN $pv v ON v.j = a.k GROUP BY a.j),
-         |n$i AS (SELECT max(abs(w)) AS mw FROM w$i),
          |v$i AS (SELECT j, CASE WHEN mw = 0 THEN w
          |  ELSE ${F.fdiv("w * 1000000", "mw")} END AS v
-         |  FROM w$i, n$i)""".stripMargin
+         |  FROM w$i)""".stripMargin
     }.mkString(",\n")
   }
 

@@ -251,18 +251,20 @@ object FileSources {
     "e30_bucketed_join"  -> bucketedJoinAgg _,
   )
 
+  private val D = graft.functions.Det.sql
+
   val oracles: Map[String, String] = Map(
     "e23_json_source" ->
-      """SELECT event_type, count(*) AS n,
-        |count(DISTINCT user_id) AS n_users,
-        |round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 2) AS sum_value,
-        |min(epoch_us(ts)) AS first_us, max(epoch_us(ts)) AS last_us
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+      s"""SELECT event_type, count(*) AS n,
+         |count(DISTINCT user_id) AS n_users,
+         |${D.dsum("value", "sum_value")},
+         |min(epoch_us(ts)) AS first_us, max(epoch_us(ts)) AS last_us
+         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
     "e24_csv_source" ->
-      """SELECT CAST(hour(ts) AS BIGINT) AS hour, count(*) AS n,
-        |round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 2) AS sum_value,
-        |CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k
-        |FROM events GROUP BY 1 ORDER BY hour""".stripMargin,
+      s"""SELECT CAST(hour(ts) AS BIGINT) AS hour, count(*) AS n,
+         |${D.dsum("value", "sum_value")},
+         |CAST(sum(CAST(json_extract_string(props, '$$.k') AS BIGINT)) AS BIGINT) AS sum_k
+         |FROM events GROUP BY 1 ORDER BY hour""".stripMargin,
     // every 97th event_id is written malformed → all-null data columns
     // + a _corrupt_record; the oracle reproduces that split by parity
     "e26_corrupt_source" ->
@@ -286,24 +288,23 @@ object FileSources {
         |  AS last_us
         |FROM events GROUP BY 1 ORDER BY bucket""".stripMargin,
     "e28_partitioned_scan" ->
-      """SELECT make_timestamp((epoch_us(ts) // 86400000000) * 86400000000)
-        |  AS w_start,
-        |count(*) AS n,
-        |round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 2) AS sum_value
-        |FROM events WHERE event_type = 'purchase'
-        |GROUP BY 1 ORDER BY w_start""".stripMargin,
+      s"""SELECT make_timestamp((epoch_us(ts) // 86400000000) * 86400000000)
+         |  AS w_start,
+         |count(*) AS n,
+         |${D.dsum("value", "sum_value")}
+         |FROM events WHERE event_type = 'purchase'
+         |GROUP BY 1 ORDER BY w_start""".stripMargin,
     "e29_orc_source" ->
-      """SELECT CAST(ts AS DATE) AS day, count(*) AS n,
-        |count(DISTINCT event_type) AS n_types,
-        |round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 2) AS sum_value,
-        |min(epoch_us(ts)) AS first_us, max(epoch_us(ts)) AS last_us
-        |FROM events GROUP BY 1 ORDER BY day""".stripMargin,
+      s"""SELECT CAST(ts AS DATE) AS day, count(*) AS n,
+         |count(DISTINCT event_type) AS n_types,
+         |${D.dsum("value", "sum_value")},
+         |min(epoch_us(ts)) AS first_us, max(epoch_us(ts)) AS last_us
+         |FROM events GROUP BY 1 ORDER BY day""".stripMargin,
     "e30_bucketed_join" ->
-      """SELECT c_mktsegment, count(*) AS n_orders,
-        |count(DISTINCT o_custkey) AS n_customers,
-        |round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2)
-        |  AS revenue
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY 1 ORDER BY c_mktsegment""".stripMargin,
+      s"""SELECT c_mktsegment, count(*) AS n_orders,
+         |count(DISTINCT o_custkey) AS n_customers,
+         |${D.dsum("o_totalprice", "revenue")}
+         |FROM orders JOIN customer ON o_custkey = c_custkey
+         |GROUP BY 1 ORDER BY c_mktsegment""".stripMargin,
   )
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.VectorExpressions.cosine
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.functions.Det.dsum
+import graft.operators.Events
 import java.sql.Timestamp
 
 /** The AGGREGATION seam of [[StreamOps]]: windowed aggregations
@@ -13,18 +15,6 @@ import java.sql.Timestamp
   * sinks (file roundtrip, foreachBatch), late-data semantics, and the
   * stateless model-serving assignment. */
 trait StreamAggOps extends StreamRuntime {
-
-  /** Tumbling event-time window aggregation (KGroupedStream.windowedBy
-    * + count/aggregate). */
-  def tumblingAgg(events: DataFrame, size: String, watermark: String): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), size).as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        round(sum(col("value").cast("decimal(18,4)")).cast("double"), 2)
-          .as("sum_value"))
-      .select(col("w.start").as("w_start"), col("event_type"), col("n"),
-        col("sum_value"))
 
   /** Exactly-once-per-key dedup with bounded state. */
   def dedupWithinWatermark(events: DataFrame, watermark: String): DataFrame =
@@ -85,11 +75,14 @@ trait StreamAggOps extends StreamRuntime {
 
   // ---- oracle-checked streaming roundtrips -------------------------------
 
-  /** Streaming tumbling daily aggregation, Complete mode (all windows
-    * emitted at end-of-stream) — must equal the batch/DuckDB answer. */
+  /** Streaming tumbling daily aggregation (KGroupedStream.windowedBy
+    * + count/aggregate), Complete mode (all windows emitted at
+    * end-of-stream): e02's transform over the watermarked event stream,
+    * checked against e02's oracle. */
   def streamTumbling(spark: SparkSession, sfDir: String): DataFrame =
     runToMemory(
-      tumblingAgg(eventsStream(spark, sfDir), "1 day", "10 minutes"),
+      Events.tumblingDailyOf(
+        eventsStream(spark, sfDir).withWatermark("ts", WatermarkDelay)),
       "graft_s01", "complete")
       .orderBy(col("w_start"), col("event_type"))
 
@@ -109,17 +102,10 @@ trait StreamAggOps extends StreamRuntime {
     * honors. Cached per (sfDir, fixture mtime) like every derived
     * scratch dir. */
   def streamSinkRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.functions.Det.dsum
     val dirStr = cachedScratchDir("s33", sfDir) {
         val out = newTempDir("graft_s33_sink")
-        val ev = eventsStreamWithFlush(spark, sfDir)
-          .withWatermark("ts", "10 minutes")
-          .filter(col("ts") < flushBound)
-        val agg = ev
-          .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
-          .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-          .select(col("w.start").as("w_start"), col("event_type"),
-            col("n"), col("sum_value"))
+        val agg = Events.tumblingDailyOf(
+          closeFlushed(eventsStreamWithFlush(spark, sfDir)))
         runAvailableNow(agg, "graft_s33",
             (ShufflePartitions -> "8") +: RocksDb)(
           _.format("parquet").option("path", out.toString)
@@ -137,15 +123,11 @@ trait StreamAggOps extends StreamRuntime {
       .orderBy(col("user_id"))
 
   /** Streaming hopping-window aggregation (1 h size / 30 min slide),
-    * Complete mode — equals the batch hopping query e03. */
+    * Complete mode — e03's transform over the watermarked stream. */
   def streamHopping(spark: SparkSession, sfDir: String): DataFrame =
     runToMemory(
-      eventsStream(spark, sfDir)
-        .withWatermark("ts", "10 minutes")
-        .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("w.start").as("w_start"), col("event_type"), col("n")),
+      Events.hoppingHourlyOf(
+        eventsStream(spark, sfDir).withWatermark("ts", WatermarkDelay)),
       "graft_s04", "complete")
       .orderBy(col("w_start"), col("event_type"))
 
@@ -153,7 +135,7 @@ trait StreamAggOps extends StreamRuntime {
     * equals input projection, proving pass-through + state plumbing). */
   def streamDedup(spark: SparkSession, sfDir: String): DataFrame =
     runToMemory(
-      dedupWithinWatermark(eventsStream(spark, sfDir), "10 minutes")
+      dedupWithinWatermark(eventsStream(spark, sfDir), WatermarkDelay)
         .select(col("event_id"), col("user_id"), col("ts"),
           col("event_type")),
       // dedup emits first-seen rows immediately; the no-data batch only
@@ -168,42 +150,23 @@ trait StreamAggOps extends StreamRuntime {
     * real session's close; sentinel rows are dropped AFTER the watermark
     * operator (ts-bound predicate) so they never pollute a session, and
     * the sentinels' own far-future sessions never close, so they never
-    * emit. Must equal the batch session_window query (e04 oracle). */
-  def streamSessionWindows(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.functions.Det.dsum
-    val ev = eventsStreamWithFlush(spark, sfDir)
-      .withWatermark("ts", "10 minutes")
-      .filter(col("ts") < flushBound)
+    * emit. e04's transform, checked against e04's oracle. */
+  def streamSessionWindows(spark: SparkSession, sfDir: String): DataFrame =
     runToMemory(
-      ev.groupBy(session_window(col("ts"), "2 hours").as("w"), col("user_id"))
-        .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("sum_value"))
-        .select(col("user_id"), col("w.start").as("s_start"),
-          col("w.end").as("s_end"), col("n_events"), col("sum_value")),
+      Events.sessionWindowsOf(closeFlushed(eventsStreamWithFlush(spark, sfDir))),
       "graft_s09", "append")
       .orderBy(col("user_id"), col("s_start"))
-  }
 
   /** s28: streaming DYNAMIC-GAP sessions — e33's per-event idle horizon
     * (error 5 min / purchase 30 min / else 2 h) under append-mode
     * Structured Streaming, same flush-sentinel watermark close as s09.
     * Verifies that gap-expression session merging behaves identically
     * when sessions are assembled incrementally in the state store. */
-  def streamDynamicSessions(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.functions.Det.dsum
-    val gap = when(col("event_type") === "error", "5 minutes")
-      .when(col("event_type") === "purchase", "30 minutes")
-      .otherwise("2 hours")
-    val ev = eventsStreamWithFlush(spark, sfDir)
-      .withWatermark("ts", "10 minutes")
-      .filter(col("ts") < flushBound)
+  def streamDynamicSessions(spark: SparkSession, sfDir: String): DataFrame =
     runToMemory(
-      ev.groupBy(session_window(col("ts"), gap).as("w"), col("user_id"))
-        .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("sum_value"))
-        .select(col("user_id"), col("w.start").as("s_start"),
-          col("w.end").as("s_end"), col("n_events"), col("sum_value")),
+      Events.dynamicSessionsOf(closeFlushed(eventsStreamWithFlush(spark, sfDir))),
       "graft_s28", "append")
       .orderBy(col("user_id"), col("s_start"))
-  }
 
   /** s32: sessionization by EVENT-TIME TIMERS — the third face of the
     * e04 session contract (s09 = engine `session_window`, s22 =
@@ -221,9 +184,7 @@ trait StreamAggOps extends StreamRuntime {
   def streamTimerSessions(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val gapUs = 2L * 3600L * 1000000L
-    val ev = eventsStreamWithFlush(spark, sfDir)
-      .withWatermark("ts", "10 minutes")
-      .filter(col("ts") < flushBound)
+    val ev = closeFlushed(eventsStreamWithFlush(spark, sfDir))
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 4))
           * 10000).cast("long").as("v4"))
@@ -282,9 +243,7 @@ trait StreamAggOps extends StreamRuntime {
     * shuffle carries only one row per pair — the same two-phase shape
     * an exact COUNT(DISTINCT) batch plan uses. */
   def streamDistinctUsers(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = eventsStreamWithFlush(spark, sfDir)
-      .withWatermark("ts", "10 minutes")
-      .filter(col("ts") < flushBound)
+    val ev = closeFlushed(eventsStreamWithFlush(spark, sfDir))
     val perUser = ev
       .groupBy(window(col("ts"), "1 day").as("w"), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
@@ -319,9 +278,7 @@ trait StreamAggOps extends StreamRuntime {
     * cost a per-window set store pays in any engine; the watermark
     * retires 1/7th of it per day. Stage 2 sees one row per pair. */
   def streamSlidingMau(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = eventsStreamWithFlush(spark, sfDir)
-      .withWatermark("ts", "10 minutes")
-      .filter(col("ts") < flushBound)
+    val ev = closeFlushed(eventsStreamWithFlush(spark, sfDir))
     val perUser = ev
       .groupBy(window(col("ts"), "7 days", "1 day").as("w"), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
@@ -354,9 +311,7 @@ trait StreamAggOps extends StreamRuntime {
     * exactly, so the result equals the unsalted daily aggregation —
     * which is what the oracle checks. */
   def streamSaltedAgg(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = eventsStreamWithFlush(spark, sfDir)
-      .withWatermark("ts", "10 minutes")
-      .filter(col("ts") < flushBound)
+    val ev = closeFlushed(eventsStreamWithFlush(spark, sfDir))
     val stage1 = ev
       .withColumn("salt", pmod(hash(col("event_id")), lit(8)))
       .groupBy(window(col("ts"), "1 day").as("w"),
@@ -399,7 +354,7 @@ trait StreamAggOps extends StreamRuntime {
     runToMemory(
       parsed.groupBy(col("bucket"))
         .agg(count(lit(1)).as("n"), sum(col("corrupt")).as("n_corrupt"),
-          graft.functions.Det.dsum(col("value")).as("sum_value")),
+          dsum(col("value")).as("sum_value")),
       "graft_s19", "complete")
       .orderBy(col("bucket"))
   }
@@ -428,7 +383,7 @@ trait StreamAggOps extends StreamRuntime {
     runToMemory(
       a.unionByName(b).groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
-          graft.functions.Det.dsum(col("value")).as("sum_value")),
+          dsum(col("value")).as("sum_value")),
       "graft_s20", "complete")
       .orderBy(col("event_type"))
   }
@@ -438,30 +393,12 @@ trait StreamAggOps extends StreamRuntime {
     * into one aggregation — a null-padding union feeding a single
     * stateful groupBy, so all branches share ONE state store and one
     * shuffle, exactly the shared-store update loop a Kafka Streams
-    * cogroup maintains. Complete mode emits the final per-user row;
-    * must equal the e19 batch oracle. */
-  def streamCogroup(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.api.GraftStreams
-    import graft.functions.Det.dsum
-    val ev = eventsStream(spark, sfDir)
-    def branch(tpe: String, cols: (String, org.apache.spark.sql.Column)*) =
-      GraftStreams.stream(
-        ev.filter(col("event_type") === tpe)
-          .select(col("user_id") +: cols.map { case (n, c) => c.as(n) }: _*),
-        "user_id", cols.head._1).groupByKey
-    runToMemory(
-      branch("view", "v_ts" -> col("ts"))
-        .cogroup(branch("click", "c_ts" -> col("ts")))
-        .cogroup(branch("purchase", "p_ts" -> col("ts"),
-          "p_value" -> col("value")))
-        .aggregate(
-          count(col("v_ts")).as("n_views"),
-          count(col("c_ts")).as("n_clicks"),
-          count(col("p_ts")).as("n_purchases"),
-          dsum(col("p_value")).as("purchase_value")),
+    * cogroup maintains. Complete mode emits the final per-user row:
+    * e19's transform, checked against e19's oracle. */
+  def streamCogroup(spark: SparkSession, sfDir: String): DataFrame =
+    runToMemory(Events.cogroupActivityOf(eventsStream(spark, sfDir)),
       "graft_s12", "complete")
       .orderBy(col("user_id"))
-  }
 
   /** s21: the composed end-to-end ingest topology in ONE streaming
     * query — type filter → windowed dedup → broadcast dim-enrich →
@@ -480,18 +417,14 @@ trait StreamAggOps extends StreamRuntime {
   def streamPipeline(spark: SparkSession, sfDir: String): DataFrame = {
     val dim = graft.Tables.nation(spark, sfDir)
       .select(col("n_nationkey").cast("long").as("nk"), col("n_name"))
-    val ev = eventsStreamWithFlush(spark, sfDir)
-      .withWatermark("ts", "10 minutes")
-      .filter(col("ts") < flushBound)
+    val ev = closeFlushed(eventsStreamWithFlush(spark, sfDir))
       .filter(col("event_type").isin("view", "click", "purchase"))
       .dropDuplicatesWithinWatermark("event_id")
       .withColumn("nk", col("user_id") % 25)
       .join(broadcast(dim), "nk")
     runToMemory(
       ev.groupBy(window(col("ts"), "1 day").as("w"), col("n_name"))
-        .agg(count(lit(1)).as("n_events"),
-          round(sum(col("value").cast("decimal(18,4)")).cast("double"), 2)
-            .as("sum_value"))
+        .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("sum_value"))
         .select(col("w.start").as("w_start"), col("n_name"),
           col("n_events"), col("sum_value")),
       "graft_s21", "append")
@@ -514,7 +447,7 @@ trait StreamAggOps extends StreamRuntime {
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"), col("props")).as[EventRow]
     runToMemory(
-      sessionize(ev, 2L * 3600 * 1000, "10 minutes").toDF(),
+      sessionize(ev, 2L * 3600 * 1000, WatermarkDelay).toDF(),
       "graft_s22", "append")
       .orderBy(col("user_id"), col("s_start"))
   }
@@ -546,12 +479,9 @@ trait StreamAggOps extends StreamRuntime {
       "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, " +
         "value DOUBLE, props STRING")
     runToMemory(
-      stream.withWatermark("ts", "10 minutes")
-        .filter(col("ts") < flushBound)
+      closeFlushed(stream)
         .groupBy(window(col("ts"), "1 day").as("w"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("value").cast("decimal(18,4)")).cast("double"), 2)
-            .as("sum_value"))
+        .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
         .select(col("w.start").as("w_start"), col("n"), col("sum_value")),
       "graft_s23", "append")
       .orderBy(col("w_start"))

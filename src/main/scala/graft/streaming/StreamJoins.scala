@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.Events
 
 /** The JOIN seam of [[StreamOps]]: stream-stream windowed joins
   * (inner/left/full/semi), stream-static enrichment (dim/range),
@@ -9,51 +10,33 @@ import org.apache.spark.sql.functions._
   * changelog join, and the streaming as-of join. */
 trait StreamJoinOps extends StreamRuntime {
 
-  /** The view→purchase join the s05/s06/s13/s27 variants share: `views`
-    * and `purchases` (already filtered and watermarked — where each
-    * variant applies its watermark is part of its semantics) projected
-    * to their join columns, then joined as `joinType` on the same user
-    * with purchase_ts in [view_ts, view_ts + Δ]. */
-  private def viewPurchase(views: DataFrame, purchases: DataFrame,
-      joinWindow: String, joinType: String): DataFrame =
-    views.select(col("event_id").as("view_id"), col("user_id"),
-        col("ts").as("view_ts"))
-      .join(purchases.select(col("event_id").as("purchase_id"),
-          col("user_id").as("p_user"), col("ts").as("purchase_ts"),
-          col("value").as("purchase_value")),
-        col("user_id") === col("p_user") &&
-          col("purchase_ts") >= col("view_ts") &&
-          col("purchase_ts") <= col("view_ts") + expr(s"INTERVAL $joinWindow"),
-        joinType)
-
   /** Views and purchases each watermarked AFTER its event-type filter —
-    * the inner and semi joins' sides. */
-  private def viewPurchaseFiltered(events: DataFrame, joinWindow: String,
+    * the inner and semi joins' sides, joined by e06's
+    * [[Events.viewPurchase]]. */
+  private def viewPurchaseFiltered(events: DataFrame,
       joinType: String): DataFrame = {
     def side(eventType: String) =
       events.filter(col("event_type") === eventType)
-        .withWatermark("ts", joinWindow)
-    viewPurchase(side("view"), side("purchase"), joinWindow, joinType)
+        .withWatermark("ts", Events.ViewPurchaseWindow)
+    Events.viewPurchase(side("view"), side("purchase"), joinType)
   }
 
-  /** Views and purchases filtered AFTER one shared watermark, so a
-    * flush row advances it before the filters drop it — the left and
-    * outer joins' sides. The `ts < flushBound` conjunct references the
-    * event-time column, so predicate pushdown cannot move it below the
-    * EventTimeWatermark operator (the event_type conjunct CAN be pushed
-    * to the scan — harmless, since sentinels exist per type). */
-  private def viewPurchaseFlushed(events: DataFrame, joinWindow: String,
-      watermark: String, joinType: String): DataFrame = {
-    val wm = events.withWatermark("ts", watermark)
-    def side(eventType: String) =
-      wm.filter(col("event_type") === eventType && col("ts") < flushBound)
-    viewPurchase(side("view"), side("purchase"), joinWindow, joinType)
+  /** Views and purchases filtered AFTER one shared flush-closed
+    * watermark ([[closeFlushed]]), so a flush row advances it before
+    * the filters drop it — the left and outer joins' sides. The
+    * event_type filter CAN be pushed to the scan — harmless, since
+    * sentinels exist per type. */
+  private def viewPurchaseFlushed(events: DataFrame,
+      joinType: String): DataFrame = {
+    val closed = closeFlushed(events)
+    def side(eventType: String) = closed.filter(col("event_type") === eventType)
+    Events.viewPurchase(side("view"), side("purchase"), joinType)
   }
 
   /** Windowed stream-stream inner join (KStream⋈KStream with
     * JoinWindows): purchase within [view_ts, view_ts + Δ]. */
-  def viewPurchaseJoin(events: DataFrame, joinWindow: String): DataFrame =
-    viewPurchaseFiltered(events, joinWindow, "inner")
+  def viewPurchaseJoin(events: DataFrame): DataFrame =
+    viewPurchaseFiltered(events, "inner")
       .select(col("view_id"), col("purchase_id"), col("user_id"),
         round(col("purchase_value"), 2).as("purchase_value"))
 
@@ -65,8 +48,8 @@ trait StreamJoinOps extends StreamRuntime {
     * are strictly smaller than the inner join's (s05). Matched rows
     * emit as soon as the match arrives — no watermark-close dependence
     * — while the watermark still bounds both sides' buffers. */
-  def viewPurchaseSemiJoin(events: DataFrame, joinWindow: String): DataFrame =
-    viewPurchaseFiltered(events, joinWindow, "left_semi")
+  def viewPurchaseSemiJoin(events: DataFrame): DataFrame =
+    viewPurchaseFiltered(events, "left_semi")
 
   /** s27: the semi join driven as a true stream against the EXISTS
     * oracle. Semi-join rows emit when the match arrives, never at
@@ -74,7 +57,7 @@ trait StreamJoinOps extends StreamRuntime {
     * cleanup — skip it. */
   def streamViewPurchaseSemi(spark: SparkSession, sfDir: String): DataFrame =
     runToMemory(
-      viewPurchaseSemiJoin(eventsStream(spark, sfDir), "60 minutes"),
+      viewPurchaseSemiJoin(eventsStream(spark, sfDir)),
       "graft_s27", "append", noDataBatch = false)
       .orderBy(col("view_id"))
 
@@ -85,9 +68,8 @@ trait StreamJoinOps extends StreamRuntime {
     * purchase can still arrive. The watermark is applied BEFORE the
     * event-type filters so a flush/heartbeat row can advance it (see
     * [[eventsStreamWithFlush]]). */
-  def viewPurchaseLeftJoin(events: DataFrame, joinWindow: String,
-      watermark: String): DataFrame =
-    viewPurchaseFlushed(events, joinWindow, watermark, "left_outer")
+  def viewPurchaseLeftJoin(events: DataFrame): DataFrame =
+    viewPurchaseFlushed(events, "left_outer")
       .select(col("view_id"), col("purchase_id"), col("user_id"),
         round(col("purchase_value"), 2).as("purchase_value"))
 
@@ -98,9 +80,8 @@ trait StreamJoinOps extends StreamRuntime {
     * machinery as the left join; state on BOTH sides is evicted by the
     * watermark, so state size is bounded by rows within the join window
     * regardless of stream length. */
-  def viewPurchaseOuterJoin(events: DataFrame, joinWindow: String,
-      watermark: String): DataFrame =
-    viewPurchaseFlushed(events, joinWindow, watermark, "full_outer")
+  def viewPurchaseOuterJoin(events: DataFrame): DataFrame =
+    viewPurchaseFlushed(events, "full_outer")
       .select(col("view_id"), col("purchase_id"),
         coalesce(col("user_id"), col("p_user")).as("user_id"),
         round(col("purchase_value"), 2).as("purchase_value"))
@@ -139,7 +120,7 @@ trait StreamJoinOps extends StreamRuntime {
     * emit matches as they arrive) — equals the batch interval join e06. */
   def streamViewPurchase(spark: SparkSession, sfDir: String): DataFrame =
     runToMemory(
-      viewPurchaseJoin(eventsStream(spark, sfDir), "60 minutes"),
+      viewPurchaseJoin(eventsStream(spark, sfDir)),
       // inner joins emit matches as they arrive; no watermark-close
       // output → the trailing no-data batch is skippable overhead
       "graft_s05", "append", noDataBatch = false)
@@ -165,8 +146,7 @@ trait StreamJoinOps extends StreamRuntime {
     * query. Ordered with nulls first to match the oracle's NULLS FIRST. */
   def streamViewPurchaseLeft(spark: SparkSession, sfDir: String): DataFrame =
     runToMemory(
-      viewPurchaseLeftJoin(eventsStreamWithFlush(spark, sfDir),
-        "60 minutes", "10 minutes"),
+      viewPurchaseLeftJoin(eventsStreamWithFlush(spark, sfDir)),
       "graft_s06", "append")
       .orderBy(col("view_id").asc, col("purchase_id").asc_nulls_first)
 
@@ -175,8 +155,7 @@ trait StreamJoinOps extends StreamRuntime {
     * FULL JOIN interval query. */
   def streamViewPurchaseOuter(spark: SparkSession, sfDir: String): DataFrame =
     runToMemory(
-      viewPurchaseOuterJoin(eventsStreamWithFlush(spark, sfDir),
-        "60 minutes", "10 minutes"),
+      viewPurchaseOuterJoin(eventsStreamWithFlush(spark, sfDir)),
       "graft_s13", "append")
       .orderBy(col("view_id").asc_nulls_first, col("purchase_id").asc_nulls_first)
 

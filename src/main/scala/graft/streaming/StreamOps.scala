@@ -86,23 +86,26 @@ object StreamOps
     "s39_stream_cdc"        -> streamCdcDiff _,
   )
 
-  private[graft] val tumblingOracle =
-    """SELECT make_timestamp((epoch_us(ts) // 86400000000) * 86400000000) AS w_start,
-      |event_type, count(*) AS n,
-      |round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 2) AS sum_value
-      |FROM events GROUP BY 1, 2 ORDER BY w_start, event_type""".stripMargin
+  private val E = graft.operators.Events
+  private val D = graft.functions.Det.sql
+
+  /** s35's per-type count + decimal sum, which s41 declares too. */
+  private val foreachCountsOracle =
+    s"""SELECT event_type, count(*) AS n,
+       |${D.dsum("value", "sum_value")}
+       |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin
 
   val oracles: Map[String, String] = Map(
     // the e44 batch oracle verbatim: incremental funnel assembly across
     // the three time-partitioned batches must equal the whole-month
     // window-chain result
     "s36_stream_funnel" ->
-      graft.operators.Events.oracles("e44_funnel_stages"),
+      E.oracles("e44_funnel_stages"),
     // the e47 batch oracle verbatim: incremental latest-click state
     // across the three time-partitioned batches must equal the
     // whole-month LOCF window
     "s37_stream_attribution" ->
-      graft.operators.Events.oracles("e47_attribution"),
+      E.oracles("e47_attribution"),
     // the d49 oracle minus the removed row — arrival-side CDC cannot
     // see keys that never re-appear; split-rule literals interpolate
     // from the same Scala constants as the batch oracle
@@ -150,19 +153,11 @@ object StreamOps
         |GROUP BY 1, 2 ORDER BY w_start, event_type""".stripMargin,
     // the side-effect store must reconstruct the full per-type
     // aggregate: counts + the Det.dsum decimal-sum contract
-    "s35_foreach_counts" ->
-      """SELECT event_type, count(*) AS n,
-        |round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 2)
-        |  AS sum_value
-        |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin,
+    "s35_foreach_counts" -> foreachCountsOracle,
     // s35's contract under a FORCED duplicate batch delivery: the
     // batchId-idempotent store must absorb the replay, so the rebuilt
     // aggregate still equals the whole-table truth
-    "s41_foreach_exactly_once" ->
-      """SELECT event_type, count(*) AS n,
-        |round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 2)
-        |  AS sum_value
-        |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin,
+    "s41_foreach_exactly_once" -> foreachCountsOracle,
     // shares v07's index-definition CTE text + cosine fragment; the
     // centroid round(c, 6) is the v09 Lloyd determinism contract
     "s34_stream_ivf_assign" -> {
@@ -181,11 +176,11 @@ object StreamOps
     // the e39 batch oracle verbatim: streaming incremental assembly of
     // the trailing-20 window must reproduce the batch window sort
     "s30_stream_anomaly" ->
-      graft.operators.Events.oracles("e39_rolling_anomaly"),
+      E.oracles("e39_rolling_anomaly"),
     // the e04 batch oracle verbatim: timer-closed sessions must equal
     // the retrospective gaps-and-islands result (s09/s22's contract)
     "s32_timer_sessions" ->
-      graft.operators.Events.oracles("e04_session_windows"),
+      E.oracles("e04_session_windows"),
     // fixed-baseline CUSUM via the same prefix-sum identity as e41's
     // oracle, restricted to the monitor window; c goes HUGEINT mid-CTE,
     // the output is r4's DOUBLE (the d29/d30 lesson)
@@ -227,7 +222,7 @@ object StreamOps
         |FROM tf GROUP BY term ORDER BY df DESC, term LIMIT 50""".stripMargin,
     // e33's oracle text verbatim: streaming assembly must equal batch
     "s28_stream_dyn_sessions" ->
-      graft.operators.Events.oracles("e33_dynamic_sessions"),
+      E.oracles("e33_dynamic_sessions"),
     // streaming EXISTS: views with at least one purchase in-window
     "s27_stream_semi_join" ->
       """SELECT v.event_id AS view_id, v.user_id, v.ts AS view_ts
@@ -335,10 +330,9 @@ object StreamOps
         |  FROM events) t
         |WHERE rank <= 5 ORDER BY event_type, rank""".stripMargin,
     "s17_stream_salted_agg" ->
-      """SELECT make_timestamp((epoch_us(ts) // 86400000000) * 86400000000) AS w_start,
-        |event_type, count(*) AS n_events,
-        |round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 2) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY w_start, event_type""".stripMargin,
+      s"""SELECT make_timestamp((epoch_us(ts) // 86400000000) * 86400000000) AS w_start,
+         |event_type, count(*) AS n_events, ${D.dsum("value", "sum_value")}
+         |FROM events GROUP BY 1, 2 ORDER BY w_start, event_type""".stripMargin,
     "s16_stream_range_join" ->
       """WITH promos AS (SELECT p AS promo_id,
         |  TIMESTAMP '2024-01-01 06:00:00' + (p*3) * INTERVAL 1 DAY AS p_start,
@@ -354,21 +348,12 @@ object StreamOps
       """SELECT make_timestamp((epoch_us(ts) // 86400000000) * 86400000000) AS w_start,
         |count(DISTINCT user_id) AS n_users, count(*) AS n_events
         |FROM events GROUP BY 1 ORDER BY w_start""".stripMargin,
-    "s12_stream_cogroup" ->
-      """SELECT user_id,
-        |count(*) FILTER (WHERE event_type = 'view') AS n_views,
-        |count(*) FILTER (WHERE event_type = 'click') AS n_clicks,
-        |count(*) FILTER (WHERE event_type = 'purchase') AS n_purchases,
-        |round(CAST(sum(CAST(value AS DECIMAL(18,4)))
-        |  FILTER (WHERE event_type = 'purchase') AS DOUBLE), 2) AS purchase_value
-        |FROM events WHERE event_type IN ('view', 'click', 'purchase')
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
+    "s12_stream_cogroup" -> E.oracles("e19_cogroup"),
     "s23_bounded_trigger" ->
-      """SELECT make_timestamp((epoch_us(ts) // 86400000000) * 86400000000)
-        |  AS w_start, count(*) AS n,
-        |round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 2)
-        |  AS sum_value
-        |FROM events GROUP BY 1 ORDER BY w_start""".stripMargin,
+      s"""SELECT make_timestamp((epoch_us(ts) // 86400000000) * 86400000000)
+         |  AS w_start, count(*) AS n,
+         |${D.dsum("value", "sum_value")}
+         |FROM events GROUP BY 1 ORDER BY w_start""".stripMargin,
     // e04's gaps-and-islands session SQL minus the value sum (the
     // custom state machine tracks (start, end, count) per session)
     "s22_fmgws_sessions" ->
@@ -390,29 +375,24 @@ object StreamOps
     // the chained state store; the oracle is the batch equivalent of
     // the whole filter→enrich→window chain
     "s21_stream_pipeline" ->
-      """SELECT make_timestamp((epoch_us(ts) // 86400000000) * 86400000000)
-        |  AS w_start, n_name, count(*) AS n_events,
-        |round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 2)
-        |  AS sum_value
-        |FROM events JOIN nation ON user_id % 25 = n_nationkey
-        |WHERE event_type IN ('view', 'click', 'purchase')
-        |GROUP BY 1, 2 ORDER BY w_start, n_name""".stripMargin,
-    "s01_stream_tumbling" -> tumblingOracle,
+      s"""SELECT make_timestamp((epoch_us(ts) // 86400000000) * 86400000000)
+         |  AS w_start, n_name, count(*) AS n_events,
+         |${D.dsum("value", "sum_value")}
+         |FROM events JOIN nation ON user_id % 25 = n_nationkey
+         |WHERE event_type IN ('view', 'click', 'purchase')
+         |GROUP BY 1, 2 ORDER BY w_start, n_name""".stripMargin,
+    "s01_stream_tumbling" -> E.oracles("e02_tumbling_daily"),
     // the same tumbling contract, but the execution provably crosses a
     // checkpoint restart: run 1 consumes a time-ordered prefix and
     // terminates, run 2 restarts from the checkpoint and finishes; the
     // mid-day batch cuts make the recovered window state load-bearing
-    "s40_restart_recovery" -> tumblingOracle,
+    "s40_restart_recovery" -> E.oracles("e02_tumbling_daily"),
     // the same tumbling contract, but the result ARRIVES through a real
     // file sink (writeStream.format("parquet")) and is read back from
     // the sink's output files — the to(topic)/sink row of §2 under the
     // hash gate, not just a spec
-    "s33_sink_roundtrip" -> tumblingOracle,
-    "s02_stream_latest" ->
-      """SELECT user_id, event_id, ts, event_type, round(value, 2) AS value
-        |FROM (SELECT *, row_number() OVER (PARTITION BY user_id
-        |  ORDER BY ts DESC, event_id DESC) AS rn FROM events) t
-        |WHERE rn = 1 ORDER BY user_id""".stripMargin,
+    "s33_sink_roundtrip" -> E.oracles("e02_tumbling_daily"),
+    "s02_stream_latest" -> E.oracles("e05_latest_by_key"),
     // the same latest-by-key truth, but the rows come from an
     // OUT-OF-BAND read of the terminated query's RocksDB store via the
     // state data source (Interactive Queries): a stale or lossy store
@@ -474,20 +454,8 @@ object StreamOps
     "s03_stream_dedup" ->
       """SELECT event_id, user_id, ts, event_type
         |FROM events ORDER BY event_id""".stripMargin,
-    "s04_stream_hopping" ->
-      """WITH hopped AS (
-        |  SELECT make_timestamp(((epoch_us(ts) // (1800*1000000)) - k) * 1800*1000000) AS w_start,
-        |    event_type
-        |  FROM events CROSS JOIN (SELECT unnest([0, 1]) AS k))
-        |SELECT w_start, event_type, count(*) AS n
-        |FROM hopped GROUP BY 1, 2 ORDER BY w_start, event_type""".stripMargin,
-    "s05_stream_join" ->
-      """SELECT v.event_id AS view_id, p.event_id AS purchase_id, v.user_id,
-        |round(p.value, 2) AS purchase_value
-        |FROM events v JOIN events p ON v.user_id = p.user_id
-        |WHERE v.event_type = 'view' AND p.event_type = 'purchase'
-        |AND p.ts >= v.ts AND p.ts <= v.ts + INTERVAL 60 MINUTE
-        |ORDER BY view_id, purchase_id""".stripMargin,
+    "s04_stream_hopping" -> E.oracles("e03_hopping_hourly"),
+    "s05_stream_join" -> E.oracles("e06_view_to_purchase"),
     "s06_stream_left_join" ->
       """SELECT v.event_id AS view_id, p.event_id AS purchase_id, v.user_id,
         |round(p.value, 2) AS purchase_value
@@ -531,22 +499,7 @@ object StreamOps
       """SELECT event_id, user_id, n_name, round(value, 2) AS value
         |FROM events JOIN nation ON user_id % 25 = n_nationkey
         |ORDER BY event_id""".stripMargin,
-    "s09_stream_sessions" ->
-      """WITH flagged AS (
-        |  SELECT user_id, ts, value,
-        |    CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |      >= INTERVAL 2 HOUR THEN 1 ELSE 0 END AS new_s
-        |  FROM events),
-        |sessions AS (
-        |  SELECT user_id, ts, value,
-        |    sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM flagged)
-        |SELECT user_id, min(ts) AS s_start, max(ts) + INTERVAL 2 HOUR AS s_end,
-        |  count(*) AS n_events,
-        |  round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 2) AS sum_value
-        |FROM sessions GROUP BY user_id, sid
-        |ORDER BY user_id, s_start""".stripMargin,
+    "s09_stream_sessions" -> E.oracles("e04_session_windows"),
     "s10_fk_changelog_stream" ->
       """SELECT c_custkey AS left_key, CAST(c_nationkey AS BIGINT) AS fk,
         |c_name AS left_val,

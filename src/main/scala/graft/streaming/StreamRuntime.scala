@@ -32,6 +32,20 @@ trait StreamRuntime {
     * sentinels sit at 2100-01-01). */
   private[streaming] val flushBound = to_timestamp(lit("2099-01-01 00:00:00"))
 
+  /** The event-time watermark delay of the events streams. */
+  private[graft] val WatermarkDelay = "10 minutes"
+
+  /** `stream` watermarked on `ts` by [[WatermarkDelay]], with the flush
+    * sentinels dropped — the one way a flushed stream
+    * ([[eventsStreamWithFlush]], or a changelog replay whose last file
+    * is a sentinel) is closed. The call order is the invariant: the
+    * sentinel filter sits ABOVE the watermark operator, so the
+    * sentinels still advance the watermark past every real window
+    * before they are dropped; the ts-bound predicate references the
+    * watermark column, so Catalyst cannot push it below that operator. */
+  private[graft] def closeFlushed(stream: DataFrame): DataFrame =
+    stream.withWatermark("ts", WatermarkDelay).filter(col("ts") < flushBound)
+
   /** The JSON serde half of the Kafka source: wire rows (binary `value`
     * as the connector emits them) → typed event columns. Factored out
     * of [[kafkaStream]] so it is testable WITHOUT a broker — the same
@@ -149,8 +163,8 @@ trait StreamRuntime {
     * emission for the tail of the data would stay locked in the state
     * store; the flush row advances the watermark past every real
     * window. It must pass through the `withWatermark` operator (which
-    * tracks max event time) and be filtered AFTER it — which is how the
-    * consumers below are structured. In production this is the role of
+    * tracks max event time) and be filtered AFTER it — which is what
+    * [[closeFlushed]] does. In production this is the role of
     * periodic broker heartbeats / idle-source timeouts. */
   def eventsStreamWithFlush(spark: SparkSession, sfDir: String): DataFrame = {
     val (raw, path) = graft.Tables.rawEvents(spark, sfDir)

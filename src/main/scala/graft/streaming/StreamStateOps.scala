@@ -250,21 +250,14 @@ trait StreamStateOps extends StreamRuntime {
       .orderBy($"user_id")
   }
 
-  /** The s40 tumbling aggregation, shared by both query runs — restart
-    * recovery requires the restarted query to be the SAME plan, so the
-    * construction is factored to a single site. */
+  /** The s40 plan, shared by both query runs — restart recovery
+    * requires the restarted query to be the SAME plan, so the
+    * construction is factored to a single site: e02's tumbling
+    * transform over the flush-closed changelog replay. */
   private[graft] def restartAggStream(spark: SparkSession,
-      in: java.nio.file.Path): DataFrame = {
-    import graft.functions.Det.dsum
-    changelogStream(spark, in.toString,
-        "ts TIMESTAMP, event_type STRING, value DOUBLE")
-      .withWatermark("ts", "10 minutes")
-      .filter(col("ts") < flushBound)
-      .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-      .select(col("w.start").as("w_start"), col("event_type"),
-        col("n"), col("sum_value"))
-  }
+      in: java.nio.file.Path): DataFrame =
+    graft.operators.Events.tumblingDailyOf(closeFlushed(changelogStream(
+      spark, in.toString, "ts TIMESTAMP, event_type STRING, value DOUBLE")))
 
   /** One AvailableNow run of the s40 query against checkpoint `ck` and
     * file sink `out`; returns the terminal batchId (−1 if no batch ran).

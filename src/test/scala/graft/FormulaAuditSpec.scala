@@ -41,7 +41,8 @@ object FormulaAudit {
     graft.operators.Extras.sharedOracleFragments ++
       graft.operators.TextOps.sharedOracleFragments ++
       graft.operators.VectorOps.sharedOracleFragments ++ Map(
-        "tumbling-daily" -> graft.streaming.StreamOps.tumblingOracle,
+        "tumbling-daily" ->
+          graft.operators.Events.oracles("e02_tumbling_daily"),
         "funnel-stages" ->
           graft.operators.Events.oracles("e44_funnel_stages"),
         "attribution" ->

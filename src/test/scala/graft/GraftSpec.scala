@@ -2512,7 +2512,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     val batch = graft.operators.Events.viewToPurchase(spark, sf)
     val streamed = StreamOps.runToMemory(
-      StreamOps.viewPurchaseJoin(StreamOps.eventsStream(spark, sf), "60 minutes"),
+      StreamOps.viewPurchaseJoin(StreamOps.eventsStream(spark, sf)),
       "stream_vp", "append")
     assert(streamed.exceptAll(batch).count() == 0)
     assert(batch.exceptAll(streamed).count() == 0)
@@ -2536,8 +2536,7 @@ class StreamingSpec extends AnyFunSuite {
     // equal the batch LEFT JOIN exactly — proving null rows are emitted
     // by watermark close, not eagerly at match time.
     val noFlush = StreamOps.runToMemory(
-      StreamOps.viewPurchaseLeftJoin(
-        StreamOps.eventsStream(spark, sf), "60 minutes", "10 minutes"),
+      StreamOps.viewPurchaseLeftJoin(StreamOps.eventsStream(spark, sf)),
       "stream_vpl_nf", "append")
     val withFlush = StreamOps.streamViewPurchaseLeft(spark, sf)
     val ev = Tables.events(spark, sf)

@@ -7,7 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * state store or caches a scratch dir, it picks each run's state store
   * from the plan, and its [[withConf]] leaves the session conf exactly
   * as it found it. Inside those runs, [[graft.streaming.ValueFold]] is
-  * the one place a single-ValueState processor's state plumbing lives. */
+  * the one place a single-ValueState processor's state plumbing lives.
+  * A stream face that twins a batch e-query runs that query's `Events`
+  * transform and declares its oracle, and `closeFlushed` is the one
+  * place a flushed stream is closed. */
 class StreamRuntimeSpec extends AnyFunSuite {
   import graft.streaming.StreamOps
   lazy val spark = TestSession.spark
@@ -102,6 +105,42 @@ class StreamRuntimeSpec extends AnyFunSuite {
     }
     assert(e.getMessage == "body failed")
     assertRestored()
+  }
+
+  test("each batch/stream twin declares one oracle: the stream face's entry is the e-query's own text") {
+    val e = graft.operators.Events.oracles
+    val s = StreamOps.oracles
+    Seq(
+      "s01_stream_tumbling" -> e("e02_tumbling_daily"),
+      "s33_sink_roundtrip" -> e("e02_tumbling_daily"),
+      "s40_restart_recovery" -> e("e02_tumbling_daily"),
+      "s04_stream_hopping" -> e("e03_hopping_hourly"),
+      "s09_stream_sessions" -> e("e04_session_windows"),
+      "s32_timer_sessions" -> e("e04_session_windows"),
+      "s02_stream_latest" -> e("e05_latest_by_key"),
+      "s05_stream_join" -> e("e06_view_to_purchase"),
+      "s12_stream_cogroup" -> e("e19_cogroup"),
+      "s28_stream_dyn_sessions" -> e("e33_dynamic_sessions"),
+      "s41_foreach_exactly_once" -> s("s35_foreach_counts")
+    ).foreach { case (q, oracle) =>
+      assert(s(q) eq oracle, s"$q carries a copy of its twin's oracle")
+    }
+  }
+
+  test("one transform per twin, and one place closes a flushed stream") {
+    Seq("def tumblingAgg", "tumblingOracle").foreach { gone =>
+      assert(MainSources.containing(gone).isEmpty, s"$gone is back")
+    }
+    assert(MainSources.containing("< flushBound") ==
+      Seq("graft/streaming/StreamRuntime.scala"))
+    // the e-queries' window, session, join-window and cogroup spellings
+    Seq("session_window(", ".cogroup(", "\"30 minutes\"", "\"60 minutes\"",
+      "window(col(\"ts\"), \"1 day\").as(\"w\"), col(\"event_type\")")
+      .foreach { needle =>
+        val hits = MainSources.containing(needle)
+          .filter(_.startsWith("graft/streaming/"))
+        assert(hits.isEmpty, s"$needle rebuilt in $hits")
+      }
   }
 
   test("runAvailableNow enforces s38's terminal-batchId pin") {
